@@ -67,9 +67,9 @@ _DF_CACHE_MAX = 256
 # clone commits. Two snapshots sharing a (file_id, size) entry hold the
 # SAME immutable committed file (every write path commits new files via the
 # two-phase swap; nothing mutates a committed file in place), so its rows
-# can be pruned from both sides of a snapshot diff — the object-storage-
-# portable replacement for (st_dev, st_ino) hard-link identity, which does
-# not exist on S3/GCS/ABFS where a 100 TB deployment lives.
+# can be pruned from both sides of a snapshot diff — evidence that, unlike
+# inode identity, also exists on S3/GCS/ABFS where a 100 TB deployment
+# lives.
 MANIFEST_NAME = "_manifest.json"
 SNAPSHOT_PROPS_NAME = "_snapshot_props.json"
 
@@ -82,40 +82,28 @@ SNAPSHOT_PROPS_NAME = "_snapshot_props.json"
 # otherwise pay a pruned-but-nonzero diff on.
 DATA_CHANGE_PROP = "data_change"
 
-SNAPSHOT_IDENTITY_MODES = ("auto", "manifest", "inode")
+# Entries per chunk manifest (tests shrink it to exercise multi-chunk
+# layouts at small file counts).
+MANIFEST_CHUNK = 4096
+# File count at which per-file stats and footer reads fan out to executors.
+DIST_LIST_THRESHOLD = 100_000
+# Sidecar row count at which a key-index probe decodes on executors.
+INDEX_SPARK_THRESHOLD = 262_144
 
 
 class Catalog:
     """A named-table namespace over a directory of Parquet datasets.
 
-    ``snapshot_identity`` picks how shared-file pruning (``table_changes``
-    and friends) proves two snapshot files identical:
-
-    - ``auto`` (default): manifest identity when both snapshots carry a
-      manifest, hard-link inode identity otherwise (pre-manifest tables).
-    - ``manifest``: manifest-only — never consults inodes; snapshots
-      without manifests are diffed unpruned (correct, just unoptimized).
-      This is the object-storage posture: on S3/GCS there are no inodes.
-    - ``inode``: legacy hard-link identity only (POSIX filesystems).
-
-    Defaults from ``$AGOL_SPARK_SNAPSHOT_IDENTITY`` when unset, so a full
-    workload sweep can be flipped to manifest-only without code changes.
+    Shared-file pruning (``table_changes`` and friends) proves two
+    snapshot files identical by manifest ``(file_id, size)`` identity
+    only — the evidence that also exists on object storage, which has no
+    inodes. Snapshots without a (format-2) manifest diff unpruned:
+    correct, just unoptimized.
     """
 
-    def __init__(
-        self, spark: SparkSession, root: str,
-        snapshot_identity: str | None = None,
-    ):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.snapshot_identity = snapshot_identity or os.environ.get(
-            "AGOL_SPARK_SNAPSHOT_IDENTITY", "auto"
-        )
-        if self.snapshot_identity not in SNAPSHOT_IDENTITY_MODES:
-            raise ValueError(
-                f"snapshot_identity must be one of {SNAPSHOT_IDENTITY_MODES},"
-                f" got {self.snapshot_identity!r}"
-            )
         self._ns_cols: dict[str, list[str]] = {}
         # diagnostics of the LAST shared-file diff this catalog ran:
         # {"mode": "chunk"|"full", "chunks_total", "chunks_parsed"} —
@@ -320,9 +308,25 @@ class Catalog:
         os.makedirs(self.root, exist_ok=True)
         tmp = f"{target}.__tmp_{uuid.uuid4().hex}"
         papq.write_table(table, tmp)
-        if os.path.isdir(target):  # replace a directory-shaped predecessor
-            shutil.rmtree(target)
-        os.replace(tmp, target)
+        # a directory-shaped predecessor cannot be os.replace'd by a file:
+        # move it aside first and restore it if the swap fails (the same
+        # rollback discipline as _swap_in)
+        backup = (
+            f"{target}.__old_{uuid.uuid4().hex}"
+            if os.path.isdir(target) else None
+        )
+        try:
+            if backup:
+                os.rename(target, backup)
+            os.replace(tmp, target)
+        except Exception:
+            if backup and os.path.exists(backup):
+                os.rename(backup, target)
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
+        if backup:
+            shutil.rmtree(backup, ignore_errors=True)
         self._ns_cols.pop(target, None)
         return target
 
@@ -372,32 +376,19 @@ class Catalog:
 
     # -- snapshot manifests (object-storage-portable file identity) ---------
     #
-    # Two on-disk formats, one reader:
-    #
-    # * format 1 (legacy, pre-r9): ``_manifest.json`` = {"files": {...}} —
-    #   ONE monolithic JSON naming every data file, rewritten in full on
-    #   every commit. Fine to O(10^4) files; at the O(10^5-10^6) files a
-    #   real 100 TB table carries, an O(total) driver-side rewrite per
-    #   commit is the metadata bottleneck (the data-file work is already
-    #   O(changed files) via carryover).
-    # * format 2 (r9+): ``_manifest.json`` = a MANIFEST LIST
-    #   {"format": 2, "manifests": [{"name", "count"}, ...]} pointing at
-    #   CHUNK manifests ``_manifest-<id>.json`` ({"files": {...}},
-    #   <= _manifest_chunk_size() entries each, relpath-sorted). Chunks
-    #   are immutable once written; a commit that carries a chunk's whole
-    #   entry set forward unchanged REUSES the chunk by hard link (O(1))
-    #   and writes fresh chunks only for new/changed entries — the
-    #   Iceberg manifest-list shape, making manifest bytes written per
-    #   commit O(delta + dirty chunks), not O(table).
+    # ``_manifest.json`` is a MANIFEST LIST
+    # {"format": 2, "manifests": [{"name", "count"}, ...]} pointing at
+    # CHUNK manifests ``_manifest-<id>.json`` ({"files": {...}},
+    # <= MANIFEST_CHUNK entries each, relpath-sorted). Chunks are
+    # immutable once written; a commit that carries a chunk's whole entry
+    # set forward unchanged REUSES the chunk by hard link (O(1)) and
+    # writes fresh chunks only for new/changed entries — the Iceberg
+    # manifest-list shape, making manifest bytes written per commit
+    # O(delta + dirty chunks), not O(table). Any other ``_manifest.json``
+    # (the pre-list single-file format included) reads as no manifest.
     #
     # All manifest files are "_"-prefixed siblings of the data, so every
     # data-file walk/listdir filter in this module excludes them for free.
-
-    @staticmethod
-    def _manifest_chunk_size() -> int:
-        """Entries per chunk manifest (env-tunable so tests can exercise
-        multi-chunk layouts at small file counts)."""
-        return max(1, int(os.environ.get("AGOL_SPARK_MANIFEST_CHUNK", "4096")))
 
     @staticmethod
     def _list_names(path: str) -> list[str]:
@@ -427,16 +418,13 @@ class Catalog:
         Listing (name discovery) is a driver-side ``scandir`` stream —
         one getdents pass, no per-file stat (``is_dir`` rides d_type).
         The per-file ``stat`` fan-outs to EXECUTORS above
-        ``AGOL_SPARK_DIST_LIST_THRESHOLD`` files (default 100k): on
+        ``DIST_LIST_THRESHOLD`` files (100k): on
         object storage each stat is a round-trip, and 10^6 serial
         driver-side round-trips per commit is exactly the bottleneck the
         manifest list exists to remove. Below the threshold the driver
         loop wins (task overhead > syscall cost on a local FS)."""
         names = self._list_names(path)
-        threshold = int(
-            os.environ.get("AGOL_SPARK_DIST_LIST_THRESHOLD", "100000")
-        )
-        if len(names) >= threshold and self.spark is not None:
+        if len(names) >= DIST_LIST_THRESHOLD and self.spark is not None:
             sc = self.spark.sparkContext
             chunks = [
                 names[i : i + 4096] for i in range(0, len(names), 4096)
@@ -470,16 +458,12 @@ class Catalog:
     ) -> tuple[dict[str, dict], list[tuple[str, dict]] | None]:
         """(merged manifest, chunk list) reading the snapshot's manifest
         layout ONCE — the commit paths need both (carried ids + chunk
-        reuse) and must not parse O(table) JSON twice per commit. The
-        chunk list is None for legacy format-1 / unmanifested snapshots
-        (nothing reusable)."""
+        reuse) and must not parse O(table) JSON twice per commit.
+        ``({}, None)`` for unmanifested / torn snapshots."""
         chunks = self._manifest_chunks(path)
-        if chunks is not None:
-            merged: dict[str, dict] = {}
-            for _, part in chunks:
-                merged.update(part)
-            return merged, chunks
-        return self.snapshot_manifest(path) or {}, None
+        if chunks is None:
+            return {}, None
+        return _merge_chunks(chunks), chunks
 
     def _write_manifest(
         self,
@@ -543,10 +527,9 @@ class Catalog:
                 )
                 for rp in chunk_entries:
                     del remaining[rp]
-        chunk_size = self._manifest_chunk_size()
         ordered = sorted(remaining.items())
-        for i in range(0, len(ordered), chunk_size):
-            part = dict(ordered[i : i + chunk_size])
+        for i in range(0, len(ordered), MANIFEST_CHUNK):
+            part = dict(ordered[i : i + MANIFEST_CHUNK])
             base = f"_manifest-{uuid.uuid4().hex}.json"
             with open(os.path.join(staged, base), "w") as fh:
                 json.dump({"files": part}, fh, sort_keys=True)
@@ -566,8 +549,7 @@ class Catalog:
     ) -> list[tuple[str, dict[str, dict]]] | None:
         """``(absolute chunk path, entries)`` per chunk manifest of a
         format-2 snapshot — the unit of commit-to-commit reuse. None for
-        legacy format-1 / unmanifested snapshots (nothing reusable: a
-        monolithic manifest is rewritten, upgrading it to format 2)."""
+        unmanifested / torn snapshots (nothing reusable)."""
         if not os.path.isdir(path):
             return None
         try:
@@ -588,29 +570,13 @@ class Catalog:
         return out
 
     def snapshot_manifest(self, path: str) -> dict[str, dict] | None:
-        """The snapshot's manifest (relpath → {file_id, size}), or None
-        for single-file tables / snapshots committed before manifests.
-        Reads both formats: legacy monolithic and the r9 manifest list
-        (chunks merged). A torn format-2 layout (list without a chunk)
-        reads as None — callers fall back to unpruned reads, which costs
-        performance but never rows."""
-        if not os.path.isdir(path):
-            return None
-        try:
-            with open(os.path.join(path, MANIFEST_NAME)) as fh:
-                head = json.load(fh)
-        except (OSError, ValueError):
-            return None
-        if "files" in head:  # format 1 (legacy monolith)
-            files = head["files"]
-            return files if isinstance(files, dict) else None
+        """The snapshot's manifest (relpath → {file_id, size}, chunks
+        merged), or None for single-file tables and snapshots without a
+        format-2 manifest list. A torn layout (list without a chunk)
+        reads as None too — callers fall back to unpruned reads, which
+        costs performance but never rows."""
         chunks = self._manifest_chunks(path)
-        if chunks is None:
-            return None
-        merged: dict[str, dict] = {}
-        for _, part in chunks:
-            merged.update(part)
-        return merged
+        return None if chunks is None else _merge_chunks(chunks)
 
     def _manifest_identities(
         self, path: str
@@ -636,7 +602,8 @@ class Catalog:
         """The raw format-2 manifest-list entries (``{"name", "count"}``
         per chunk — counts let the diff verify that a snapshot's
         unknown-file population is fully accounted by its shared chunks
-        without parsing them). None for legacy/unmanifested/torn."""
+        without parsing them). None for unmanifested/torn snapshots and
+        for a list entry missing its name or count."""
         if not os.path.isdir(path):
             return None
         try:
@@ -645,7 +612,7 @@ class Catalog:
             if head.get("format") != 2:
                 return None
             out = list(head["manifests"])
-            if any("name" not in m for m in out):
+            if any("name" not in m or "count" not in m for m in out):
                 return None
             return out
         except (OSError, KeyError, TypeError, ValueError):
@@ -709,7 +676,8 @@ class Catalog:
 
         Records ``self.last_diff_stats`` (chunks_total/chunks_parsed/
         mode) so scale tests can pin the O(dirty chunks) claim. Returns
-        None when either side lacks a clean format-2 layout.
+        None when either side lacks a clean format-2 layout (every list
+        entry named and counted) — the caller then takes the full parse.
         """
         old_list = self._chunk_manifest_list(old_path)
         new_list = self._chunk_manifest_list(new_path)
@@ -719,16 +687,9 @@ class Catalog:
         new_names = [m["name"] for m in new_list]
         shared_chunks = set(old_names) & set(new_names)
         # how many entries the shared chunks account for WITHOUT parsing
-        # them (the manifest list carries per-chunk counts); None when a
-        # pre-count list can't say — membership must then be verified
-        shared_counts = [
-            m.get("count")
-            for m in old_list
-            if m["name"] in shared_chunks
-        ]
-        shared_expected = (
-            None if any(c is None for c in shared_counts)
-            else sum(shared_counts)
+        # them (the manifest list carries per-chunk counts)
+        shared_expected = sum(
+            m["count"] for m in old_list if m["name"] in shared_chunks
         )
         e_old = self._parse_chunks(
             old_path, [n for n in old_names if n not in shared_chunks]
@@ -777,8 +738,7 @@ class Catalog:
         # the steady-state one): an unknown file then prunes only when
         # a shared-chunk entry proves it, with the entry's size.
         if shared_unknown and (
-            shared_expected is None
-            or len(o_unknown) != shared_expected
+            len(o_unknown) != shared_expected
             or len(n_unknown) != shared_expected
         ):
             shared_entries = self._parse_chunks(
@@ -815,36 +775,20 @@ class Catalog:
     ) -> tuple[list[str] | None, list[str] | None]:
         """The two snapshots' file lists with provably-shared files
         removed from BOTH sides — the shared-file pruning behind
-        ``table_changes``. Identity per ``snapshot_identity``: manifest
-        (file_id, size) pairs, falling back to (st_dev, st_ino) hard-link
-        identity in ``auto`` mode when either side predates manifests.
-        ``(None, None)`` means no pruning evidence — read both snapshots
-        in full (correct, unpruned).
+        ``table_changes``, by manifest (file_id, size) identity.
+        ``(None, None)`` means no pruning evidence (either side lacks a
+        manifest) — read both snapshots in full (correct, unpruned).
 
-        Format-2 snapshots take :meth:`_chunk_pruned_diff` — same
+        Clean manifest lists take :meth:`_chunk_pruned_diff` — same
         result, O(dirty chunks) driver JSON instead of O(table)."""
-        ofs = nfs = None
-        if self.snapshot_identity in ("auto", "manifest"):
-            fast = self._chunk_pruned_diff(old_path, new_path)
-            if fast is not None:
-                return fast
-            ofs = self._manifest_identities(old_path)
-            nfs = self._manifest_identities(new_path)
-            if ofs is not None and nfs is not None:
-                self.last_diff_stats = {"mode": "full"}
+        fast = self._chunk_pruned_diff(old_path, new_path)
+        if fast is not None:
+            return fast
+        ofs = self._manifest_identities(old_path)
+        nfs = self._manifest_identities(new_path)
         if ofs is None or nfs is None:
-            if self.snapshot_identity == "manifest":
-                return None, None
-
-            def _inos(files: list[str]) -> list[tuple[tuple, str]]:
-                out = []
-                for f in files:
-                    st = os.stat(f)  # one stat per file per side
-                    out.append(((st.st_dev, st.st_ino), f))
-                return out
-
-            ofs = _inos(self._snapshot_files(old_path))
-            nfs = _inos(self._snapshot_files(new_path))
+            return None, None
+        self.last_diff_stats = {"mode": "full"}
         shared = {i for i, _ in ofs if i is not None} & {
             i for i, _ in nfs if i is not None
         }
@@ -1035,7 +979,7 @@ class Catalog:
         range-partitioned layout gives each file a compact span, which
         is what makes key pruning bite at 100 TB.
 
-        Above ``AGOL_SPARK_DIST_LIST_THRESHOLD`` files the footer reads
+        Above ``DIST_LIST_THRESHOLD`` files the footer reads
         fan out to EXECUTORS (same threshold and fallback discipline as
         ``_list_with_sizes``): on object storage each footer is a
         round-trip, and a pruned merge paying 10^6 serial driver
@@ -1063,10 +1007,7 @@ class Catalog:
         return self._spans_for_files(files, cols)
 
     def _spans_for_files(self, files: list[str], cols: list[str]) -> list[dict]:
-        threshold = int(
-            os.environ.get("AGOL_SPARK_DIST_LIST_THRESHOLD", "100000")
-        )
-        if len(files) >= threshold and self.spark is not None:
+        if len(files) >= DIST_LIST_THRESHOLD and self.spark is not None:
             sc = self.spark.sparkContext
             chunks = [files[i : i + 1024] for i in range(0, len(files), 1024)]
             span = self._file_span
@@ -1607,10 +1548,7 @@ class Catalog:
         import pyarrow.dataset as ds
 
         side_ds = ds.dataset(idx_path, format="parquet")
-        threshold = int(
-            os.environ.get("AGOL_SPARK_INDEX_SPARK_THRESHOLD", "262144")
-        )
-        if side_ds.count_rows() >= threshold:
+        if side_ds.count_rows() >= INDEX_SPARK_THRESHOLD:
             # big sidecar (O(files x cap) rows at 100 TB): decode and
             # filter on EXECUTORS — the probe-hash predicate pushes into
             # the parquet scan and only the (file-count-bounded) matching
@@ -1718,13 +1656,6 @@ class Catalog:
         out.append(_stat(self.path(name), None))
         return out
 
-    def _snapshot_files(self, path: str) -> list[str]:
-        """Data files of a snapshot directory (or the file itself) —
-        names only, no stats (the inode fallback stats them itself)."""
-        if os.path.isfile(path):
-            return [path]
-        return [os.path.join(path, rp) for rp in self._list_names(path)]
-
     def _read_snapshot(self, path: str, files: list[str] | None = None) -> DataFrame:
         """Scan a snapshot (optionally a file subset) with ``table()``'s
         type semantics — TIMESTAMP(NANOS) columns convert to µs — so two
@@ -1791,9 +1722,9 @@ class Catalog:
         manifest ``file_id`` forward — a file present in both snapshots
         under the same (file_id, size) is the same immutable committed
         file, so its rows can emit no changes and are excluded from BOTH
-        join sides before any byte is read (``snapshot_identity`` picks
-        manifest vs legacy hard-link-inode evidence; manifests are the
-        object-storage-portable path — no inodes on S3/GCS). After a
+        join sides before any byte is read (manifest identity only — the
+        evidence that also exists on S3/GCS, which have no inodes; a
+        snapshot without a manifest diffs unpruned). After a
         pruned upsert touching 0.1% of a 100 TB table, the feed scans
         only the rewritten files, not two full snapshots. Sound under
         the unique-key contract the keyed writes enforce (a key living
@@ -1848,9 +1779,9 @@ class Catalog:
     ) -> DataFrame:
         """:meth:`table_changes` addressed by immutable tags instead of
         version numbers — "what changed since the snapshot that trained
-        model X". Tags pin snapshots by hard link, so the shared-inode
-        pruning is at its strongest here: only files rewritten since the
-        tag was minted are ever opened. ``to_tag=None`` diffs against
+        model X". Tags pin snapshots with their manifest identities, so
+        shared-file pruning is at its strongest here: only files
+        rewritten since the tag was minted are ever opened. ``to_tag=None`` diffs against
         the current table."""
         old_path = self._tag_path(name, from_tag)
         if not os.path.exists(old_path):
@@ -1885,8 +1816,9 @@ class Catalog:
         state (insert/delete/update images). The pre-publish review for
         the branch workflow: audit exactly the rows a
         :meth:`publish_branch` would land, not the whole table. The
-        branch forked by hard link, so the shared-inode pruning opens
-        only files the branch has rewritten since the fork."""
+        branch forked with the parent's manifest identities, so
+        shared-file pruning opens only files the branch has rewritten
+        since the fork."""
         src_path = self.path(name)
         if not os.path.exists(src_path):
             raise TableNotFoundError(f"no table {name!r} under {self.root}")
@@ -2388,7 +2320,7 @@ class Catalog:
         bytes copied. Because every write in this catalog goes through
         the two-phase commit (a new staged directory atomically
         replaces the old), mutating the branch NEVER touches the
-        parent's bytes: the shared inodes persist for the parent while
+        parent's bytes: the shared files persist for the parent while
         the branch's directory swings to new files — copy-on-write at
         the filesystem layer with zero bookkeeping. Experiment on the
         branch (backfills, risky reprocessing, schema trials), then
@@ -2453,6 +2385,9 @@ class Catalog:
         return out
 
 
-def test_catalog(spark: SparkSession, sf_dir: str) -> Catalog:
-    """Catalog over a driver-generated testdata directory."""
-    return Catalog(spark, sf_dir)
+def _merge_chunks(chunks: list[tuple[str, dict[str, dict]]]) -> dict[str, dict]:
+    """One relpath → entry dict from a snapshot's chunk manifests."""
+    merged: dict[str, dict] = {}
+    for _, part in chunks:
+        merged.update(part)
+    return merged

@@ -1166,7 +1166,9 @@ def _first_codes_width(catalog, name: str) -> int | None:
     """Length of one stored ``codes`` row, from the first fragment's
     first row — the cross-table layout check, as a driver-side footer+
     page read instead of a ``limit(1).collect()`` Spark job. ``None``
-    for an empty index (nothing to contradict)."""
+    for an empty index (nothing to contradict); a NULL ``codes`` row in
+    a non-empty index raises :class:`VectorIndexParamError` (a row with
+    no codes has no layout to check, so it must not pass the guard)."""
     import pyarrow.dataset as ds
 
     head = (
@@ -1176,7 +1178,14 @@ def _first_codes_width(catalog, name: str) -> int | None:
     if head.num_rows == 0:
         return None
     row = head.column("codes")[0].as_py()
-    return None if row is None else len(row)
+    if row is None:
+        from agol_pandas_spark.errors import VectorIndexParamError
+
+        raise VectorIndexParamError(
+            f"IVF-PQ index {name!r} has a NULL codes row — corrupt or "
+            "mixed-layout state; rebuild the index."
+        )
+    return len(row)
 
 
 def _pa_type(spark_type):

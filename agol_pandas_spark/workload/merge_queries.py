@@ -1574,7 +1574,7 @@ def meta_table_changes_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         # manifest-only identity (r8): the CDF's shared-file pruning must
         # prove itself WITHOUT inodes under the driver gate — the
         # object-storage posture, where hard links do not exist
-        cat = Catalog(spark, root, snapshot_identity="manifest")
+        cat = Catalog(spark, root)
         # The two scenario commits are sequential BY SEMANTICS (v2
         # archives v1), but v2's Spark write does not depend on v1's
         # commit — only its swap does. Stage v2 concurrently with the
@@ -1685,7 +1685,7 @@ def meta_table_changes_aligned(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         # manifest-only identity: pruning is per-FILE, so it must keep
         # working across the schema change (identity ignores columns)
-        cat = Catalog(spark, root, snapshot_identity="manifest")
+        cat = Catalog(spark, root)
         cat.write(v1, "t")
         cat.write(v2, "t", mode="overwrite", keep_versions=1)
         try:

@@ -8,7 +8,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from agol_pandas_spark.catalog import Catalog
+from agol_pandas_spark import catalog as catalog_mod
+from agol_pandas_spark.catalog import MANIFEST_NAME, Catalog
 from agol_pandas_spark.errors import TableExistsError, TableNotFoundError
 from agol_pandas_spark.operators.merge import write_table
 from agol_pandas_spark.plans import (
@@ -299,7 +300,7 @@ def test_skipping_index_prunes_files_exactly(spark, tmp_path):
 def test_skipping_index_spark_path_matches_driver_path(
     spark, tmp_path, monkeypatch
 ):
-    """Above AGOL_SPARK_INDEX_SPARK_THRESHOLD the sidecar decodes and
+    """Above INDEX_SPARK_THRESHOLD the sidecar decodes and
     filters on executors (VERDICT r9 watch item: the pyarrow path holds
     the whole index in driver memory — O(files x cap) rows at 10^6+
     files); results and stats must be identical either way."""
@@ -318,7 +319,7 @@ def test_skipping_index_spark_path_matches_driver_path(
     probe = ["name_000007", "name_000205", "no_such_name"]
     out_d, stats_d = cat.scan_skipping("t", "nm", probe)
     rows_d = sorted(map(tuple, out_d.collect()))
-    monkeypatch.setenv("AGOL_SPARK_INDEX_SPARK_THRESHOLD", "1")
+    monkeypatch.setattr(catalog_mod, "INDEX_SPARK_THRESHOLD", 1)
     out_s, stats_s = cat.scan_skipping("t", "nm", probe)
     assert sorted(map(tuple, out_s.collect())) == rows_d
     assert stats_s == stats_d
@@ -779,19 +780,51 @@ def test_optimistic_concurrency_conflict(spark, tmp_path):
     assert {r.k: r.v for r in cat.table("t").collect()} == {1: 1000, 2: 2000}
 
 
+def test_write_local_failed_swap_keeps_old_table(
+    spark, tmp_path, monkeypatch
+):
+    """write_local over a directory-shaped table moves the old snapshot
+    aside before the swap; if the swap fails, the old table must still
+    read its old rows and no staged or backup sibling may be left."""
+    import pyarrow as pa
+
+    cat = Catalog(spark, str(tmp_path))
+    old = spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string")
+    cat.write(old, "t")
+    new = pa.table({"k": [9], "s": ["z"]})
+
+    def boom(src, dst):
+        raise OSError("injected swap failure")
+
+    monkeypatch.setattr(catalog_mod.os, "replace", boom)
+    with pytest.raises(OSError, match="injected swap failure"):
+        cat.write_local(new, "t", mode="overwrite")
+    monkeypatch.undo()
+    assert sorted(map(tuple, cat.table("t").collect())) == [(1, "a"), (2, "b")]
+    assert [
+        f for f in os.listdir(tmp_path) if "__tmp_" in f or "__old_" in f
+    ] == []
+    # and the swap itself still replaces the directory when it succeeds
+    cat.write_local(new, "t", mode="overwrite")
+    assert os.path.isfile(cat.path("t"))
+    assert [tuple(r) for r in cat.table("t").collect()] == [(9, "z")]
+
+
 @pytest.mark.parametrize("identity", ["auto", "manifest"])
 class TestMultiWriterOcc:
     """VERDICT r6 item 5: the pruned-merge / compaction / carryover trio
     under a deterministic two-writer interleave — the stale writer's
     commit RAISES (never a silent lost update) and retries cleanly.
 
-    Parametrized over snapshot identity (VERDICT r9 item 7): the
-    object-storage-portable manifest mode must carry the SAME
-    concurrency guarantees as the legacy inode path — OCC is enforced
-    by the commit-id token, not by how file identity is evidenced."""
+    Parametrized over the file-identity evidence the base snapshot
+    carries: ``manifest`` is an engine-written manifest list; ``auto``
+    is a snapshot with its manifest stripped (a pre-manifest table,
+    which diffs unpruned). OCC is enforced by the commit-id token, not
+    by how file identity is evidenced, so both must hold the same
+    guarantees."""
 
     def _table(self, spark, tmp_path, identity):
-        cat = Catalog(spark, str(tmp_path), snapshot_identity=identity)
+        cat = Catalog(spark, str(tmp_path))
         base = spark.createDataFrame(
             [(i, f"v{i}", float(i)) for i in range(100)],
             "k long, s string, v double",
@@ -800,6 +833,9 @@ class TestMultiWriterOcc:
             base.repartitionByRange(4, "k").sortWithinPartitions("k"),
             "t", mode="error",
         )
+        if identity == "auto":
+            os.remove(os.path.join(cat.path("t"), MANIFEST_NAME))
+            assert cat.snapshot_manifest(cat.path("t")) is None
         return cat
 
     def test_stale_carryover_commit_refused_then_retries(

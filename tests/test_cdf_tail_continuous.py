@@ -82,9 +82,7 @@ def _summary_matches(cat, name="summary", table="t"):
 def test_processing_time_tail_applies_commits_landing_while_running(
     spark, tmp_path
 ):
-    cat = Catalog(
-        spark, str(tmp_path / "cat"), snapshot_identity="manifest"
-    )
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 20, 0), "t")
     cat.write(_summarize(_mk(spark, 20, 0)), "summary")
     tail = CdfTail(cat, "t", key="k", spool_dir=str(tmp_path / "spool"))
@@ -112,9 +110,7 @@ def test_processing_time_tail_applies_commits_landing_while_running(
 
 
 def test_restart_from_checkpoint_mid_history(spark, tmp_path):
-    cat = Catalog(
-        spark, str(tmp_path / "cat"), snapshot_identity="manifest"
-    )
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 18, 0), "t")
     cat.write(_summarize(_mk(spark, 18, 0)), "summary")
     tail = CdfTail(cat, "t", key="k", spool_dir=str(tmp_path / "spool"))
@@ -170,9 +166,7 @@ def test_vacuum_during_downtime_squashes_then_converges(spark, tmp_path):
     archives are [v3, v4] with the v2 archive gone, and the tail emits
     the SQUASHED v?->v? diffs — an exact feed, never a hole — so the
     restarted query still converges to the recompute."""
-    cat = Catalog(
-        spark, str(tmp_path / "cat"), snapshot_identity="manifest"
-    )
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 15, 0), "t")
     cat.write(_summarize(_mk(spark, 15, 0)), "summary")
     tail = CdfTail(cat, "t", key="k", spool_dir=str(tmp_path / "spool"))
@@ -227,9 +221,7 @@ def test_vacuumed_watermark_during_downtime_raises_gap_error(
     advance — the re-seed signal — rather than resume with a hole."""
     from agol_pandas_spark.errors import CdfGapError
 
-    cat = Catalog(
-        spark, str(tmp_path / "cat"), snapshot_identity="manifest"
-    )
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 12, 0), "t")
     cat.write(_summarize(_mk(spark, 12, 0)), "summary")
     tail = CdfTail(cat, "t", key="k", spool_dir=str(tmp_path / "spool"))
@@ -269,9 +261,7 @@ def test_tail_recreated_over_same_spool_never_reemits(spark, tmp_path):
     over the same spool resumes the persisted watermark — already-
     spooled transitions are not re-emitted under new file names (a
     file-source checkpoint could not dedup those)."""
-    cat = Catalog(
-        spark, str(tmp_path / "cat"), snapshot_identity="manifest"
-    )
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 12, 0), "t")
     spool = str(tmp_path / "spool")
     tail = CdfTail(cat, "t", key="k", spool_dir=spool)
@@ -298,9 +288,7 @@ def test_crash_between_spool_and_state_write_recovers_exactly_once(
     re-emitting (the spool directory itself is the emit record)."""
     import os
 
-    cat = Catalog(
-        spark, str(tmp_path / "cat"), snapshot_identity="manifest"
-    )
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 10, 0), "t")
     spool = str(tmp_path / "spool")
     tail = CdfTail(cat, "t", key="k", spool_dir=spool)
@@ -340,9 +328,7 @@ def test_full_process_restart_ivm_converges(spark, tmp_path):
     process re-creates the tail over the same spool and the query over
     the same checkpoint + stream_id; the summary converges without
     double-counting."""
-    cat = Catalog(
-        spark, str(tmp_path / "cat"), snapshot_identity="manifest"
-    )
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 12, 0), "t")
     cat.write(_summarize(_mk(spark, 12, 0)), "summary")
     spool, cp = str(tmp_path / "spool"), str(tmp_path / "cp")
@@ -395,9 +381,7 @@ def test_crashed_head_spool_for_displaced_state_raises_not_skips(
 
     from agol_pandas_spark.errors import CdfGapError
 
-    cat = Catalog(
-        spark, str(tmp_path / "cat"), snapshot_identity="manifest"
-    )
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 10, 0), "t")
     cat.write(_mk(spark, 12, 0), "t", mode="overwrite", keep_versions=8)
     spool = str(tmp_path / "spool")
@@ -427,9 +411,7 @@ def test_spool_lock_refuses_concurrent_live_process(spark, tmp_path):
 
     from agol_pandas_spark.errors import TailLockError
 
-    cat = Catalog(
-        spark, str(tmp_path / "cat"), snapshot_identity="manifest"
-    )
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 10, 0), "t")
     spool = str(tmp_path / "spool")
     os.makedirs(spool)
@@ -462,9 +444,7 @@ def test_refused_attach_releases_lock(spark, tmp_path):
 
     from agol_pandas_spark.errors import CdfGapError
 
-    cat = Catalog(
-        spark, str(tmp_path / "cat"), snapshot_identity="manifest"
-    )
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 10, 0), "t")
     spool = str(tmp_path / "spool")
     os.makedirs(spool)
@@ -482,9 +462,7 @@ def test_attach_sweeps_orphaned_stage_dirs_and_tmp_state(spark, tmp_path):
     so attach deletes them — unbounded crash-loop debris otherwise."""
     import os
 
-    cat = Catalog(
-        spark, str(tmp_path / "cat"), snapshot_identity="manifest"
-    )
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 10, 0), "t")
     spool = str(tmp_path / "spool")
     tail = CdfTail(cat, "t", key="k", spool_dir=spool)
@@ -522,9 +500,7 @@ def test_restart_without_stream_id_keeps_checkpoint_lineage(
     raises instead of silently forking the lineage."""
     import os
 
-    cat = Catalog(
-        spark, str(tmp_path / "cat"), snapshot_identity="manifest"
-    )
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 12, 0), "t")
     cat.write(_summarize(_mk(spark, 12, 0)), "summary")
     spool, cp = str(tmp_path / "spool"), str(tmp_path / "cp")
@@ -575,9 +551,7 @@ def test_compaction_midstream_emits_zero_deltas_and_zero_reads(
     plan — while the IVM summary stays converged."""
     import os
 
-    cat = Catalog(
-        spark, str(tmp_path / "cat"), snapshot_identity="manifest"
-    )
+    cat = Catalog(spark, str(tmp_path / "cat"))
     # many small files so selective compaction genuinely rewrites some
     cat.write(_mk(spark, 40, 0).repartition(8), "t")
     cat.write(_summarize(_mk(spark, 40, 0)), "summary")
@@ -647,9 +621,7 @@ def test_legacy_flat_spool_refuses_reattach(spark, tmp_path):
 
     from agol_pandas_spark.errors import CdfGapError
 
-    cat = Catalog(
-        spark, str(tmp_path / "cat"), snapshot_identity="manifest"
-    )
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 10, 0), "t")
     spool = str(tmp_path / "spool")
     os.makedirs(spool)
@@ -692,7 +664,7 @@ def test_tailed_refresh_converges_and_suppresses_rework(spark, tmp_path):
         refresh_join_view_from_tails,
     )
 
-    cat = Catalog(spark, str(tmp_path / "cat"), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path / "cat"))
     _jv_seed(spark, cat)
     ft = CdfTail(cat, "f", key="fk", spool_dir=str(tmp_path / "fs"))
     dt = CdfTail(cat, "d", key="dk", spool_dir=str(tmp_path / "ds"))
@@ -740,7 +712,7 @@ def test_tailed_refresh_replays_safely_after_marker_loss(spark, tmp_path):
         refresh_join_view_from_tails,
     )
 
-    cat = Catalog(spark, str(tmp_path / "cat"), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path / "cat"))
     _jv_seed(spark, cat)
     ft = CdfTail(cat, "f", key="fk", spool_dir=str(tmp_path / "fs"))
     dt = CdfTail(cat, "d", key="dk", spool_dir=str(tmp_path / "ds"))
@@ -776,7 +748,7 @@ def test_tailed_refresh_uses_feed_aligned_snapshots(spark, tmp_path):
         refresh_join_view_from_tails,
     )
 
-    cat = Catalog(spark, str(tmp_path / "cat"), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path / "cat"))
     _jv_seed(spark, cat)
     ft = CdfTail(cat, "f", key="fk", spool_dir=str(tmp_path / "fs"))
     dt = CdfTail(cat, "d", key="dk", spool_dir=str(tmp_path / "ds"))
@@ -834,7 +806,7 @@ def test_spooled_snapshot_serves_captured_head_despite_racer(
     when the captured state was displaced unarchived."""
     from agol_pandas_spark.errors import CdfGapError
 
-    cat = Catalog(spark, str(tmp_path / "cat"), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 10, 0), "t")
     cat.write(_mk(spark, 12, 0), "t", mode="overwrite", keep_versions=8)
     tail = CdfTail(cat, "t", key="k", spool_dir=str(tmp_path / "spool"))
@@ -852,7 +824,7 @@ def test_spooled_snapshot_serves_captured_head_despite_racer(
     tail.close()
 
     # unarchived displacement: captured state unrecoverable -> gap
-    cat2 = Catalog(spark, str(tmp_path / "cat2"), snapshot_identity="manifest")
+    cat2 = Catalog(spark, str(tmp_path / "cat2"))
     cat2.write(_mk(spark, 8, 0), "t")
     cat2.write(_mk(spark, 9, 0), "t", mode="overwrite", keep_versions=8)
     tail2 = CdfTail(cat2, "t", key="k", spool_dir=str(tmp_path / "spool2"))
@@ -874,7 +846,7 @@ def test_vacuum_spool_reclaims_only_consumed_transitions(spark, tmp_path):
         refresh_join_view_from_tails,
     )
 
-    cat = Catalog(spark, str(tmp_path / "cat"), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 10, 0), "t")
     spool = str(tmp_path / "spool")
     tail = CdfTail(cat, "t", key="k", spool_dir=spool)
@@ -900,7 +872,7 @@ def test_vacuum_spool_reclaims_only_consumed_transitions(spark, tmp_path):
     tail2.close()
 
     # refresh-loop integration: vacuum_spools=True reclaims applied dirs
-    cat2 = Catalog(spark, str(tmp_path / "cat2"), snapshot_identity="manifest")
+    cat2 = Catalog(spark, str(tmp_path / "cat2"))
     fact = spark.createDataFrame([(1, 1, 10)], "fk long, dk long, v long")
     dim = spark.createDataFrame([(1, "a")], "dk long, label string")
     cat2.write(fact, "f")
@@ -945,9 +917,7 @@ def test_vacuum_honors_live_tail_pin(spark, tmp_path):
     instead of creating the hole ``CdfGapError`` can only report after
     the fact. close()/detach() unpin — an unregistered spool reclaims
     as before."""
-    cat = Catalog(
-        spark, str(tmp_path / "cat"), snapshot_identity="manifest"
-    )
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 10, 0), "t")
     cat.write(_mk(spark, 12, 0), "t", mode="overwrite", keep_versions=8)
     tail = CdfTail(cat, "t", key="k", spool_dir=str(tmp_path / "spool"))
@@ -980,9 +950,7 @@ def test_tail_pin_survives_process_restart(spark, tmp_path):
     """The pin id persists in the spool state: a tail re-created over
     the same spool re-asserts ONE pin (not a leak of stale ones), and
     detach() releases it for a successor."""
-    cat = Catalog(
-        spark, str(tmp_path / "cat"), snapshot_identity="manifest"
-    )
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 10, 0), "t")
     cat.write(_mk(spark, 12, 0), "t", mode="overwrite", keep_versions=8)
     spool = str(tmp_path / "spool")
@@ -1003,9 +971,7 @@ def test_spool_consumer_watermarks_clamp_vacuum(spark, tmp_path):
     """VERDICT r10 item 4 (unit): vacuum_spool never reclaims past the
     minimum registered consumer watermark, and version-level claims via
     set_consumer_watermark release exactly the drained prefix."""
-    cat = Catalog(
-        spark, str(tmp_path / "cat"), snapshot_identity="manifest"
-    )
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 10, 0), "t")
     tail = CdfTail(cat, "t", key="k", spool_dir=str(tmp_path / "spool"))
     for i in range(3):
@@ -1035,9 +1001,7 @@ def test_file_level_consumer_tracking_requires_complete_transitions(
     destroy the directory's remaining files."""
     import os as _os
 
-    cat = Catalog(
-        spark, str(tmp_path / "cat"), snapshot_identity="manifest"
-    )
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 10, 0), "t")
     cat.write(
         _mk(spark, 12, 0), "t", mode="overwrite", keep_versions=8
@@ -1081,9 +1045,7 @@ def test_streamed_consumer_vacuum_is_lossless_and_bounded(spark, tmp_path):
     exact across every commit and the spool directory count stays
     bounded (old transitions reclaimed only after the stream drained
     them)."""
-    cat = Catalog(
-        spark, str(tmp_path / "cat"), snapshot_identity="manifest"
-    )
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 20, 0), "t")
     cat.write(_summarize(_mk(spark, 20, 0)), "summary")
     tail = CdfTail(cat, "t", key="k", spool_dir=str(tmp_path / "spool"))

@@ -68,7 +68,7 @@ def test_tailed_refresh_carries_untouched_view_files_by_inode(
     rewrites ONLY the view files whose spans intersect it — every other
     view file carries into the new snapshot as the same inode (hard
     link, zero copy), and bytes_rewritten is delta-sized."""
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     dim = _dim(spark)
     fact1 = _fact(spark, range(400))
     cat.write(_clustered(fact1, 8, "fk"), "f")
@@ -124,7 +124,7 @@ def test_td_rescan_reads_only_span_intersecting_fact_files(spark, tmp_path):
     contain it — asserted through the re-derive plan's inputFiles."""
     from agol_pandas_spark.operators.views import star_view_delta
 
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     fact = _fact(spark, range(400))
     # cluster the FACT by the join key: 8 files, ~one dk class each
     cat.write(_clustered(fact, 8, "dk"), "f")
@@ -171,7 +171,7 @@ def test_star_three_tails_matches_scratch_three_way_join(spark, tmp_path):
     from three tails through one star refresh, with a dim1 re-key, a
     dim2 delete, and a fact upsert/insert in the same round — then a
     quiescent round that must not commit."""
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     fact1 = spark.createDataFrame(
         [(k, k % 5, k % 3, k * 2) for k in range(200)],
         "fk long, d1 long, d2 long, v long",
@@ -243,7 +243,7 @@ def test_star_three_tails_matches_scratch_three_way_join(spark, tmp_path):
 
 
 def test_star_refresh_requires_distinct_dim_names(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     cat.write(_fact(spark, range(10)), "f")
     cat.write(_dim(spark), "d")
     cat.write(_fact(spark, range(10)), "v")
@@ -266,7 +266,7 @@ def test_compact_then_refresh_never_carries_data_change(spark, tmp_path):
     row-CHANGING and must strip that flag from the carried props — or a
     CdfTail over the view would treat the refresh as a declared no-op
     and silently skip its delta."""
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     dim = _dim(spark)
     fact1 = _fact(spark, range(100))
     cat.write(fact1.repartition(4), "f")

@@ -39,7 +39,7 @@ def _rows(df):
 
 
 def test_insert_update_delete_match_scratch_join(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     dim = _dim(spark)
     f1 = _fact(spark, [(10, 1, 100), (11, 2, 110), (12, 3, 120), (13, 1, 130)])
     f2 = _fact(
@@ -92,7 +92,7 @@ def test_double_apply_is_idempotent(spark, tmp_path):
     the same view (unlike the additive summary, which needs the
     exactly-once marker) — re-dropping and re-joining identical images
     is a fixpoint."""
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     dim = _dim(spark)
     f1 = _fact(spark, [(1, 1, 10), (2, 2, 20), (3, 3, 30)])
     f2 = _fact(spark, [(1, 1, 99), (4, 2, 40)])  # upd, del x2, ins
@@ -156,7 +156,7 @@ def test_bilateral_both_sides_change_matches_scratch_join(spark, tmp_path):
         apply_cdf_to_join_view_bilateral,
     )
 
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     f1 = _bfact(spark, [(1, 1, 10), (2, 2, 20), (3, 3, 30), (4, 9, 40)])
     d1 = _bdim(spark, [(1, "alpha"), (2, "beta"), (3, "gamma")])
     # fact: update fk=1's value, DELETE fk=3, insert fk=5
@@ -190,7 +190,7 @@ def test_bilateral_dim_rekey_retracts_and_attracts(spark, tmp_path):
         apply_cdf_to_join_view_bilateral,
     )
 
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     f1 = _bfact(spark, [(1, 1, 10), (2, 2, 20)])
     d1 = _bdim(spark, [(1, "alpha"), (2, "beta")])
     d2 = _bdim(spark, [(1, "alpha9")])  # dk=1 relabeled, dk=2 deleted
@@ -216,7 +216,7 @@ def test_bilateral_fact_only_degrades_to_unilateral(spark, tmp_path):
         apply_cdf_to_join_view_bilateral,
     )
 
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     f1 = _bfact(spark, [(1, 1, 10), (2, 2, 20)])
     d1 = _bdim(spark, [(1, "alpha"), (2, "beta")])
     f2 = _bfact(spark, [(1, 1, 11), (3, 2, 30)])

@@ -1,17 +1,18 @@
 """Snapshot-manifest identity (object-storage portability).
 
-The catalog's shared-file pruning (``table_changes`` & friends)
-historically proved two snapshot files identical by hard-link inode —
-meaningless on S3/GCS/ABFS. Every commit now writes an Iceberg-style
-manifest (``_manifest.json``: relpath → {file_id, size}); carryover /
-tag / branch / clone commits carry each file's ``file_id`` forward, so
-identity survives without a filesystem that has inodes. These tests pin:
+The catalog's shared-file pruning (``table_changes`` & friends) proves
+two snapshot files identical by manifest identity only — the evidence
+that also exists on S3/GCS/ABFS, which have no inodes. Every commit
+writes an Iceberg-style manifest (``_manifest.json``: relpath →
+{file_id, size}); carryover / tag / branch / clone commits carry each
+file's ``file_id`` forward. These tests pin:
 
 - every commit path produces a complete manifest;
 - carried files keep their id, rewritten files get a fresh one;
-- diffs are IDENTICAL under ``snapshot_identity`` ∈ {auto, manifest,
-  inode} and under ``prune_shared_files=False`` (the unpruned oracle);
-- manifest mode prunes exactly the files inode mode prunes;
+- pruned diffs are IDENTICAL to ``prune_shared_files=False`` (the
+  unpruned oracle);
+- manifest identity prunes exactly the files a hard-link carryover
+  shares on a POSIX filesystem;
 - missing manifests / externally-added files degrade to unpruned reads,
   never to dropped rows.
 """
@@ -76,12 +77,26 @@ def test_carryover_preserves_file_ids(spark, tmp_path):
 
 @pytest.mark.parametrize("mode", ["auto", "manifest", "inode"])
 def test_table_changes_identical_across_identity_modes(spark, tmp_path, mode):
-    cat = Catalog(spark, str(tmp_path), snapshot_identity=mode)
+    """Whatever identity evidence the two snapshots carry, the pruned
+    feed equals the ``prune_shared_files=False`` oracle. ``manifest``:
+    both carry engine-written manifest lists, so pruning engages.
+    ``auto``: the older snapshot lost its manifest (mixed evidence).
+    ``inode``: both lost it, leaving only the hard links the carryover
+    made, which are not identity evidence — the diff runs unpruned."""
+    cat = Catalog(spark, str(tmp_path))
     _mk_table(spark, cat, "t")
     src = spark.createDataFrame(
         [(0, 99), (1000, 1)], "k long, v long"
     )
     merge_pruned(cat, src, "t", mode="upsert", key="k", keep_versions=5)
+    old_path, new_path = cat._version_path("t", 1), cat.path("t")
+    if mode in ("auto", "inode"):
+        os.remove(os.path.join(old_path, MANIFEST_NAME))
+    if mode == "inode":
+        os.remove(os.path.join(new_path, MANIFEST_NAME))
+    old, new = cat._unshared_snapshot_files(old_path, new_path)
+    assert (old is not None) == (mode == "manifest")
+    assert (new is not None) == (mode == "manifest")
     pruned = cat.table_changes("t", 1, key="k")
     oracle = cat.table_changes("t", 1, key="k", prune_shared_files=False)
     assert _rows(pruned) == _rows(oracle)
@@ -93,28 +108,32 @@ def test_table_changes_identical_across_identity_modes(spark, tmp_path, mode):
 
 
 def test_manifest_prunes_same_files_as_inode(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     _mk_table(spark, cat, "t")
     src = spark.createDataFrame([(0, 99)], "k long, v long")
     merge_pruned(cat, src, "t", mode="upsert", key="k", keep_versions=5)
     old_path = cat._version_path("t", 1)
     new_path = cat.path("t")
     m_old, m_new = cat._unshared_snapshot_files(old_path, new_path)
-    ino = Catalog(spark, str(tmp_path), snapshot_identity="inode")
-    i_old, i_new = ino._unshared_snapshot_files(old_path, new_path)
-    assert sorted(os.path.basename(f) for f in m_old) == sorted(
-        os.path.basename(f) for f in i_old
-    )
-    assert sorted(os.path.basename(f) for f in m_new) == sorted(
-        os.path.basename(f) for f in i_new
-    )
+
+    # the hard-link-shared file set, straight from the filesystem
+    def inodes(path):
+        files = [os.path.join(path, f) for f in cat._list_names(path)]
+        return {f: (os.stat(f).st_dev, os.stat(f).st_ino) for f in files}
+
+    o_ino, n_ino = inodes(old_path), inodes(new_path)
+    shared = set(o_ino.values()) & set(n_ino.values())
+    i_old = [f for f, i in o_ino.items() if i not in shared]
+    i_new = [f for f, i in n_ino.items() if i not in shared]
+    assert sorted(m_old) == sorted(i_old)
+    assert sorted(m_new) == sorted(i_new)
     # and pruning actually engaged: fewer files than the full snapshots
-    assert len(m_old) < len(cat._snapshot_files(old_path))
-    assert len(m_new) < len(cat._snapshot_files(new_path))
+    assert len(m_old) < len(o_ino)
+    assert len(m_new) < len(n_ino)
 
 
 def test_tag_branch_clone_carry_identities(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     _mk_table(spark, cat, "t")
     base = _manifest(cat, cat.path("t"))
     ids = {e["file_id"] for e in base.values()}
@@ -144,7 +163,7 @@ def test_tag_branch_clone_carry_identities(spark, tmp_path):
 
 
 def test_publish_branch_keeps_identities(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     _mk_table(spark, cat, "t")
     bname = cat.branch_table("t", "dev")
     src = spark.createDataFrame([(0, 123)], "k long, v long")
@@ -162,7 +181,7 @@ def test_publish_branch_keeps_identities(spark, tmp_path):
 
 
 def test_missing_manifest_degrades_to_unpruned_not_wrong(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     _mk_table(spark, cat, "t")
     src = spark.createDataFrame([(0, 99)], "k long, v long")
     merge_pruned(cat, src, "t", mode="upsert", key="k", keep_versions=5)
@@ -175,18 +194,10 @@ def test_missing_manifest_degrades_to_unpruned_not_wrong(spark, tmp_path):
     feed = cat.table_changes("t", 1, key="k")
     oracle = cat.table_changes("t", 1, key="k", prune_shared_files=False)
     assert _rows(feed) == _rows(oracle)
-    # auto mode falls back to inode evidence and still prunes
-    auto = Catalog(spark, str(tmp_path), snapshot_identity="auto")
-    a_old, a_new = auto._unshared_snapshot_files(
-        cat._version_path("t", 1), cat.path("t")
-    )
-    assert a_old is not None and len(a_old) < len(
-        cat._snapshot_files(cat._version_path("t", 1))
-    )
 
 
 def test_external_file_never_pruned(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     _mk_table(spark, cat, "t", keep_versions=5)
     cat.write(cat.table("t"), "t", mode="overwrite", keep_versions=5)
     # drop a rogue data file (outside any commit) into the new snapshot
@@ -200,17 +211,6 @@ def test_external_file_never_pruned(spark, tmp_path):
         for i, f in cat._manifest_identities(cat.path("t"))
     )
     assert idents["zz_rogue.parquet"] is None  # unidentified: always read
-
-
-def test_identity_mode_validation(spark, tmp_path):
-    with pytest.raises(ValueError):
-        Catalog(spark, str(tmp_path), snapshot_identity="etag")
-    os.environ["AGOL_SPARK_SNAPSHOT_IDENTITY"] = "manifest"
-    try:
-        assert Catalog(spark, str(tmp_path)).snapshot_identity == "manifest"
-    finally:
-        del os.environ["AGOL_SPARK_SNAPSHOT_IDENTITY"]
-    assert Catalog(spark, str(tmp_path)).snapshot_identity == "auto"
 
 
 def test_cleanup_staging_reclaims_only_old_orphans(spark, tmp_path):
@@ -295,11 +295,7 @@ def test_manifest_invariants_under_random_commit_sequences(spark, tmp_path):
     @given(seq=ops)
     def run(seq):
         counter[0] += 1
-        cat = Catalog(
-            spark,
-            str(tmp_path / f"prop{counter[0]}"),
-            snapshot_identity="manifest",
-        )
+        cat = Catalog(spark, str(tmp_path / f"prop{counter[0]}"))
         base = spark.range(300).select(
             F.col("id").alias("k"), (F.col("id") % 5).alias("v")
         ).repartition(3, "k")
@@ -369,7 +365,7 @@ def test_manifest_pruning_shrinks_cdf_input_files(spark, tmp_path):
     just its rows) stays proportional to the rewritten file set on
     storage without inodes: in manifest-only mode, the feed's input
     files must exclude every carried file."""
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     _mk_table(spark, cat, "t", n=400, files=4)
     before = {os.path.basename(f) for f in cat.data_files("t")}
     src = spark.createDataFrame([(0, 99)], "k long, v long")

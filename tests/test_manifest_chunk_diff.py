@@ -17,12 +17,14 @@ end-to-end ``table_changes`` behavior and stats.
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
 
 from pyspark.sql import functions as F
 
+from agol_pandas_spark import catalog as catalog_mod
 from agol_pandas_spark.catalog import MANIFEST_NAME, Catalog
 
 
@@ -50,7 +52,7 @@ def _full_path_diff(cat, old_path, new_path):
 
 @pytest.fixture()
 def small_chunks(monkeypatch):
-    monkeypatch.setenv("AGOL_SPARK_MANIFEST_CHUNK", "4")
+    monkeypatch.setattr(catalog_mod, "MANIFEST_CHUNK", 4)
 
 
 def test_chunk_diff_equals_full_parse_across_engine_history(
@@ -61,7 +63,7 @@ def test_chunk_diff_equals_full_parse_across_engine_history(
     under the chunk-aware fast path and the full parse."""
     from agol_pandas_spark.operators.merge import merge_pruned, write_table
 
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     base = (
         _mk(spark, 0, 240)
         .repartitionByRange(12, "k")
@@ -94,13 +96,32 @@ def test_chunk_diff_equals_full_parse_across_engine_history(
         map(sorted, _full_path_diff(cat, paths[0], paths[-1]))
     )
 
+    # manifest lists WITHOUT per-chunk counts: the chunk diff declines
+    # and the full parse answers every pair, with the same result
+    for p in paths:
+        mp = os.path.join(p, MANIFEST_NAME)
+        with open(mp) as fh:
+            head = json.load(fh)
+        for m in head["manifests"]:
+            del m["count"]
+        os.remove(mp)
+        with open(mp, "w") as fh:
+            json.dump(head, fh)
+    for old, new in zip(paths, paths[1:]):
+        assert cat._chunk_pruned_diff(old, new) is None, (old, new)
+        got = cat._unshared_snapshot_files(old, new)
+        assert cat.last_diff_stats == {"mode": "full"}
+        assert tuple(map(sorted, got)) == tuple(
+            map(sorted, _full_path_diff(cat, old, new))
+        ), (old, new)
+
 
 def test_chunk_diff_parses_o_dirty_chunks(spark, tmp_path, monkeypatch):
     """The scale claim, pinned by parse counts on a synthetic 20k-file
     snapshot (chunk=256 → ~79 chunks/side): a 10-file delta must parse
     O(1) chunks, not all of them."""
-    monkeypatch.setenv("AGOL_SPARK_MANIFEST_CHUNK", "256")
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    monkeypatch.setattr(catalog_mod, "MANIFEST_CHUNK", 256)
+    cat = Catalog(spark, str(tmp_path))
     a = str(tmp_path / "a")
     os.makedirs(a)
     names = [f"part-{i:05d}.parquet" for i in range(20_000)]
@@ -147,7 +168,7 @@ def test_disk_truth_still_wins_over_shared_chunks(
     outside the engine is read; a file deleted from one side makes the
     other side's copy read; a size-tampered file in a parsed chunk is
     read on both sides."""
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     a = str(tmp_path / "a")
     b = str(tmp_path / "b")
     os.makedirs(a)
@@ -205,7 +226,7 @@ def test_table_changes_rides_the_chunk_diff(spark, tmp_path, small_chunks):
     with a small parse count, and emits exactly the changed rows."""
     from agol_pandas_spark.operators.merge import merge_pruned
 
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     base = (
         _mk(spark, 0, 300)
         .repartitionByRange(10, "k")
@@ -238,7 +259,7 @@ def test_double_injection_is_read_not_pruned(spark, tmp_path, small_chunks):
     account for), the shared chunks are parsed ONCE to verify
     membership, and the injected pair is read on both sides — matching
     the full path."""
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     a = str(tmp_path / "a")
     b = str(tmp_path / "b")
     os.makedirs(a)

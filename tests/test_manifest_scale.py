@@ -30,6 +30,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from agol_pandas_spark import catalog as catalog_mod
 from agol_pandas_spark.catalog import MANIFEST_NAME, Catalog
 
 N_FILES = 100_000
@@ -66,7 +67,7 @@ def big_snapshot(spark, tmp_path_factory):
     bytes (identity is (file_id, size) carried by reference), so tiny
     files exercise exactly the metadata path a 100 TB table would."""
     root = tmp_path_factory.mktemp("mscale")
-    cat = Catalog(spark, str(root), snapshot_identity="manifest")
+    cat = Catalog(spark, str(root))
     a = str(root / "a")
     names = [f"part-{i:06d}.parquet" for i in range(N_FILES)]
     _mk_files(a, names)
@@ -119,7 +120,7 @@ def test_delta_commit_writes_o_delta_manifest_bytes(big_snapshot, tmp_path):
     fresh = [c for c in stats_b["chunks"] if c[1] not in a_inodes]
     # the reused chunks carry ~all entries; fresh chunks carry O(delta):
     # dropped+rewritten+new touch at most 4 chunks' worth of survivors
-    chunk = cat._manifest_chunk_size()
+    chunk = catalog_mod.MANIFEST_CHUNK
     assert sum(c[2] for c in reused) >= N_FILES - 4 * chunk
     assert sum(c[2] for c in fresh) <= 4 * chunk
     # manifest BYTES written this commit are a small fraction of the
@@ -137,15 +138,15 @@ def test_delta_commit_writes_o_delta_manifest_bytes(big_snapshot, tmp_path):
 def test_distributed_stat_path_matches_driver_path(
     spark, tmp_path, monkeypatch
 ):
-    """Above AGOL_SPARK_DIST_LIST_THRESHOLD the per-file stat fans out
+    """Above DIST_LIST_THRESHOLD the per-file stat fans out
     over executors; the listing must be bit-identical either way."""
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     d = str(tmp_path / "snap")
     _mk_files(d, [f"f-{i:04d}.parquet" for i in range(300)])
     os.makedirs(os.path.join(d, "sub"))
     _mk_files(os.path.join(d, "sub"), ["g-0.parquet"])
     driver = cat._list_with_sizes(d)
-    monkeypatch.setenv("AGOL_SPARK_DIST_LIST_THRESHOLD", "100")
+    monkeypatch.setattr(catalog_mod, "DIST_LIST_THRESHOLD", 100)
     dist = cat._list_with_sizes(d)
     assert dist == driver
     assert ("sub/g-0.parquet", 1) in dict(driver).items()
@@ -161,7 +162,7 @@ def test_distributed_key_spans_match_driver_path(
     land on the driver loop."""
     from pyspark.sql import functions as F
 
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     df = spark.range(600).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("v"),
         F.format_string("s%04d", F.col("id")).alias("s"),
@@ -171,14 +172,17 @@ def test_distributed_key_spans_match_driver_path(
     )
     driver = cat.file_key_spans("t", ["k", "s"])
     assert len(driver) == 6 and all(e["ok"] for e in driver)
-    monkeypatch.setenv("AGOL_SPARK_DIST_LIST_THRESHOLD", "2")
+    default_threshold = catalog_mod.DIST_LIST_THRESHOLD
+    monkeypatch.setattr(catalog_mod, "DIST_LIST_THRESHOLD", 2)
     dist = cat.file_key_spans("t", ["k", "s"])
     assert dist == driver
     # missing column: conservative ok=False on both paths
     assert all(
         not e["ok"] for e in cat.file_key_spans("t", ["nope"])
     )
-    monkeypatch.delenv("AGOL_SPARK_DIST_LIST_THRESHOLD")
+    monkeypatch.setattr(
+        catalog_mod, "DIST_LIST_THRESHOLD", default_threshold
+    )
     assert all(
         not e["ok"] for e in cat.file_key_spans("t", ["nope"])
     )
@@ -190,8 +194,8 @@ def test_distributed_key_spans_match_driver_path(
     class _SparkShim:
         sparkContext = _Boom()
 
-    monkeypatch.setenv("AGOL_SPARK_DIST_LIST_THRESHOLD", "2")
-    shim = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    monkeypatch.setattr(catalog_mod, "DIST_LIST_THRESHOLD", 2)
+    shim = Catalog(spark, str(tmp_path))
     shim.spark = _SparkShim()
     # ADVICE r10: the silent fallback is now LOUD — a serial loop at
     # >=100k files looks like a hang, and the triggering error matters
@@ -208,11 +212,11 @@ def test_distributed_stat_falls_back_to_driver_on_executor_failure(
     the same path, the executor-side stat job fails inside Spark — the
     listing must fall back to the driver loop (slower, never wrong)
     instead of surfacing FileNotFoundError from a metadata read."""
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     d = str(tmp_path / "snap")
     _mk_files(d, [f"f-{i:04d}.parquet" for i in range(150)])
     driver = cat._list_with_sizes(d)
-    monkeypatch.setenv("AGOL_SPARK_DIST_LIST_THRESHOLD", "100")
+    monkeypatch.setattr(catalog_mod, "DIST_LIST_THRESHOLD", 100)
 
     class _Boom:
         def parallelize(self, *a, **k):
@@ -221,20 +225,21 @@ def test_distributed_stat_falls_back_to_driver_on_executor_failure(
     class _SparkShim:
         sparkContext = _Boom()
 
-    shim = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    shim = Catalog(spark, str(tmp_path))
     shim.spark = _SparkShim()  # plain attribute: swap in the failing SC
     with pytest.warns(UserWarning, match="executor fan-out failed"):
         assert shim._list_with_sizes(d) == driver
     assert shim.last_fanout_error["op"] == "_list_with_sizes"
 
 
-def test_legacy_monolithic_manifest_upgrades_with_ids_carried(
+def test_legacy_monolithic_manifest_reads_as_unmanifested(
     spark, tmp_path
 ):
-    """A pre-r9 snapshot (format-1 monolith) must stay readable, and a
-    carryover commit over it must carry its file_ids into the format-2
-    layout — the in-place upgrade path for existing tables."""
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    """A pre-list snapshot (format-1 single-file manifest) reads as a
+    snapshot WITHOUT a manifest: its diffs run unpruned (correct, just
+    slower), and the next carryover commit over it writes a format-2
+    list with fresh file ids."""
+    cat = Catalog(spark, str(tmp_path))
     df = spark.range(200).select(
         F.col("id").alias("k"), (F.col("id") % 5).alias("v")
     ).repartition(4, "k")
@@ -247,25 +252,32 @@ def test_legacy_monolithic_manifest_upgrades_with_ids_carried(
             os.remove(os.path.join(p, f))
     with open(os.path.join(p, MANIFEST_NAME), "w") as fh:
         json.dump({"files": man}, fh, sort_keys=True)
-    assert cat.snapshot_manifest(p) == man  # format 1 reads fine
+    assert cat.snapshot_manifest(p) is None
 
-    carry = cat.data_files("t")
+    extra = spark.range(200, 210).select(
+        F.col("id").alias("k"), (F.col("id") % 5).alias("v")
+    ).repartition(1)
     cat.write_with_carryover(
-        df.filter(F.lit(False)).limit(0), "t", carry_files=carry,
-        keep_versions=3,
+        extra, "t", carry_files=cat.data_files("t"), keep_versions=3,
     )
+    (ver,) = cat.versions("t")
+    old, new = cat._unshared_snapshot_files(
+        cat._version_path("t", ver), cat.path("t")
+    )
+    assert old is None and new is None  # no evidence: unpruned
+    feed = cat.table_changes("t", ver, key="k")
+    oracle = cat.table_changes("t", ver, key="k", prune_shared_files=False)
+    rows = sorted(tuple(r) for r in feed.collect())
+    assert rows == sorted(tuple(r) for r in oracle.collect())
+    assert sorted(r[0] for r in rows) == list(range(200, 210))
+
     p2 = cat.path("t")
-    man2 = cat.snapshot_manifest(p2)
     with open(os.path.join(p2, MANIFEST_NAME)) as fh:
         assert json.load(fh).get("format") == 2  # upgraded layout
-    carried_ids = {
-        e["file_id"] for rp, e in man2.items() if rp in man
-    }
-    assert {man[rp]["file_id"] for rp in man} <= carried_ids | {
-        man2[rp]["file_id"] for rp in man2
-    }
-    for rp, e in man.items():
-        assert man2[rp]["file_id"] == e["file_id"]
+    man2 = cat.snapshot_manifest(p2)
+    assert set(man) < set(man2)
+    old_ids = {e["file_id"] for e in man.values()}
+    assert not old_ids & {e["file_id"] for e in man2.values()}
 
 
 def test_chunk_reuse_through_real_carryover_commits(
@@ -274,8 +286,8 @@ def test_chunk_reuse_through_real_carryover_commits(
     """End-to-end through write_with_carryover: a second commit that
     carries every prior file forward reuses the prior snapshot's chunk
     manifests by inode, and table_changes prunes to the new files."""
-    monkeypatch.setenv("AGOL_SPARK_MANIFEST_CHUNK", "8")
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    monkeypatch.setattr(catalog_mod, "MANIFEST_CHUNK", 8)
+    cat = Catalog(spark, str(tmp_path))
     df = spark.range(400).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("v")
     ).repartition(32, "k")

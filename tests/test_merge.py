@@ -523,3 +523,38 @@ def test_bare_merge_delete_caches_keys_only(spark):
     out = merge(target, source, "delete", key="k")
     assert out.count() == 40
     assert acc.value == 0, "delete evaluated payload columns"
+
+
+def test_keyed_source_checkpointed_once_per_path(spark, tmp_path, monkeypatch):
+    """write_table persists a keyed source itself, so the merge() it
+    calls must read that cache instead of localCheckpointing the delta a
+    second time; a bare merge() still checkpoints its lazy source once."""
+    from agol_pandas_spark.catalog import Catalog
+    from agol_pandas_spark.operators.merge import write_table
+
+    cat = Catalog(spark, str(tmp_path))
+    base = spark.range(20).select(
+        F.col("id").alias("k"), F.lit(0).cast("long").alias("v")
+    )
+    # the session's concrete DataFrame class (pyspark.sql.DataFrame is
+    # only its base in Spark 4)
+    df_cls = type(base)
+    calls = []
+    orig = df_cls.localCheckpoint
+
+    def counted(self, *a, **kw):
+        calls.append(1)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(df_cls, "localCheckpoint", counted)
+    cat.write(base, "t")
+    delta = spark.range(15, 25).select(
+        F.col("id").alias("k"), F.lit(1).cast("long").alias("v")
+    )
+    write_table(cat, delta, "t", mode="upsert", key="k", prune=False)
+    assert len(calls) == 0
+    got = {r["k"]: r["v"] for r in cat.table("t").collect()}
+    assert got == {k: (1 if k >= 15 else 0) for k in range(25)}
+
+    merge(base, delta, "upsert", key="k")
+    assert len(calls) == 1

@@ -831,6 +831,43 @@ def test_ivfpq_probe_rejects_mixed_layout_state(spark, sf_dir, tmp_path):
         probe_ivfpq_index(cat, "idx", queries, query_id="query_id")
 
 
+def test_ivfpq_probe_rejects_null_codes(spark, sf_dir, tmp_path):
+    """A non-empty index whose stored ``codes`` are NULL has no layout
+    to check against the meta: the probe's layout guard must raise
+    instead of reading the NULL row as "nothing to contradict"."""
+    import pytest as _pytest
+    from pyspark.sql import functions as F
+
+    from agol_pandas_spark.catalog import Catalog
+    from agol_pandas_spark.errors import VectorIndexParamError
+    from agol_pandas_spark.operators.similarity import (
+        pq_codebook_from_seeds,
+        probe_ivfpq_index,
+        write_ivfpq_index,
+    )
+
+    emb = Catalog(spark, sf_dir).table("embeddings")
+    pivots = emb.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("pivot_id"), "embedding"
+    )
+    cat = Catalog(spark, str(tmp_path))
+    write_ivfpq_index(cat, "idx", emb, pivots,
+                      pq_codebook_from_seeds(emb, "vec_id"),
+                      corpus_id="vec_id", pivot_id="pivot_id")
+    coded = cat.table("idx")
+    cat.write(
+        coded.withColumn(
+            "codes", F.lit(None).cast(coded.schema["codes"].dataType)
+        ),
+        "idx", mode="overwrite",
+    )
+    queries = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    with _pytest.raises(VectorIndexParamError, match="NULL codes"):
+        probe_ivfpq_index(cat, "idx", queries, query_id="query_id")
+
+
 def test_arrow_lut_bit_identical_to_sql_lut(emb, spark):
     """r11 optimization guard: the Arrow LUT kernel
     (``_pq_lut_from_matrix``, one map — the path every ADC scorer now

@@ -39,7 +39,7 @@ def _mk(spark, hi, bump=0):
 def test_write_table_carries_props_on_create_and_merge(spark, tmp_path):
     from agol_pandas_spark.operators.merge import write_table
 
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     write_table(
         cat, _mk(spark, 10), "t", mode="append",
         snapshot_props={"stream_id": "s1", "batch": 0},
@@ -60,7 +60,7 @@ def test_merge_pruned_carries_props_through_carryover_commit(
 ):
     from agol_pandas_spark.operators.merge import merge_pruned
 
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     base = _mk(spark, 400).repartitionByRange(8, "k").sortWithinPartitions("k")
     cat.write(base, "t")
     delta = _mk(spark, 6, 7)  # lowest keys only: pruning engages
@@ -91,7 +91,7 @@ def test_reexecuted_batch_against_merge_backed_summary_is_noop(
     didn't — the marker must make the re-execution a no-op."""
     from agol_pandas_spark.operators.merge import merge_pruned
 
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     seed = _mk(spark, 30).groupBy("g").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("v").cast("long").alias("v_sum"),
@@ -144,7 +144,7 @@ def test_write_audit_publish_props_commit_with_pass_discard_with_fail(
     from agol_pandas_spark.errors import AuditFailedError
     from agol_pandas_spark.operators.merge import write_audit_publish
 
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     write_audit_publish(
         cat, _mk(spark, 10), "t", mode="append",
         audits={"v_nonneg": "v >= 0"},
@@ -164,7 +164,7 @@ def test_write_audit_publish_props_commit_with_pass_discard_with_fail(
 def test_housekeeping_preserves_props_and_declares_data_change(
     spark, tmp_path
 ):
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     cat.write(
         _mk(spark, 200).repartition(6), "t",
         snapshot_props={"cdf_stream_id": "s", "cdf_last_batch_id": 5},
@@ -207,7 +207,7 @@ def test_compact_is_occ_guarded(spark, tmp_path, monkeypatch):
     racer's rows to the pre-race state the compaction job read."""
     from agol_pandas_spark.errors import ConcurrentWriteError
 
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     cat.write(_mk(spark, 50).repartition(4), "t")
 
     real_swap = cat._swap_in
@@ -229,7 +229,7 @@ def test_compact_is_occ_guarded(spark, tmp_path, monkeypatch):
 
 
 def test_restore_brings_archived_props_back(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     cat.write(_mk(spark, 10), "t", snapshot_props={"batch": 7})
     cat.write(_mk(spark, 12), "t", mode="overwrite", keep_versions=4)
     assert cat.snapshot_props("t") == {}  # wholesale replacement
@@ -249,7 +249,7 @@ def test_restore_of_housekeeping_snapshot_never_declares_noop(
     would silently skip the restore and diverge forever."""
     from agol_pandas_spark.streaming.cdf_source import CdfTail
 
-    cat = Catalog(spark, str(tmp_path / "cat"), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path / "cat"))
     cat.write(_mk(spark, 20), "t")
     cat.compact_selective("t", min_file_bytes=1 << 30, keep_versions=9)
     assert cat.snapshot_props("t")["data_change"] is False
