@@ -55,9 +55,11 @@ TEST_TABLES = (
 # Scan-DataFrame cache shared by all Catalog instances: building a parquet
 # scan costs ~100 ms of driver time per call (file listing + footer schema
 # read over py4j), and workload queries construct a fresh Catalog each
-# invocation. Keyed by (session, path, options, dataset mtime) — an
-# overwrite or drop changes the path's mtime, so staleness is structural
-# rather than relying on explicit invalidation hooks.
+# invocation. Keyed by (session, path, options, dataset mtime, commit id) —
+# an overwrite or drop changes the path's mtime, and the commit id tells
+# two snapshots apart where a coarse-timestamp filesystem gives them the
+# same mtime, so staleness is structural rather than relying on explicit
+# invalidation hooks.
 _DF_CACHE: dict[tuple, DataFrame] = {}
 _DF_CACHE_MAX = 256
 
@@ -192,7 +194,10 @@ class Catalog:
         p = self.path(name)
         if not os.path.exists(p):
             raise TableNotFoundError(f"no table {name!r} under {self.root}")
-        key = (id(self.spark), p, merge_schema, os.path.getmtime(p))
+        key = (
+            id(self.spark), p, merge_schema, os.path.getmtime(p),
+            self.commit_id(name),
+        )
         cached = _DF_CACHE.get(key)
         if cached is not None:
             return cached

@@ -6,17 +6,16 @@ Scale design:
 - *Exact / latest-wins*: one hash shuffle on the dedup key. Deterministic
   survivor selection via window ``row_number`` (``dropDuplicates`` keeps an
   arbitrary row — unacceptable for reproducible pipelines).
-- *MinHash signatures*: computed **per row with array higher-order
-  functions** (tokenize → shingle → hash → ``array_min``), so signature
-  computation is embarrassingly parallel inside codegen — no explode, no
-  shuffle, no Python. 100 TB of documents stream through a single map
-  stage.
+- *MinHash signatures*: computed **per row in one Arrow pandas UDF**
+  (tokenize → shingle → md5 → per-permutation min), so signature
+  computation is embarrassingly parallel — no explode, no shuffle. 100 TB
+  of documents stream through a single map stage.
 - *LSH banding*: signatures explode to ``bands`` rows per doc, shuffle on
   the band key, and self-join per bucket — the only shuffle in the
   pipeline, and it moves ``O(docs × bands)`` small rows, not text.
   Candidate pairs then get their exact signature agreement checked.
-- *SimHash*: per-row bit-vote over token hashes (again pure array ops),
-  near-dup candidates = equal 16-bit fingerprint.
+- *SimHash*: per-row bit-vote over token hashes (again one Arrow UDF),
+  near-dup candidates = equal fingerprints or a shared 15-bit band.
 - *n-gram Jaccard*: exact set similarity within user-supplied blocking
   columns (at scale: block or pre-LSH first; an unblocked exact Jaccard is
   a cross join and is intentionally not offered).
@@ -98,19 +97,6 @@ def latest_wins_dedup(
     )
 
 
-def _hashed_barrier(df: DataFrame, id_col: str, hashed: Column) -> DataFrame:
-    """Materialize a per-row hash array behind a ``Generate`` barrier.
-
-    ``CollapseProject`` inlines projected expressions into every downstream
-    reference — k signature columns would each re-evaluate the full
-    tokenize→shingle→md5 pipeline (measured 70× slowdown on the LSH path).
-    A ``Generate`` (explode of a 1-element array) is a collapse boundary:
-    the expensive hashing runs exactly once per row, and everything above
-    is integer math over the materialized ``array<long>``.
-    """
-    return df.select(F.col(id_col), F.explode(F.array(hashed)).alias("__h"))
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
@@ -125,8 +111,8 @@ def minhash_signatures(
     + numpy permutation mins replace the interpreted higher-order-function
     chain, which paid UTF8String/hex/conv allocation per shingle — the
     measured dominant cost of every MinHash query. Bit-identical to the
-    SQL shape (kept as :func:`_minhash_signatures_sql`, pinned by
-    ``tests/test_dedup.py::test_arrow_minhash_bit_identical``). Output
+    ``dedup_minhash_signatures`` DuckDB oracle, pinned by
+    ``tests/test_dedup.py::test_arrow_minhash_bit_identical``. Output
     carries only id + signature — at 100 TB the signature table is
     ~1/1000th the corpus and everything downstream touches only it.
     """
@@ -153,10 +139,10 @@ def _minhash_sigs_arrow(
     (guide §4.4); memoized per parameters because each ``pandas_udf``
     call costs a py4j registration round-trip.
 
-    Semantics twins (pinned bit-identical to the SQL path):
+    Semantics (pinned bit-identical to the DuckDB oracle):
 
     - NULL text / < shingle_size tokens → every ``mh_i`` is the sentinel
-      ``p_mod`` (SQL: ``coalesce(array_min(...), P)`` over an empty or
+      ``p_mod`` (oracle: ``coalesce(list_min(...), P)`` over an empty or
       NULL shingle set).
     - ``h = md5_60(shingle) % P``; ``mh_i = min((a_i*h + b_i) % P)`` —
       all values < 2^47, so int64 never overflows in either engine.
@@ -186,7 +172,7 @@ def _minhash_sigs_arrow(
                 continue
             h = np.asarray(hs, dtype=np.int64) % p_mod
             # (k, m) permutation table → per-permutation min; values stay
-            # < 2^47 so the int64 math is exact (same as the SQL path)
+            # < 2^47 so the int64 math is exact (same as the oracle)
             mins = ((A[:, None] * h[None, :] + B[:, None]) % p_mod).min(
                 axis=1
             )
@@ -194,57 +180,6 @@ def _minhash_sigs_arrow(
         return pd.Series(out)
 
     return _sigs.asNondeterministic()
-
-
-def _minhash_signatures_sql(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_size: int = 3,
-    num_hashes: int = len(MINHASH_PARAMS),
-) -> DataFrame:
-    """The original all-SQL signature kernel (tokenize → shingle → md5
-    behind a :func:`_hashed_barrier` → per-permutation ``array_min``),
-    kept as the cross-checked relational reference for the Arrow kernel
-    — the DuckDB oracles were derived from THIS shape."""
-    base = _hashed_barrier(df, id_col, _minhash_hashed_expr(text_col, shingle_size))
-    sig_cols = [
-        c.alias(f"mh_{i}") for i, c in enumerate(_minhash_sig_exprs(num_hashes))
-    ]
-    return base.select(F.col(id_col), *sig_cols)
-
-
-@lru_cache(maxsize=64)
-def _minhash_hashed_expr(text_col: str, shingle_size: int) -> Column:
-    """Shingle-hash array expression, memoized per parameters.
-
-    Column expressions are immutable and unresolved until analysis, so one
-    instance serves every DataFrame in the process. Building this tree
-    fresh costs real py4j round-trip time per call (measured ~0.1 s for
-    the shingle pipeline and ~0.4 s for the signature columns) — pure
-    driver overhead for repeated operator invocations. Aliases are NOT
-    memoized: an ``Alias`` mints its exprId at construction, and reusing
-    one object across two subplans of a single query would collide.
-    """
-    sh = word_shingles(tokens(F.col(text_col)), shingle_size)
-    return F.transform(sh, lambda s: portable_hash60(s) % MINHASH_P)
-
-
-@lru_cache(maxsize=16)
-def _minhash_sig_exprs(num_hashes: int) -> tuple[Column, ...]:
-    params = MINHASH_PARAMS[:num_hashes]
-    return tuple(
-        # empty shingle set → sentinel P (never collides with a real hash)
-        F.coalesce(
-            F.array_min(
-                F.transform(
-                    F.col("__h"), lambda h: (F.lit(a) * h + F.lit(b)) % MINHASH_P
-                )
-            ),
-            F.lit(MINHASH_P),
-        )
-        for _, (a, b) in enumerate(params)
-    )
 
 
 def lsh_candidate_pairs(
@@ -604,8 +539,8 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = SIMHASH_BITS)
     the previous explode → 21-lane packed aggregation → join-back
     pipeline: its groupBy SHUFFLE and the join disappear outright (the
     operator is now a pure map, guide §2.4), and the measured kernel
-    time dropped ~3× at sf0.1. Bit-identical to the SQL shape — kept
-    below as :func:`_simhash_sql`, pinned by
+    time dropped ~3× at sf0.1. Bit-identical to the ``dedup_simhash``
+    DuckDB oracle, pinned by
     ``tests/test_dedup.py::test_arrow_simhash_bit_identical``. Docs with
     zero tokens (or NULL text) keep fingerprint 0.
     """
@@ -647,70 +582,6 @@ def _simhash_arrow(bits: int):
         return pd.Series(out)
 
     return _fp.asNondeterministic()
-
-
-def _simhash_sql(
-    df: DataFrame, id_col: str, text_col: str, bits: int = SIMHASH_BITS
-) -> DataFrame:
-    """The original all-SQL SimHash (the relational reference the DuckDB
-    oracles were derived from; the Arrow kernel is pinned bit-identical
-    to it).
-
-    Shape: explode distinct tokens → hash once per token (codegen
-    projection) → ONE hash aggregation computing the per-bit ones-counts
-    as ``sum`` of PACKED 20-bit lanes: 3 bit-counters per 64-bit sum, so
-    60 bits need 20 aggregate columns instead of 60. Lane counters cannot
-    carry into each other below 2^20 distinct tokens per document — far
-    beyond any real document (a doc would need >1M distinct whitespace
-    tokens to overflow); the earlier 60-separate-sums formulation was
-    measured ~1.4× slower (3× wider agg buffers and shuffle rows), and the
-    round-1 higher-order-function formulation (one interpreted
-    ``aggregate`` lambda per bit) ~6× slower. Everything stays inside
-    whole-stage codegen. Docs with zero tokens keep fingerprint 0 via the
-    left join back to the id set.
-
-    The wide bit expressions are emitted as SQL strings through ONE
-    ``F.expr`` each (not per-bit Column composition): building the
-    60-bit tree one ``F.shiftright``/``F.when`` call at a time costs
-    hundreds of py4j round-trips — measured ~1.4-3.0 s of pure
-    driver-side DataFrame *construction* per call, vs ~0.85 s to actually
-    execute the query at sf0.1. One parsed SQL string is a single
-    round-trip and the identical Catalyst plan.
-    """
-    lane_bits = 20  # counter width; bound = 2^20-1 distinct tokens/doc
-    per_long = 64 // lane_bits  # 3 lanes per aggregate column
-    n_longs = (bits + per_long - 1) // per_long
-    lane_mask = (1 << lane_bits) - 1
-
-    base = df.select(F.col(id_col))
-    toks = df.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("__tok"),
-    ).select(F.col(id_col), portable_hash60(F.col("__tok")).alias("__h"))
-
-    def packed_lane_sum(k: int) -> str:
-        terms = [
-            f"shiftleft(shiftright(__h, {k * per_long + j}) & 1, {lane_bits * j})"
-            for j in range(per_long)
-            if k * per_long + j < bits
-        ]
-        return f"sum({' + '.join(terms)}) AS __p{k}"
-
-    ones = toks.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("__n"),
-        *[F.expr(packed_lane_sum(k)) for k in range(n_longs)],
-    )
-
-    def bit_term(b: int) -> str:
-        k, j = divmod(b, per_long)
-        o = f"(shiftright(__p{k}, {lane_bits * j}) & {lane_mask})"
-        return f"(CASE WHEN {o} * 2 > __n THEN CAST({2**b} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-
-    fingerprint = F.expr(" + ".join(bit_term(b) for b in range(bits)))
-    fp = ones.select(F.col(id_col), fingerprint.alias("simhash"))
-    return base.join(fp, id_col, "left").select(
-        F.col(id_col), F.coalesce(F.col("simhash"), F.lit(0)).alias("simhash")
-    )
 
 
 def simhash_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -1306,16 +1177,14 @@ def winnow_fingerprints(
     Scale shape: entirely per-row array math — tokenize → shingle → hash
     → window-min — inside one map stage; **zero shuffles** (a per-doc
     window function would shuffle the corpus on doc id for no reason).
-    The shingle-hash array is materialized once behind a Generate barrier
-    (see :func:`_hashed_barrier`); the packed-key trick keeps the
-    rightmost-min tie-break in pure integer MIN, reproducible in the
-    DuckDB oracle. Positions are bounded by 2^20 shingles/doc (≈4 MB of
-    text) — beyond that, split docs upstream (the chunking operator).
-    The bound is ENFORCED: a document with more than 2^20 shingles makes
-    the packed position complement negative, silently corrupting which
-    shingle wins each window min, so the operator raises at runtime
-    (``raise_error`` in-plan — the failure names the offending doc id)
-    instead of emitting wrong fingerprints.
+    The packed-key trick keeps the rightmost-min tie-break in pure
+    integer MIN, reproducible in the DuckDB oracle. Positions are bounded
+    by 2^20 shingles/doc (≈4 MB of text) — beyond that, split docs
+    upstream (the chunking operator). The bound is ENFORCED: a document
+    with more than 2^20 shingles makes the packed position complement
+    negative, silently corrupting which shingle wins each window min, so
+    the kernel raises at runtime (the failure names the offending doc
+    id) instead of emitting wrong fingerprints.
 
     Reference has no near-dup surface at all (full-scan client,
     src/agol_pandas.py:246); this extends §2b ★ dedup.
@@ -1323,10 +1192,8 @@ def winnow_fingerprints(
     r11: the tokenize → shingle → md5 → packed window-min selection runs
     in ONE Arrow pandas UDF (guide §4.2) returning the distinct packed
     minima per doc; only the tiny explode + integer decode stay in SQL.
-    The SQL kernel (interpreted ``transform(sequence, i ->
-    array_min(slice(...)))`` — O(shingles × window) interpreted-HOF
-    element evaluations per row) is kept as
-    :func:`_winnow_fingerprints_sql`, pinned row-identical by
+    Pinned row-identical to the ``dedup_winnow_fingerprints`` DuckDB
+    oracle by
     ``tests/test_dedup.py::test_arrow_winnow_bit_identical``.
     """
     w = int(window)
@@ -1357,12 +1224,11 @@ def _winnow_packed_arrow(
     """Arrow winnowing kernel factory: (id, text) → distinct packed
     window minima ``(h % hash_mod) * pos_mod + (pos_mod-1-i)``. The id
     rides along only so the > ``pos_mod`` shingle-envelope violation can
-    fail the job NAMING the doc (the SQL path's in-plan ``raise_error``
-    guard — same message shape). Parameters are baked into the closure
+    fail the job NAMING the doc. Parameters are baked into the closure
     (workers re-import the module, so the monkeypatchable module
     constants are read by the CALLER and passed in). NULL text → empty
-    array → the explode above emits no rows, exactly like the SQL
-    path's NULL propagation."""
+    array → the explode above emits no rows, exactly like the oracle's
+    NULL propagation."""
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
@@ -1403,65 +1269,6 @@ def _winnow_packed_arrow(
         return pd.Series(out)
 
     return _mins.asNondeterministic()
-
-
-def _winnow_fingerprints_sql(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_size: int = 3,
-    window: int = 4,
-) -> DataFrame:
-    """The original all-SQL winnowing kernel (packed-key window minima via
-    interpreted array HOFs) — the relational reference the DuckDB oracle
-    was derived from; the Arrow kernel is pinned row-identical to it."""
-    w = int(window)
-    if w < 1:
-        raise ValueError(f"window must be >= 1, got {window}")
-    sh = word_shingles(tokens(F.col(text_col)), shingle_size)
-    packed = F.transform(
-        sh,
-        lambda s, i: (portable_hash60(s) % WINNOW_HASH_MOD) * WINNOW_POS_MOD
-        + (F.lit(WINNOW_POS_MOD - 1) - i),
-    )
-    base = _hashed_barrier(df, id_col, packed)
-    n_raw = F.size(F.col("__h"))
-    # runtime guard for the packed-key envelope: > 2^20 shingles would
-    # drive the position complement negative and corrupt every window
-    # min for the doc — fail the job with the doc id instead
-    n = F.when(
-        n_raw > F.lit(WINNOW_POS_MOD),
-        F.raise_error(
-            F.concat(
-                F.lit("winnow_fingerprints: document "),
-                F.col(id_col).cast("string"),
-                F.lit(
-                    f" has more than {WINNOW_POS_MOD} shingles — split it "
-                    "upstream (operators/chunking.py) before fingerprinting"
-                ),
-            )
-        ).cast("int"),
-    ).otherwise(n_raw)
-    mins = (
-        F.when(n == 0, F.array().cast("array<long>"))
-        .when(n < w, F.array(F.array_min(F.col("__h"))))
-        .otherwise(
-            F.transform(
-                F.sequence(F.lit(1), n - F.lit(w - 1)),
-                lambda i: F.array_min(F.slice(F.col("__h"), i, w)),
-            )
-        )
-    )
-    fps = base.select(
-        F.col(id_col), F.explode(F.array_distinct(mins)).alias("__p")
-    )
-    return fps.select(
-        F.col(id_col),
-        F.expr(f"__p DIV {WINNOW_POS_MOD}").alias("fp_hash"),
-        (F.lit(WINNOW_POS_MOD - 1) - F.col("__p") % WINNOW_POS_MOD)
-        .cast("int")
-        .alias("fp_pos"),
-    )
 
 
 def winnow_shared_pairs(
@@ -1754,10 +1561,11 @@ def ngram_containment_pairs(
 def _gram_hash60s_arrow(k: int):
     """Arrow gram-hash kernel factory: text → array of 60-bit md5 hashes
     of its word ``k``-grams, position-ordered (index i = gram starting at
-    token i). Twin of ``transform(word_shingles(tokens(text), k),
+    token i). Same values as ``transform(word_shingles(tokens(text), k),
     portable_hash60)`` — NULL text returns NULL (the posexplode consumer
-    drops the row, exactly like the SQL NULL propagation); empty/short
-    docs return an empty array. Pinned bit-identical by
+    drops the row, exactly like the oracle's NULL propagation);
+    empty/short docs return an empty array. Pinned bit-identical to the
+    ``_SQL_GRAMS5`` DuckDB oracle fragment by
     ``tests/test_dedup.py::test_arrow_gram_hashes_bit_identical``."""
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
@@ -1779,15 +1587,6 @@ def _gram_hash60s_arrow(k: int):
         )
 
     return _grams
-
-
-def _gram_hash60s_sql(text_col: str, k: int) -> Column:
-    """The original all-SQL gram-hash expression — the relational
-    reference the DuckDB oracles were derived from; the Arrow kernel is
-    pinned bit-identical to it."""
-    return F.transform(
-        word_shingles(tokens(F.col(text_col)), k), portable_hash60
-    )
 
 
 def substring_dup_spans(
@@ -1837,7 +1636,7 @@ def substring_dup_spans(
     toks = tokens(F.col(text_col))
     # r11: gram hashing runs in one Arrow pandas UDF (guide §4.2) —
     # hashlib md5 per k-gram replaces the interpreted HOF chain; pinned
-    # bit-identical to the SQL expression (kept as _gram_hash60s_sql) by
+    # bit-identical to the DuckDB oracle's gram hashes by
     # tests/test_dedup.py::test_arrow_gram_hashes_bit_identical.
     grams = _gram_hash60s_arrow(k)(F.col(text_col))
     # the per-doc census base is a PURE MAP over the corpus — carrying

@@ -42,19 +42,18 @@ from agol_pandas_spark.functions.vectors import cosine_similarity
 VSCALE = 1_000_000_000  # 10^-9 quantization of per-element products
 
 
-# -- Arrow/numpy kernels, bit-identical to the scaled-integer HOFs ------------
+# -- Arrow/numpy kernels, bit-identical to the DuckDB oracles ----------------
 #
 # The interpreted HOF lambdas below (`_dot_scaled`, `_l2_scaled`) don't
 # codegen and dominate index-BUILD cost; the hot build stages
-# (:func:`assign_to_pivots` n_cells=1, :func:`pq_encode`) therefore default
-# to an Arrow-batched numpy path computing the SAME scaled-integer
-# arithmetic: elementwise double products (deterministic IEEE), ties-away
-# rounding reproduced exactly (see :func:`_np_round_away`), int64 sums
-# (order-independent by construction — the whole point of the integer
-# fixed-point design), and the same final float divisions. Results are
-# bit-identical to the HOF path and to the DuckDB oracle; the SQL path
-# stays available via ``method="sql"`` for environments without Python
-# workers.
+# (:func:`assign_to_pivots`, :func:`kmeans_lite`, :func:`pq_encode`)
+# therefore run as Arrow-batched numpy kernels computing the SAME
+# scaled-integer arithmetic: elementwise double products (deterministic
+# IEEE), ties-away rounding reproduced exactly (see
+# :func:`_np_round_away`), int64 sums (order-independent by construction
+# — the whole point of the integer fixed-point design), and the same
+# final float divisions. Results are bit-identical to the HOF
+# expressions and to the DuckDB oracles.
 
 
 def _np_round_away(a: "np.ndarray") -> "np.ndarray":
@@ -222,7 +221,6 @@ def assign_to_pivots(
     corpus_vec: str = "embedding",
     pivot_vec: str = "embedding",
     n_cells: int = 1,
-    method: str = "arrow",
 ) -> DataFrame:
     """IVF assignment: each vector joins its ``n_cells`` nearest pivots
     (max cosine, ties → smallest pivot id). Pivots are broadcast; one
@@ -230,92 +228,23 @@ def assign_to_pivots(
     (vector, cell); ``n_cells=1`` is the build-side assignment,
     ``n_cells=nprobe`` is the query-side multi-probe expansion.
 
-    ``method="arrow"`` (default, n_cells=1 only): the build-side argmin
-    runs as one Arrow-batched numpy kernel — no |corpus|×|pivots| row
-    expansion, no shuffle, no interpreted HOF — with bit-identical
-    results (see the kernel notes above). ``method="sql"`` keeps the
-    pure-JVM aggregation path.
+    One Arrow-batched numpy kernel scores every pivot per vector — no
+    |corpus|×|pivots| row expansion, no shuffle, no interpreted HOF —
+    with results bit-identical to the DuckDB oracle's ``ROW_NUMBER()
+    OVER (PARTITION BY qid ORDER BY cosine DESC, cid)`` (see the kernel
+    notes above). Every corpus column passes through untouched, so an
+    unorderable payload (a MapType column) stays legal.
 
-    NULL/NaN ordering contract (all paths): a NaN cosine sorts FIRST
-    (wins, as in a descending sort), a NULL cosine — zero-norm vector or
-    pivot, Spark's divide-by-zero — sorts LAST (loses); if every cosine
-    is NULL the smallest pivot id wins."""
-    if method == "arrow":
-        if n_cells == 1:
-            return _assign_cells_arrow(
-                corpus, pivots, corpus_id, pivot_id, corpus_vec, pivot_vec
-            )
-        return _assign_topn_cells_arrow(
-            corpus, pivots, corpus_id, pivot_id, corpus_vec, pivot_vec,
-            n_cells,
-        )
-    p = pivots.select(
-        F.col(pivot_id).alias("__pid"),
-        F.col(pivot_vec).alias("__pvec"),
-        _norm_exact(F.col(pivot_vec)).alias("__pnorm"),
-    )
-    scored = (
-        corpus.withColumn("__vnorm", _norm_exact(F.col(corpus_vec)))
-        .crossJoin(F.broadcast(p))
-        .withColumn(
-            "__pcos",
-            # try_divide: a zero-norm vector/pivot yields a NULL cosine
-            # (which loses the argmin per the ordering contract) under
-            # ANSI mode too, instead of DIVIDE_BY_ZERO aborting the job
-            F.try_divide(
-                _dot_scaled(F.col(corpus_vec), F.col("__pvec")).cast("double")
-                / F.lit(float(VSCALE)),
-                F.col("__vnorm") * F.col("__pnorm"),
-            ),
-        )
-    )
+    NULL/NaN ordering contract: a NaN cosine sorts FIRST (wins, as in a
+    descending sort), a NULL cosine — zero-norm, NULL or wrong-dimension
+    vector or pivot — sorts LAST (loses); if every cosine is NULL the
+    smallest pivot ids win."""
     if n_cells == 1:
-        # build-side assignment: argmin as ONE hash aggregation with
-        # map-side combine — the pre-shuffle |corpus|×|pivots| scored rows
-        # collapse to |corpus| per partition before moving, vs the window
-        # formulation shuffling every scored row (measured 3.3× on the
-        # IVF-PQ bench path). min_by keyed on (sort key, pivot id) keeps
-        # payload columns OUT of the ordering (a MapType payload stays
-        # legal); the key maps NaN → -inf (wins, like a desc sort) and
-        # NULL → +inf (loses, like desc NULLS LAST) so the semantics
-        # match the window path below exactly.
-        payload = [c for c in corpus.columns if c != corpus_id]
-        key = F.struct(
-            _null_last_neg(F.col("__pcos")).alias("__nc"),
-            F.col("__pid").alias("__kpid"),
+        return _assign_cells_arrow(
+            corpus, pivots, corpus_id, pivot_id, corpus_vec, pivot_vec
         )
-        best = scored.groupBy(corpus_id).agg(
-            F.min_by(
-                F.struct(
-                    *[F.col(c).alias(f"__pl_{c}") for c in payload],
-                    F.col("__pid").alias("__bpid"),
-                ),
-                key,
-            ).alias("__best")
-        )
-        return best.select(
-            F.col(corpus_id),
-            *[F.col(f"__best.__pl_{c}").alias(c) for c in payload],
-            F.col("__best.__bpid").alias("cell"),
-        )
-    w = Window.partitionBy(corpus_id).orderBy(
-        F.col("__pcos").desc(), F.col("__pid")
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= n_cells)
-        .drop("__rn", "__pvec", "__pcos", "__pnorm", "__vnorm")
-        .withColumnRenamed("__pid", "cell")
-    )
-
-
-def _null_last_neg(cos: Column) -> Column:
-    """Ascending-min sort key equivalent to ``ORDER BY cos DESC`` with
-    Spark's default NULLS LAST: −cos, with NaN → −inf (NaN sorts greatest
-    in Spark, so it wins a desc sort) and NULL → +inf (loses)."""
-    return (
-        F.when(F.isnan(cos), F.lit(float("-inf")))
-        .otherwise(F.coalesce(-cos, F.lit(float("inf"))))
+    return _assign_topn_cells_arrow(
+        corpus, pivots, corpus_id, pivot_id, corpus_vec, pivot_vec, n_cells,
     )
 
 
@@ -403,15 +332,14 @@ def _assign_topn_cells_arrow(
     pivot_rows: list | None = None,
 ) -> DataFrame:
     """Multi-probe IVF assignment (``n_cells`` nearest pivots per vector)
-    as one Arrow map + explode — the query-side twin of
-    :func:`_assign_cells_arrow`, replacing the |corpus|×|pivots|
-    crossJoin + per-vector window of the SQL path (no row expansion
-    before the top-n selection, no window shuffle, and none of the
-    interpreted-HOF cosine chains). Bit-identical ordering contract:
-    cosine desc with NaN first (wins) and NULL (zero-norm / ragged)
-    last, ties → smallest pivot id; a vector whose every cosine is NULL
-    gets the ``n_cells`` smallest pivot ids. One row per (vector, cell),
-    cells emitted in rank order exactly as the window path does."""
+    as one Arrow map + explode — the query-side counterpart of
+    :func:`_assign_cells_arrow`: no |corpus|×|pivots| row expansion
+    before the top-n selection, no per-vector window shuffle, and none
+    of the interpreted-HOF cosine chains. Ordering contract: cosine desc
+    with NaN first (wins) and NULL (zero-norm / ragged) last, ties →
+    smallest pivot id; a vector whose every cosine is NULL gets the
+    ``n_cells`` smallest pivot ids. One row per (vector, cell), cells
+    emitted in rank order."""
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
@@ -639,7 +567,7 @@ def rp_lsh_topk(
 def _kmeans_assign_udf(centroids: list[list[float]]):
     """Arrow kernel: argmin over k scaled-integer L2 distances, ties →
     lowest cluster (np.argmin returns the first minimum), bit-identical
-    to the ``dists[ci] < best`` chain of the SQL path."""
+    to the oracle's ``ORDER BY d, cluster`` in ``sim_kmeans_ivf_cells``."""
     from pyspark.sql.functions import pandas_udf
 
     C = np.asarray(centroids, dtype=np.float64)
@@ -668,7 +596,6 @@ def kmeans_lite(
     vec: str = "embedding",
     k: int = 8,
     iters: int = 3,
-    method: str = "arrow",
 ) -> tuple[list[list[float]], DataFrame]:
     """Deterministic Lloyd's k-means for IVF pivot selection.
 
@@ -704,49 +631,19 @@ def kmeans_lite(
     data.count()
     assignments = None
     for _ in range(iters):
-        if method == "arrow":
-            # one Arrow kernel computes all k scaled-int L2 distances and
-            # the argmin per batch — replaces k interpreted HOF exprs AND
-            # the k×dim literal arrays those shipped through the plan
-            assignments = data.select(
-                F.col(id_col),
-                F.col(vec),
-                _kmeans_assign_udf(centroids)(F.col(vec)).alias("__a"),
-            ).select(
-                F.col(id_col),
-                F.col(vec),
-                F.col("__a.cluster").alias("cluster"),
-                F.col("__a.sq_dist_scaled").alias("sq_dist_scaled"),
-            )
-        else:
-            # squared L2 to each centroid, scaled-int accumulated per element
-            dists = [
-                F.aggregate(
-                    F.zip_with(
-                        F.col(vec),
-                        F.array(*[F.lit(c) for c in cent]),
-                        lambda x, cx: F.round(
-                            (x.cast("double") - cx) * (x.cast("double") - cx)
-                            * F.lit(float(VSCALE))
-                        ).cast("long"),
-                    ),
-                    F.lit(0).cast("long"),
-                    lambda acc, v: acc + v,
-                )
-                for cent in centroids
-            ]
-            cluster = F.lit(0)
-            best = dists[0]
-            for ci in range(1, k):
-                cond = dists[ci] < best
-                cluster = F.when(cond, F.lit(ci)).otherwise(cluster)
-                best = F.when(cond, dists[ci]).otherwise(best)
-            assignments = data.select(
-                F.col(id_col),
-                F.col(vec),
-                cluster.alias("cluster"),
-                best.alias("sq_dist_scaled"),
-            )
+        # one Arrow kernel computes all k scaled-int L2 distances and the
+        # argmin per batch — no k interpreted HOF exprs, and no k×dim
+        # literal arrays shipped through the plan
+        assignments = data.select(
+            F.col(id_col),
+            F.col(vec),
+            _kmeans_assign_udf(centroids)(F.col(vec)).alias("__a"),
+        ).select(
+            F.col(id_col),
+            F.col(vec),
+            F.col("__a.cluster").alias("cluster"),
+            F.col("__a.sq_dist_scaled").alias("sq_dist_scaled"),
+        )
         sums = (
             assignments.select(
                 "cluster", F.posexplode(F.col(vec)).alias("pos", "x")
@@ -1220,66 +1117,21 @@ def pq_encode(
     vec: str = "embedding",
     m_subspaces: int = 4,
     dim: int = 64,
-    method: str = "arrow",
 ) -> DataFrame:
     """PQ-encode each vector to ``m_subspaces`` byte-sized codes:
     ``codes[m] = argmin_c ||v_m - cent(m,c)||²`` (ties → smallest code).
 
-    ``method="arrow"`` (default): the codebook (M*K rows — broadcast-sized
-    by contract) collects once into a (m, k, sub) matrix shipped in the
-    UDF closure; each Arrow batch computes every subspace argmin in
-    vectorized C with the exact scaled-integer arithmetic of
-    ``_l2_scaled`` — no explode, no join, no shuffle, bit-identical
-    codes. The codebook is density-validated on collect (fail-fast on
-    sparse/offset layouts). ``method="sql"`` keeps the pure-JVM shape:
-    explode to (id, m, subvector) → broadcast-join the M*K-row codebook
-    → ONE hash aggregation with an argmin-struct per subspace
-    (``min(struct(d2, code))``) assembling the code array in subspace
-    order; its only shuffle moves (id, m, d2, code) integers, never
-    vectors. Storage either way: dim floats → M small ints (the 64x
+    The codebook (M*K rows — broadcast-sized by contract) collects once
+    into a (m, k, sub) matrix shipped in the UDF closure; each Arrow
+    batch computes every (row, subspace, code) scaled-integer L2
+    distance in vectorized C and takes the per-subspace argmin (ties →
+    smallest code, the oracle's ``ORDER BY d2, code``) — no explode, no
+    join, no shuffle. Codes are bit-identical to ``_l2_scaled`` (see
+    ``_np_round_away``) and to the ``_SQL_PQ_BASE`` DuckDB oracle. The
+    codebook is density-validated on collect (fail-fast on
+    sparse/offset layouts). Storage: dim floats → M small ints (the 64x
     compression that makes a 100 TB corpus index RAM-resident).
     """
-    if method == "arrow":
-        return _pq_encode_arrow(corpus, codebook, corpus_id, vec, m_subspaces, dim)
-    sub = dim // m_subspaces
-    ms = F.explode(F.sequence(F.lit(0), F.lit(m_subspaces - 1))).alias("m")
-    pieces = corpus.select(F.col(corpus_id), F.col(vec), ms).select(
-        F.col(corpus_id),
-        "m",
-        F.slice(F.col(vec), F.col("m") * sub + 1, sub).alias("__sv"),
-    )
-    scored = pieces.join(F.broadcast(codebook), on="m").select(
-        F.col(corpus_id),
-        "m",
-        F.struct(
-            _l2_scaled(F.col("__sv"), F.col("cent")).alias("d2"),
-            F.col("code").alias("code"),
-        ).alias("__dc"),
-    )
-    best = scored.groupBy(corpus_id).agg(
-        F.array(
-            *[
-                F.min(F.when(F.col("m") == j, F.col("__dc"))).getField("code")
-                for j in range(m_subspaces)
-            ]
-        ).alias("codes")
-    )
-    return best
-
-
-def _pq_encode_arrow(
-    corpus: DataFrame,
-    codebook: DataFrame,
-    corpus_id: str,
-    vec: str,
-    m_subspaces: int,
-    dim: int,
-) -> DataFrame:
-    """Arrow-batched PQ encoding: one numpy kernel per batch computes all
-    (row, subspace, code) scaled-integer L2 distances and takes the
-    per-subspace argmin (ties → smallest code, matching the SQL
-    ``min(struct(d2, code))``). Bit-identical to ``_l2_scaled`` — see
-    ``_np_round_away``."""
     C, _ = _collect_codebook(codebook, m_subspaces)
     sub = C.shape[2]
     if sub * m_subspaces != dim:

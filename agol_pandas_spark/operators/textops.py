@@ -473,46 +473,53 @@ def gopher_quality_flags(
     max_symbol_ratio: float = 0.1,
     max_dup_2gram_frac: float = 0.5,
     carry_cols: tuple = (),
-    method: str = "arrow",
 ) -> DataFrame:
     """Gopher-style rule-based document quality filter (Rae et al. 2021,
     "Scaling Language Models" §A1.1 shape): per-document boolean rule
     flags + the conjunction, one map stage, no shuffle.
 
-    ``method="arrow"`` (default, r11): ONE Arrow pandas UDF computes all
-    six rules per batch — the text crosses the JVM↔Python boundary once
-    and is tokenized ONCE per document (guide §4.1/§4.2). The SQL shape
-    (``method="sql"``, kept as the cross-checked relational reference the
-    DuckDB oracles were derived from) re-evaluates the ``split`` token
-    subtree in every interpreted higher-order-function chain that
-    references it — five-plus tokenizations per document per pass.
-    Bit-identical by construction (integer rule arithmetic, Java-``\\s``
-    tokenizer twin), pinned by
+    Every ratio rule is evaluated in INTEGER arithmetic (cross-multiplied:
+    ``5*alpha_words >= 4*n_words`` instead of ``alpha/n >= 0.8``), so the
+    flags are bit-portable across engines — no derived-double knife edges
+    (ratio thresholds must be expressible as small rationals; the
+    defaults are). Rules:
+
+    - word count within [min_words, max_words]
+    - mean word length within [min, max] chars (as chars vs n·bound)
+    - fraction of words containing an alphabetic char >= 0.8
+    - at least ``min_stopword_hits`` English stopword occurrences
+    - '#'/'…' symbols per word <= 0.1
+    - duplicate 2-gram fraction <= 0.5 (the repetition rule)
+
+    ONE Arrow pandas UDF computes all six rules per batch (r11) — the
+    text crosses the JVM↔Python boundary once and is tokenized ONCE per
+    document (guide §4.1/§4.2). Flags are pinned to the
+    ``text_gopher_rules_filter`` DuckDB oracle by
     ``tests/test_textops_curation.py::test_arrow_gopher_bit_identical``.
+
+    ``carry_cols`` threads extra input columns (e.g. the text itself)
+    through to the output row, so a gate-then-process pipeline filters
+    in the SAME scan instead of computing flags on one scan and joining
+    them back onto a second scan of the input (r11: the join shape read
+    the corpus twice per gated pipeline).
     """
-    if method == "arrow":
-        fl = _gopher_flags_arrow(
-            min_words, max_words, min_mean_word_len, max_mean_word_len,
-            min_alpha_word_frac, min_stopword_hits, max_symbol_ratio,
-            max_dup_2gram_frac,
-        )
-        names = (
-            "n_words", "ok_word_count", "ok_mean_word_len", "ok_alpha_frac",
-            "ok_stopwords", "ok_symbol_ratio", "ok_repetition", "pass_gopher",
-        )
-        return df.select(
-            F.col(id_col),
-            *[F.col(c) for c in carry_cols],
-            fl(F.col(text_col)).alias("__g"),
-        ).select(
-            F.col(id_col),
-            *[F.col(c) for c in carry_cols],
-            *[F.col(f"__g.{n}").alias(n) for n in names],
-        )
-    return _gopher_quality_flags_sql(
-        df, id_col, text_col, min_words, max_words, min_mean_word_len,
-        max_mean_word_len, min_alpha_word_frac, min_stopword_hits,
-        max_symbol_ratio, max_dup_2gram_frac, carry_cols,
+    fl = _gopher_flags_arrow(
+        min_words, max_words, min_mean_word_len, max_mean_word_len,
+        min_alpha_word_frac, min_stopword_hits, max_symbol_ratio,
+        max_dup_2gram_frac,
+    )
+    names = (
+        "n_words", "ok_word_count", "ok_mean_word_len", "ok_alpha_frac",
+        "ok_stopwords", "ok_symbol_ratio", "ok_repetition", "pass_gopher",
+    )
+    return df.select(
+        F.col(id_col),
+        *[F.col(c) for c in carry_cols],
+        fl(F.col(text_col)).alias("__g"),
+    ).select(
+        F.col(id_col),
+        *[F.col(c) for c in carry_cols],
+        *[F.col(f"__g.{n}").alias(n) for n in names],
     )
 
 
@@ -528,13 +535,13 @@ def _gopher_flags_arrow(
 ):
     """Arrow Gopher-gate kernel factory (cached per threshold set).
 
-    NULL semantics mirror the SQL shape exactly: NULL text yields NULL
-    for every token-derived flag, ``ok_repetition`` TRUE (the SQL
-    shingle let-bind turns a NULL token array into an EMPTY shingle
-    array, so ``n2 = 0`` and the ``n2 == 0`` escape fires), and a NULL
-    conjunction. Ratio thresholds go through the same
-    ``Fraction.limit_denominator(1000)`` cross-multiplication as the SQL
-    rules, so every comparison is integer-exact on both paths.
+    NULL semantics: NULL text yields NULL for every token-derived flag,
+    ``ok_repetition`` TRUE (a NULL document has no 2-grams, so ``n2 = 0``
+    and the ``n2 == 0`` escape fires), and a NULL conjunction. The DuckDB
+    oracle agrees on every flag but ``ok_repetition``, which it leaves
+    NULL (``len(NULL)`` propagates). Ratio thresholds go through
+    ``Fraction.limit_denominator(1000)`` and are cross-multiplied, as in
+    the oracle, so every comparison is integer-exact.
     Nondeterministic marking stops optimizer duplication below inferred
     filters (guide §4.4) and blocks CollapseProject from inlining the
     struct field extractions into eight kernel copies."""
@@ -586,9 +593,9 @@ def _gopher_flags_arrow_cached(
         rows = []
         for tx in texts:
             if tx is None:
-                # SQL: every token-derived column is NULL, EXCEPT the
-                # shingle counts (let-bound through array(NULL) -> empty)
-                # so ok_repetition is TRUE and the conjunction NULL.
+                # every token-derived column is NULL, EXCEPT the 2-gram
+                # counts (a NULL document has none) so ok_repetition is
+                # TRUE and the conjunction NULL.
                 rows.append((None,) * 6 + (True, None))
                 continue
             toks = py_tokens(tx)
@@ -625,101 +632,6 @@ def _gopher_flags_arrow_cached(
         )
 
     return _flags.asNondeterministic()
-
-
-def _gopher_quality_flags_sql(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: int = 3,
-    max_mean_word_len: int = 10,
-    min_alpha_word_frac: float = 0.8,
-    min_stopword_hits: int = 2,
-    max_symbol_ratio: float = 0.1,
-    max_dup_2gram_frac: float = 0.5,
-    carry_cols: tuple = (),
-) -> DataFrame:
-    """The original all-SQL Gopher gate (the relational reference the
-    DuckDB oracles were derived from; the Arrow kernel is pinned
-    bit-identical to it): per-document boolean rule
-    flags + the conjunction, one codegen map stage, no shuffle.
-
-    Every ratio rule is evaluated in INTEGER arithmetic (cross-multiplied:
-    ``5*alpha_words >= 4*n_words`` instead of ``alpha/n >= 0.8``), so the
-    flags are bit-portable across engines — no derived-double knife edges
-    (ratio thresholds must be expressible as small rationals; the
-    defaults are). Rules:
-
-    - word count within [min_words, max_words]
-    - mean word length within [min, max] chars (as chars vs n·bound)
-    - fraction of words containing an alphabetic char >= 0.8
-    - at least ``min_stopword_hits`` English stopword occurrences
-    - '#'/'…' symbols per word <= 0.1
-    - duplicate 2-gram fraction <= 0.5 (the repetition rule)
-
-    ``carry_cols`` threads extra input columns (e.g. the text itself)
-    through to the output row, so a gate-then-process pipeline filters
-    in the SAME scan instead of computing flags on one scan and joining
-    them back onto a second scan of the input (r11: the join shape read
-    the corpus twice per gated pipeline).
-    """
-
-    def _ratio_ge(num, den, frac):  # num/den >= p/q as q*num >= p*den
-        from fractions import Fraction
-
-        f = Fraction(frac).limit_denominator(1000)
-        return (num * F.lit(f.denominator) >= den * F.lit(f.numerator))
-
-    def _ratio_le(num, den, frac):
-        from fractions import Fraction
-
-        f = Fraction(frac).limit_denominator(1000)
-        return (num * F.lit(f.denominator) <= den * F.lit(f.numerator))
-
-    toks = tokens(F.col(text_col))
-    base = df.select(
-        F.col(id_col),
-        *[F.col(c) for c in carry_cols],
-        F.size(toks).alias("__n"),
-        F.aggregate(
-            toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
-        ).alias("__chars"),
-        F.size(F.filter(toks, lambda t: t.rlike("[A-Za-z]"))).alias("__alpha"),
-        count_tokens_in(tokens(F.lower(F.col(text_col))), LANG_PROFILES["en"]).alias(
-            "__stop"
-        ),
-        (
-            F.length(text_col)
-            - F.length(F.regexp_replace(F.col(text_col), "[#…]", ""))
-        ).alias("__sym"),
-        F.size(word_shingles(toks, 2)).alias("__n2"),
-        F.size(F.array_distinct(word_shingles(toks, 2))).alias("__d2"),
-    )
-    n, chars = F.col("__n"), F.col("__chars")
-    rules = {
-        "ok_word_count": (n >= min_words) & (n <= max_words),
-        "ok_mean_word_len": (chars >= n * min_mean_word_len)
-        & (chars <= n * max_mean_word_len),
-        "ok_alpha_frac": _ratio_ge(F.col("__alpha"), n, min_alpha_word_frac),
-        "ok_stopwords": F.col("__stop") >= min_stopword_hits,
-        "ok_symbol_ratio": _ratio_le(F.col("__sym"), n, max_symbol_ratio),
-        "ok_repetition": _ratio_le(
-            F.col("__n2") - F.col("__d2"), F.col("__n2"), max_dup_2gram_frac
-        )
-        | (F.col("__n2") == 0),
-    }
-    out = base.select(
-        F.col(id_col),
-        *[F.col(c) for c in carry_cols],
-        F.col("__n").alias("n_words"),
-        *[c.alias(name) for name, c in rules.items()],
-    )
-    passed = None
-    for name in rules:
-        passed = F.col(name) if passed is None else (passed & F.col(name))
-    return out.withColumn("pass_gopher", passed)
 
 
 def chunk_token_windows(
@@ -809,7 +721,7 @@ def gated_chunk_token_windows(
     lowered stream only for documents that survive the cheaper rules —
     the gate rules short-circuit in ascending cost order, which the
     all-columns flag kernel cannot), and chunk hashes come out as small
-    integer rows. Gate semantics are the SQL shape's exactly: NULL text
+    integer rows. Gate semantics are the flag kernel's exactly: NULL text
     → NULL conjunction → dropped; ratio thresholds cross-multiplied via
     ``Fraction.limit_denominator(1000)`` so every rule is integer-exact.
 

@@ -386,6 +386,33 @@ class PagedDataSource(DataSource):
         )
 
 
+def _register_paged_source(spark: SparkSession) -> None:
+    """Register :class:`PagedDataSource` once per session: each
+    registration pickles the class and crosses py4j, and Spark warns on
+    every re-registration of a name.
+
+    Spark keeps Python data sources in the session state (a
+    ``newSession()`` starts without them) but checks a new name against
+    the ACTIVE session's, so a second session registering while the
+    active one holds ``agol_paged`` fails with DATA_SOURCE_ALREADY_EXISTS;
+    the session is made active for the registration."""
+    jss = spark._jsparkSession
+    if jss.sessionState().dataSourceManager().dataSourceExists(
+        PagedDataSource.name()
+    ):
+        return
+    jvm_session = spark._jvm.SparkSession
+    prev = jvm_session.getActiveSession()
+    jvm_session.setActiveSession(jss)
+    try:
+        spark.dataSource.register(PagedDataSource)
+    finally:
+        if prev.isDefined():
+            jvm_session.setActiveSession(prev.get())
+        else:
+            jvm_session.clearActiveSession()
+
+
 class _PagedStreamReader(SimpleDataSourceStreamReader):
     """Tail an append-only paged service as a Structured Streaming source.
 
@@ -471,7 +498,7 @@ def read_paged_stream(
     catch-up drains so a deep backlog does not pay one checkpoint commit
     per page); pair with ``trigger(availableNow=True)`` for a
     deterministic drain of the current table state."""
-    spark.dataSource.register(PagedDataSource)
+    _register_paged_source(spark)
     policy = policy or RetryPolicy()
     return (
         spark.readStream.format("agol_paged")
@@ -513,7 +540,7 @@ def read_paged(
     pages over — i.e. AFTER any server-side ``where`` carried by the
     client, BEFORE any Spark-side residual filter on the returned frame
     (same as stacking ``resultRecordCount`` on a filtered ArcGIS query)."""
-    spark.dataSource.register(PagedDataSource)
+    _register_paged_source(spark)
     # Python-datasource filter pushdown is off by default in Spark 4.1;
     # self-configure like Catalog does for TZ/NTZ invariants.
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
@@ -948,7 +975,7 @@ def write_paged(
     micro-batch) to one sink MUST pass a distinct prefix per dataset, or
     their "<partition>-<index>" keys collide and an idempotent sink
     drops data."""
-    df.sparkSession.dataSource.register(PagedDataSource)
+    _register_paged_source(df.sparkSession)
     policy = policy or RetryPolicy()
     (
         df.write.format("agol_paged")

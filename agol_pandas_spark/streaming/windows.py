@@ -59,6 +59,8 @@ def adaptive_state_partitions(spark: SparkSession, *paths: str) -> int:
             # FileSystem API; if that fails (no connector/credentials on
             # this host), fall back to the session ceiling — the
             # configured production layout, never a silent serialization.
+            # The ceiling is already the largest count this function
+            # returns, so sizing the remaining paths could not change it.
             try:
                 jvm = spark._jvm
                 jpath = jvm.org.apache.hadoop.fs.Path(p)

@@ -115,16 +115,20 @@ def sim_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "sim_ivf_cell_sizes",
-    tags=("similarity", "ann"),
-    oracle=_sql_pair_cosine(
-        """
+# exact cosine of every vector to every pivot (every 50th vector)
+_PIVOT50_COSINES = _sql_pair_cosine(
+    """
     pairs AS (
       SELECT c.vec_id AS qid, c.embedding AS qv, p.vec_id AS cid, p.embedding AS cv
       FROM embeddings c JOIN embeddings p ON p.vec_id % 50 = 0)
     """
-    )
+)
+
+
+@register(
+    "sim_ivf_cell_sizes",
+    tags=("similarity", "ann"),
+    oracle=_PIVOT50_COSINES
     + """
     , assigned AS (
       SELECT qid AS vec_id, cid AS cell,
@@ -362,14 +366,19 @@ _KM_UPDATE = """
 """
 
 
-@register(
-    "sim_kmeans_ivf_cells",
-    tags=("similarity", "kmeans", "iterative"),
-    oracle=f"""
+# both Lloyd iterations unrolled: assign2 holds the final assignment
+_KM_TWO_ITERATIONS = f"""
     WITH {_KM_SEEDS.strip()},
     {_km_assign("seeds", "assign1").strip()},
     {_KM_UPDATE.strip()},
-    {_km_assign("cent1", "assign2").strip()}
+    {_km_assign("cent1", "assign2").strip()}"""
+
+
+@register(
+    "sim_kmeans_ivf_cells",
+    tags=("similarity", "kmeans", "iterative"),
+    oracle=_KM_TWO_ITERATIONS
+    + """
     SELECT cluster, CAST(COUNT(*) AS BIGINT) AS n_vecs,
            MIN(vec_id) AS representative
     FROM assign2 GROUP BY cluster

@@ -837,10 +837,33 @@ _SQL_G2 = (
 )
 
 
-@register(
-    "text_gopher_rules_filter",
-    tags=("text", "quality", "filter"),
-    oracle=f"""
+def gopher_oracle_sql(
+    min_words: int = 50,
+    max_words: int = 100_000,
+    min_mean_word_len: int = 3,
+    max_mean_word_len: int = 10,
+    min_alpha_word_frac: float = 0.8,
+    min_stopword_hits: int = 2,
+    max_symbol_ratio: float = 0.1,
+    max_dup_2gram_frac: float = 0.5,
+) -> str:
+    """DuckDB oracle of ``textops.gopher_quality_flags`` at the given
+    thresholds (same parameters and defaults). Ratio thresholds become
+    ``p/q`` via ``Fraction.limit_denominator(1000)`` and are
+    cross-multiplied, as in the operator."""
+    from fractions import Fraction
+
+    af, sf, rf = (
+        Fraction(x).limit_denominator(1000)
+        for x in (min_alpha_word_frac, max_symbol_ratio, max_dup_2gram_frac)
+    )
+    wc = f"(n >= {min_words} AND n <= {max_words})"
+    ml = f"(chars >= n * {min_mean_word_len} AND chars <= n * {max_mean_word_len})"
+    al = f"(alpha * {af.denominator} >= n * {af.numerator})"
+    sw = f"(stop >= {min_stopword_hits})"
+    sr = f"(sym * {sf.denominator} <= n * {sf.numerator})"
+    rp = f"((n2 - d2) * {rf.denominator} <= n2 * {rf.numerator} OR n2 = 0)"
+    return f"""
     WITH t AS (
       SELECT doc_id, text,
              {SQL_TOKS.format(src='text')} AS toks,
@@ -859,20 +882,26 @@ _SQL_G2 = (
       FROM t)
     SELECT doc_id,
            CAST(n AS INTEGER) AS n_words,
-           (n >= 50 AND n <= 100000) AS ok_word_count,
-           (chars >= n * 3 AND chars <= n * 10) AS ok_mean_word_len,
-           (alpha * 5 >= n * 4) AS ok_alpha_frac,
-           (stop >= 2) AS ok_stopwords,
-           (sym * 10 <= n * 1) AS ok_symbol_ratio,
-           ((n2 - d2) * 2 <= n2 * 1 OR n2 = 0) AS ok_repetition,
-           ((n >= 50 AND n <= 100000)
-            AND (chars >= n * 3 AND chars <= n * 10)
-            AND (alpha * 5 >= n * 4)
-            AND (stop >= 2)
-            AND (sym * 10 <= n * 1)
-            AND ((n2 - d2) * 2 <= n2 * 1 OR n2 = 0)) AS pass_gopher
+           {wc} AS ok_word_count,
+           {ml} AS ok_mean_word_len,
+           {al} AS ok_alpha_frac,
+           {sw} AS ok_stopwords,
+           {sr} AS ok_symbol_ratio,
+           {rp} AS ok_repetition,
+           ({wc}
+            AND {ml}
+            AND {al}
+            AND {sw}
+            AND {sr}
+            AND {rp}) AS pass_gopher
     FROM base
-    """,
+    """
+
+
+@register(
+    "text_gopher_rules_filter",
+    tags=("text", "quality", "filter"),
+    oracle=gopher_oracle_sql(),
 )
 def text_gopher_rules_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style rule-based quality gate (word-count bounds, mean word

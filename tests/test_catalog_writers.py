@@ -152,6 +152,19 @@ def test_ns_cols_cache_invalidated_on_rewrite(spark, tmp_path):
     assert [f.name for f in cat.table("t").schema] == ["k"]
 
 
+def test_table_cache_keys_on_commit_not_mtime(spark, out_cat):
+    """Two snapshots with the same directory mtime (a coarse-timestamp
+    filesystem) must not share a cached DataFrame: the cached plan holds
+    the old snapshot's file listing, whose files the overwrite deleted."""
+    out_cat.write(spark.range(0, 5), "t")
+    p = out_cat.path("t")
+    old = os.stat(p).st_mtime_ns
+    assert out_cat.table("t").count() == 5
+    out_cat.write(spark.range(0, 7), "t", mode="overwrite")
+    os.utime(p, ns=(old, old))
+    assert out_cat.table("t").count() == 7
+
+
 def test_row_count_metadata_only(spark, sf_dir):
     from agol_pandas_spark.catalog import Catalog
 

@@ -1177,59 +1177,89 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _duck_rows(docs, sql):
+    """Rows of DuckDB ``sql`` run over ``docs`` registered as
+    ``documents`` — the registry oracles' view of the same input."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.register("documents", docs.toArrow())
+    return sorted(con.execute(sql).fetchall())
+
+
+def _oracle(name):
+    from agol_pandas_spark.workload import load_all
+
+    return load_all()[name].oracle
+
+
 def test_arrow_minhash_bit_identical(spark, sf_dir):
     """r11 optimization guard: the Arrow MinHash kernel (hashlib md5 +
-    numpy permutation mins) must reproduce the SQL reference shape
-    bit-for-bit, including NULL/empty/short/NBSP texts (sentinel P)."""
+    numpy permutation mins) must reproduce the ``dedup_minhash_signatures``
+    DuckDB oracle bit-for-bit, including NULL/empty/short/NBSP texts
+    (sentinel P)."""
     from agol_pandas_spark.operators import dedup
 
     docs = _adversarial_docs(spark, sf_dir)
-    assert _rows(dedup.minhash_signatures(docs, "doc_id", "text")) == _rows(
-        dedup._minhash_signatures_sql(docs, "doc_id", "text")
-    )
+    got = _rows(dedup.minhash_signatures(docs, "doc_id", "text"))
+    assert got == _duck_rows(docs, _oracle("dedup_minhash_signatures"))
+    sentinel = (dedup.MINHASH_P,) * len(dedup.MINHASH_PARAMS)
+    by_id = {r[0]: r[1:] for r in got}
+    for doc_id in (9001, 9002, 9003, 9004, 9005):
+        assert by_id[doc_id] == sentinel, doc_id
 
 
 def test_arrow_simhash_bit_identical(spark, sf_dir):
     """r11 optimization guard: the Arrow SimHash kernel (one numpy
     bit-matrix majority vote per doc, no shuffle) must reproduce the
-    packed-lane SQL aggregation bit-for-bit (zero-token docs → 0)."""
+    ``dedup_simhash`` DuckDB oracle bit-for-bit (zero-token docs → 0)."""
     from agol_pandas_spark.operators import dedup
 
     docs = _adversarial_docs(spark, sf_dir)
-    assert _rows(dedup.simhash(docs, "doc_id", "text")) == _rows(
-        dedup._simhash_sql(docs, "doc_id", "text")
-    )
+    got = _rows(dedup.simhash(docs, "doc_id", "text"))
+    assert got == _duck_rows(docs, _oracle("dedup_simhash"))
+    by_id = dict(got)
+    assert by_id[9001] == by_id[9002] == by_id[9003] == 0
 
 
 def test_arrow_winnow_bit_identical(spark, sf_dir):
     """r11 optimization guard: the Arrow winnowing kernel (numpy sliding
     window minima over the packed hash/position keys) must emit exactly
-    the SQL reference's fingerprint rows (NULL text → no rows; n <
-    window → single global min; rightmost tie-break via the packed
-    complement)."""
+    the ``dedup_winnow_fingerprints`` DuckDB oracle's fingerprint rows
+    (NULL/empty text → no rows; n < window → single global min;
+    rightmost tie-break via the packed complement)."""
     from agol_pandas_spark.operators import dedup
 
     docs = _adversarial_docs(spark, sf_dir)
-    assert _rows(dedup.winnow_fingerprints(docs, "doc_id", "text")) == _rows(
-        dedup._winnow_fingerprints_sql(docs, "doc_id", "text")
-    )
+    got = _rows(dedup.winnow_fingerprints(docs, "doc_id", "text"))
+    assert got == _duck_rows(docs, _oracle("dedup_winnow_fingerprints"))
+    assert not {r[0] for r in got} & {9001, 9002, 9003, 9004, 9005}
 
 
 def test_arrow_gram_hashes_bit_identical(spark, sf_dir):
     """r11 optimization guard: the Arrow gram-hash kernel behind the
-    ExactSubstr census must yield the SQL expression's exact
-    (position, hash) stream after posexplode (NULL text drops the row
-    on both paths)."""
+    ExactSubstr census must yield the DuckDB oracle's exact (position,
+    hash) stream — ``_SQL_GRAMS5`` hashed with ``SQL_HASH60`` — after
+    posexplode (NULL text drops the row on both sides)."""
     from pyspark.sql import functions as F
 
     from agol_pandas_spark.operators import dedup
+    from agol_pandas_spark.workload.dedup_queries import _SQL_GRAMS5
+    from agol_pandas_spark.workload.text_queries import SQL_HASH60, SQL_TOKS
 
     docs = _adversarial_docs(spark, sf_dir)
     arrow = docs.select(
         "doc_id",
         F.posexplode(dedup._gram_hash60s_arrow(5)(F.col("text"))),
     )
-    sql = docs.select(
-        "doc_id", F.posexplode(dedup._gram_hash60s_sql("text", 5))
-    )
-    assert _rows(arrow) == _rows(sql)
+    sql = f"""
+    WITH t AS (SELECT doc_id, {SQL_TOKS.format(src='text')} AS t FROM documents),
+    g AS (SELECT doc_id, {_SQL_GRAMS5.format(toks='t')} AS gs FROM t),
+    occ AS (SELECT doc_id, unnest(list_transform(gs, (s, i) ->
+              struct_pack(pos := i, h := {SQL_HASH60.format(expr='s')}))) AS u
+            FROM g)
+    SELECT doc_id, CAST(u.pos - 1 AS INTEGER) AS pos, u.h AS col FROM occ
+    """
+    got = _rows(arrow)
+    assert got == _duck_rows(docs, sql)
+    assert not {r[0] for r in got} & {9001, 9002, 9003, 9004, 9005}

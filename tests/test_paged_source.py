@@ -73,6 +73,35 @@ def test_pagination_exactly_once(spark):
     assert got == list(range(95))  # no dup, no drop across page boundaries
 
 
+def test_source_registered_once_per_session(spark, monkeypatch):
+    """``agol_paged`` is registered once per session: a second read on the
+    same session skips the registration. Spark keeps Python data sources
+    in the session state, so a new session registers its own and reads —
+    also while the active session already holds the name."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    calls = []
+    real = DataSourceRegistration.register
+
+    def counting(self, data_source):
+        calls.append(self.sparkSession)
+        return real(self, data_source)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", counting)
+    read_paged(spark, MemoryClient(_rows(3)), page_size=5, policy=FAST_RETRY)
+    calls.clear()
+    s1 = spark.newSession()
+    for _ in range(2):
+        df = read_paged(s1, MemoryClient(_rows(12)), page_size=5, policy=FAST_RETRY)
+    assert calls == [s1]
+    assert sorted(r["id"] for r in df.collect()) == list(range(12))
+
+    s2 = s1.newSession()
+    df = read_paged(s2, MemoryClient(_rows(12)), page_size=5, policy=FAST_RETRY)
+    assert calls == [s1, s2]
+    assert sorted(r["id"] for r in df.collect()) == list(range(12))
+
+
 def test_schema_fidelity(spark):
     rows = _rows(20)
     df = read_paged(spark, MemoryClient(rows), page_size=7, policy=FAST_RETRY)

@@ -323,10 +323,37 @@ def test_pq_with_kmeans_trained_codebook(emb, spark):
     seeded = pq_codebook_from_seeds(emb, "vec_id")
     assert total_qerror(trained) <= total_qerror(seeded)
 
-def test_assign_arrow_matches_sql_path(emb, spark):
-    """The Arrow build-side assignment is bit-identical to the pure-SQL
-    aggregation path — same scaled-integer arithmetic, same tie and
-    NULL ordering — including zero-norm (NULL-cosine) corpus vectors."""
+def _duck_embeddings(sf_dir):
+    """DuckDB connection with the ``embeddings`` table the registry
+    oracles read."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/embeddings.parquet')"
+    )
+    return con
+
+
+def _oracle_pivot_cells(sf_dir, n_cells):
+    """(vec_id, cell) for each vector's ``n_cells`` nearest pivots (every
+    50th vector) — the ``sim_ivf_cell_sizes`` oracle's ranking."""
+    from agol_pandas_spark.workload.similarity_queries import _PIVOT50_COSINES
+
+    sql = _PIVOT50_COSINES + f"""
+    SELECT qid, cid FROM cosines
+    QUALIFY ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, cid)
+            <= {int(n_cells)}
+    """
+    return set(_duck_embeddings(sf_dir).execute(sql).fetchall())
+
+
+def test_assign_arrow_matches_sql_path(emb, spark, sf_dir):
+    """The Arrow build-side assignment is bit-identical to the DuckDB
+    oracle's nearest-pivot ranking — same scaled-integer arithmetic, same
+    tie order — and a zero-norm (NULL-cosine) vector lands in the
+    smallest pivot's cell."""
     from agol_pandas_spark.operators.similarity import assign_to_pivots
 
     pivots = emb.filter(F.col("vec_id") % 50 == 0).select(
@@ -334,33 +361,25 @@ def test_assign_arrow_matches_sql_path(emb, spark):
     )
     dim = len(emb.first()["embedding"])
     # add a zero-norm vector: its cosine to EVERY pivot is NULL (x/0),
-    # so it must land in the smallest pivot's cell on both paths
+    # so it must land in the smallest pivot's cell
     zero = spark.createDataFrame(
         [(99999, [0.0] * dim, 0)], "vec_id long, embedding array<float>, label int"
     )
     corpus = emb.unionByName(zero)
     a = {
         (r["vec_id"], r["cell"])
-        for r in assign_to_pivots(
-            corpus, pivots, "vec_id", "pivot_id", method="arrow"
-        ).collect()
+        for r in assign_to_pivots(corpus, pivots, "vec_id", "pivot_id").collect()
     }
-    s = {
-        (r["vec_id"], r["cell"])
-        for r in assign_to_pivots(
-            corpus, pivots, "vec_id", "pivot_id", method="sql"
-        ).collect()
-    }
-    assert a == s
+    assert {t for t in a if t[0] != 99999} == _oracle_pivot_cells(sf_dir, 1)
     assert (99999, 0) in a  # NULL cosines lose; smallest pivot id wins
 
 
-def test_assign_topn_arrow_matches_sql_path(emb, spark):
-    """The Arrow multi-probe assignment (n_cells > 1) is bit-identical
-    to the crossJoin+window SQL path — same scaled-integer cosine, same
-    tie order (smallest pivot id), NaN-first / NULL-last ordering — for
-    zero-norm, NULL, and ragged (wrong-dim) vectors, and when n_cells
-    exceeds the pivot count (all cells emitted)."""
+def test_assign_topn_arrow_matches_sql_path(emb, spark, sf_dir):
+    """The Arrow multi-probe assignment (n_cells > 1) is bit-identical to
+    the DuckDB oracle's ``ROW_NUMBER() ... <= n_cells`` ranking — same
+    scaled-integer cosine, same tie order (smallest pivot id). Zero-norm,
+    NULL and ragged (wrong-dim) vectors take the n smallest pivot ids,
+    and n_cells above the pivot count emits every cell."""
     from agol_pandas_spark.operators.similarity import assign_to_pivots
 
     pivots = emb.filter(F.col("vec_id") % 50 == 0).select(
@@ -375,35 +394,31 @@ def test_assign_topn_arrow_matches_sql_path(emb, spark):
         ],
         "vec_id long, embedding array<float>, label int",
     )
+    adv_ids = {99999, 99998, 99997}
     corpus = emb.unionByName(adv)
-    results = {}
+    pids = sorted(r["pivot_id"] for r in pivots.collect())
+    vids = [r["vec_id"] for r in emb.select("vec_id").collect()]
     for n in (3, 1000):
-        a = {
-            (r["vec_id"], r["cell"])
-            for r in assign_to_pivots(
-                corpus, pivots, "vec_id", "pivot_id",
-                n_cells=n, method="arrow",
-            ).collect()
-        }
-        s = {
-            (r["vec_id"], r["cell"])
-            for r in assign_to_pivots(
-                corpus, pivots, "vec_id", "pivot_id",
-                n_cells=n, method="sql",
-            ).collect()
-        }
-        assert a == s, f"n_cells={n}"
-        results[n] = a
-    # NULL-cosine vectors (zero-norm / NULL / ragged) take the n
-    # smallest pivot ids
-    pid3 = sorted(r["pivot_id"] for r in pivots.collect())[:3]
-    for vid in (99999, 99998, 99997):
-        assert {(vid, p) for p in pid3} <= results[3]
+        got = assign_to_pivots(
+            corpus, pivots, "vec_id", "pivot_id", n_cells=n
+        ).collect()
+        a = {(r["vec_id"], r["cell"]) for r in got}
+        assert len(got) == len(a), f"n_cells={n}: duplicate cells"
+        assert {t for t in a if t[0] not in adv_ids} == _oracle_pivot_cells(
+            sf_dir, n
+        ), f"n_cells={n}"
+        # NULL-cosine vectors (zero-norm / NULL / ragged) take the n
+        # smallest pivot ids
+        for vid in adv_ids:
+            assert {c for v, c in a if v == vid} == set(pids[:n]), (n, vid)
+    # n_cells above the pivot count: every vector gets every cell
+    assert len(got) == (len(vids) + len(adv_ids)) * len(pids)
+    assert a == {(v, p) for v in [*vids, *adv_ids] for p in pids}
 
 
 def test_assign_sql_path_allows_map_payload(emb, spark):
-    """min_by keys the argmin on (cosine, pivot id) only, so unorderable
-    payload columns (MapType) pass through the SQL path."""
+    """The assignment keys the argmin on (cosine, pivot id) only, so
+    unorderable payload columns (MapType) pass through."""
     from agol_pandas_spark.operators.similarity import assign_to_pivots
 
     pivots = emb.filter(F.col("vec_id") % 100 == 0).select(
@@ -412,23 +427,42 @@ def test_assign_sql_path_allows_map_payload(emb, spark):
     corpus = emb.limit(20).withColumn(
         "meta", F.create_map(F.lit("k"), F.col("vec_id").cast("string"))
     )
-    got = assign_to_pivots(corpus, pivots, "vec_id", "pivot_id", method="sql")
+    got = assign_to_pivots(corpus, pivots, "vec_id", "pivot_id")
     rows = got.collect()
     assert len(rows) == 20
-    assert all(r["meta"] is not None for r in rows)
+    assert all(r["meta"] == {"k": str(r["vec_id"])} for r in rows)
+    assert all(r["cell"] is not None for r in rows)
 
 
-def test_pq_encode_arrow_matches_sql(emb):
+def test_pq_encode_arrow_matches_sql(emb, sf_dir):
+    """PQ codes are bit-identical to the ``_SQL_PQ_BASE`` DuckDB oracle,
+    whose seeded codebook equals the one the engine encodes against."""
     from agol_pandas_spark.operators.similarity import (
         pq_codebook_from_seeds,
         pq_encode,
     )
+    from agol_pandas_spark.workload.similarity_queries import _SQL_PQ_BASE
 
     cb = pq_codebook_from_seeds(emb, "vec_id")
     a = {(r["vec_id"], tuple(r["codes"]))
-         for r in pq_encode(emb, cb, "vec_id", method="arrow").collect()}
-    s = {(r["vec_id"], tuple(r["codes"]))
-         for r in pq_encode(emb, cb, "vec_id", method="sql").collect()}
+         for r in pq_encode(emb, cb, "vec_id").collect()}
+    con = _duck_embeddings(sf_dir)
+    con.register("engine_cb", cb.toArrow())
+    cb_diff = con.execute(
+        "WITH " + _SQL_PQ_BASE + """
+        SELECT count(*) FROM cb FULL JOIN engine_cb e USING (m, code)
+        WHERE cb.cent IS DISTINCT FROM e.cent
+        """
+    ).fetchone()[0]
+    assert cb_diff == 0
+    assert con.execute("SELECT count(*) FROM engine_cb").fetchone()[0] == 32
+    s = {
+        (vid, tuple(codes))
+        for vid, codes in con.execute(
+            "WITH " + _SQL_PQ_BASE
+            + "SELECT vec_id, list(code ORDER BY m) FROM codes GROUP BY vec_id"
+        ).fetchall()
+    }
     assert a == s
 
 
@@ -461,17 +495,51 @@ def test_sparse_codebook_fails_fast(emb, spark):
         pq_adc_topk(queries, enc, cb, "query_id", "vec_id", k_codes=16).collect()
 
 
-def test_kmeans_arrow_matches_sql(emb):
-    """Arrow and SQL Lloyd iterations produce identical centroids and
-    assignments (same scaled-int distance arithmetic, same tie rule)."""
+def test_kmeans_arrow_matches_sql(emb, sf_dir):
+    """Two Arrow Lloyd iterations at k=8 produce the assignments and
+    scaled distances of the ``sim_kmeans_ivf_cells`` oracle's two unrolled
+    iterations, and the centroids of one more update step in the same
+    exact arithmetic (same seeds, same tie rule)."""
     from agol_pandas_spark.operators.similarity import kmeans_lite
+    from agol_pandas_spark.workload.similarity_queries import (
+        _KM_TWO_ITERATIONS as ctes,
+    )
 
-    ca, aa = kmeans_lite(emb, "vec_id", k=4, iters=2, method="arrow")
-    cs, as_ = kmeans_lite(emb, "vec_id", k=4, iters=2, method="sql")
-    assert ca == cs
+    ca, aa = kmeans_lite(emb, "vec_id", k=8, iters=2)
+    con = _duck_embeddings(sf_dir)
+    rows_s = set(
+        con.execute(
+            ctes
+            + """
+        SELECT a.vec_id, CAST(a.cluster AS INTEGER), d.d
+        FROM assign2 a JOIN assign2_d d USING (vec_id, cluster)
+        """
+        ).fetchall()
+    )
     rows_a = {(r["vec_id"], r["cluster"], r["sq_dist_scaled"]) for r in aa.collect()}
-    rows_s = {(r["vec_id"], r["cluster"], r["sq_dist_scaled"]) for r in as_.collect()}
     assert rows_a == rows_s
+    # the centroid update after iteration 2 (empty clusters keep cent1)
+    cs = con.execute(
+        ctes
+        + """
+        , upd2 AS (
+          SELECT a.cluster, t.pos,
+                 (CAST(SUM(CAST(round(t.x * 1000000000.0) AS BIGINT)) AS DOUBLE)
+                  / 1000000000.0) / COUNT(*) AS c
+          FROM assign2 a
+          JOIN (SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
+                       CAST(unnest(embedding) AS DOUBLE) AS x
+                FROM embeddings) t USING (vec_id)
+          GROUP BY a.cluster, t.pos)
+        SELECT s.cluster, coalesce(u.cvec, s.cvec)
+        FROM cent1 s
+        LEFT JOIN (SELECT cluster, list(c ORDER BY pos) AS cvec
+                   FROM upd2 GROUP BY cluster) u USING (cluster)
+        ORDER BY s.cluster
+        """
+    ).fetchall()
+    assert [r[0] for r in cs] == list(range(8))
+    assert ca == [list(r[1]) for r in cs]
 
 
 def test_round_away_kernel_three_way_agreement(spark):

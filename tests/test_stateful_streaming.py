@@ -601,3 +601,9 @@ def test_adaptive_state_partitions_local_and_remote(spark, tmp_path):
     )
     # file:// URIs still size locally
     assert adaptive_state_partitions(spark, f"file://{d}") == 1
+    # a small local dir beside an unreachable remote one still gives the
+    # ceiling: the unsized remote bytes could need every partition
+    assert (
+        adaptive_state_partitions(spark, str(d), "s3a://bucket/landing")
+        == ceiling
+    )

@@ -235,17 +235,29 @@ def test_gopher_flags_rules(spark):
 
 def test_arrow_gopher_bit_identical(spark, sf_dir):
     """r11 optimization guard: the Arrow Gopher-gate kernel (one
-    tokenization per doc, one boundary crossing) must reproduce the SQL
-    rule shape flag-for-flag, including the NULL-text semantics (every
-    token-derived flag NULL, ok_repetition TRUE via the empty shingle
-    array, conjunction NULL) and carry_cols threading."""
-    from pyspark.sql import functions as F
+    tokenization per doc, one boundary crossing) must reproduce the
+    ``text_gopher_rules_filter`` DuckDB oracle flag-for-flag, at the
+    default and at non-default thresholds, and thread carry_cols.
+
+    The NULL-text row is pinned literally: every token-derived flag NULL,
+    ok_repetition TRUE (no 2-grams, so the ``n2 == 0`` escape fires) and
+    the conjunction NULL. DuckDB's ``len(NULL)`` propagates into the
+    oracle's repetition rule, so there ok_repetition is NULL instead."""
+    import hashlib
+
+    import duckdb
     from pyspark.sql import types as T
 
     from agol_pandas_spark.catalog import Catalog
-    from agol_pandas_spark.operators.textops import (
-        _gopher_quality_flags_sql,
-        gopher_quality_flags,
+    from agol_pandas_spark.operators.textops import gopher_quality_flags
+    from agol_pandas_spark.workload import load_all
+    from agol_pandas_spark.workload.text_queries import gopher_oracle_sql
+
+    # the helper renders the registry oracle byte-for-byte
+    oracle = load_all()["text_gopher_rules_filter"].oracle
+    assert oracle == gopher_oracle_sql()
+    assert hashlib.sha256(oracle.encode()).hexdigest() == (
+        "63f8438a9747a90e04fe98b4a827838f08a8e2428cfaa36e4518c8caa5ffe70a"
     )
 
     docs = Catalog(spark, sf_dir).table("documents").select("doc_id", "text")
@@ -266,30 +278,43 @@ def test_arrow_gopher_bit_identical(spark, sf_dir):
         ),
     )
     both = docs.unionByName(extra)
+    con = duckdb.connect()
+    con.register("documents", both.toArrow())
 
-    def rows(df):
-        return sorted(
-            (tuple(r) for r in df.collect()),
-            key=lambda t: (t[0] is None, t[0]),
-        )
+    def split_null_row(rows):
+        rest = sorted(r for r in rows if r[0] != 9001)
+        (null_row,) = [r for r in rows if r[0] == 9001]
+        return rest, null_row
+
+    engine_null = (9001, None, None, None, None, None, None, True, None)
 
     arrow = gopher_quality_flags(both, "doc_id", "text", carry_cols=("text",))
-    sql = _gopher_quality_flags_sql(both, "doc_id", "text", carry_cols=("text",))
-    assert arrow.columns == sql.columns
-    assert rows(arrow) == rows(sql)
+    assert arrow.columns == [
+        "doc_id", "text", "n_words", "ok_word_count", "ok_mean_word_len",
+        "ok_alpha_frac", "ok_stopwords", "ok_symbol_ratio", "ok_repetition",
+        "pass_gopher",
+    ]
+    got = arrow.collect()
+    assert sorted((r["doc_id"], r["text"]) for r in got) == sorted(
+        tuple(r) for r in both.collect()
+    )
+    a_rest, a_null = split_null_row([(r[0], *r[2:]) for r in got])
+    d_rest, d_null = split_null_row(con.execute(oracle).fetchall())
+    assert a_rest == d_rest
+    assert a_null == engine_null
+    assert d_null[:7] + d_null[8:] == engine_null[:7] + engine_null[8:]
+    assert d_null[7] is None  # DuckDB: ok_repetition NULL on NULL text
 
     # non-default thresholds exercise the Fraction cross-multiplication
-    a2 = gopher_quality_flags(
-        both, "doc_id", "text",
+    params = dict(
         min_words=5, min_alpha_word_frac=0.6, max_symbol_ratio=0.25,
         max_dup_2gram_frac=0.75,
     )
-    s2 = _gopher_quality_flags_sql(
-        both, "doc_id", "text",
-        min_words=5, min_alpha_word_frac=0.6, max_symbol_ratio=0.25,
-        max_dup_2gram_frac=0.75,
-    )
-    assert rows(a2) == rows(s2)
+    a2 = gopher_quality_flags(both, "doc_id", "text", **params).collect()
+    a2_rest, a2_null = split_null_row([tuple(r) for r in a2])
+    d2_rest, _ = split_null_row(con.execute(gopher_oracle_sql(**params)).fetchall())
+    assert a2_rest == d2_rest
+    assert a2_null == engine_null
 
 
 def test_chunk_token_windows_reconstruct(spark):
