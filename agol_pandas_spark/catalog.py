@@ -288,9 +288,8 @@ class Catalog:
 
     def write_local(self, table, name: str, mode: str = "error") -> str:
         """Atomically materialize a DRIVER-RESIDENT ``pyarrow.Table`` as
-        catalog table ``name`` — a single parquet file committed with the
-        same tmp-write + ``os.replace`` discipline as the index meta
-        sidecars, and zero Spark jobs.
+        catalog table ``name`` — a single parquet file committed by
+        tmp-write + ``os.replace``, with zero Spark jobs.
 
         For broadcast-sized model/metadata state the driver already
         holds (IVF pivots, PQ codebooks: ≤ k×M rows): a ``Catalog.write``
@@ -298,8 +297,9 @@ class Catalog:
         write a few KB that just made the round trip driver → executors
         → parquet (guide §1.2 — don't compute things you throw away;
         §6 metadata costs). Reads are unchanged: ``Catalog.table`` and
-        pyarrow's dataset reader both handle single-file tables, exactly
-        like the existing ``__lsh_meta``/``__ivfpq_meta`` sidecars.
+        pyarrow's dataset reader both handle single-file tables, such as
+        an IVF-PQ index's ``__ivfpq_pivots``/``__ivfpq_codebook`` model
+        tables.
 
         NOT for data-sized tables: no manifest, no commit id, no
         carryover — anything that needs snapshot machinery goes through
@@ -1944,8 +1944,8 @@ class Catalog:
 
     def cleanup_staging(self, max_age_sec: float = 24 * 3600.0) -> list[str]:
         """Reclaim orphaned ``*.__tmp_*`` staging entries (directories
-        AND single files — the property/meta sidecars stage plain files)
-        older than ``max_age_sec``.
+        AND single files — the property sidecar and :meth:`write_local`
+        stage plain files) older than ``max_age_sec``.
 
         Every commit stages under a uuid'd temp path and swaps
         atomically; a crash between stage and swap leaks the staged

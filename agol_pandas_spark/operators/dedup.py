@@ -35,7 +35,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from agol_pandas_spark.errors import ConvergenceError, LshIndexParamError
+from agol_pandas_spark.errors import (
+    ConvergenceError,
+    LshIndexParamError,
+    TableNotFoundError,
+)
 from agol_pandas_spark.operators.ranks import _persist_bounded
 from agol_pandas_spark.functions.text import (
     portable_hash60,
@@ -338,11 +342,17 @@ def write_lsh_index(
     corpus — and :func:`probe_lsh_index` joins new batches against it
     touching only batch text.
 
+    The banding parameters commit WITH the index, as the snapshot prop
+    ``lsh`` (``{shingle_size, num_hashes, band_size}``) in the same
+    rename as the data: a probe with a different band layout would join
+    on incompatible band_key values and silently miss near-duplicates,
+    so :func:`probe_lsh_index` validates against them (and defaults
+    from them), and no crash can leave data and parameters out of step.
+
     Upgrade path at scale: write bucketed by ``band_key``
     (``bucketBy(n, 'band_key')``, see ``source_bucketed_colocated_join``)
-    so probes shuffle only the batch side; and append each admitted
-    batch's bands back to the index (plain ``merge_append``) so the index
-    tracks the corpus without rebuilds.
+    so probes shuffle only the batch side; :func:`append_lsh_index`
+    already extends the index per admitted batch without a rebuild.
     """
     from agol_pandas_spark.operators.chunking import spread_small_scan
 
@@ -354,42 +364,17 @@ def write_lsh_index(
         spread_small_scan(corpus), id_col, text_col, shingle_size, num_hashes
     )
     banded = banded_signatures(sig, id_col, num_hashes, band_size)
-    path = catalog.write(banded, name, mode="overwrite")
-    # Persist the banding parameters NEXT TO the index: a probe with a
-    # different band layout joins on incompatible band_key values and
-    # silently misses near-duplicates. probe_lsh_index validates against
-    # this one-row table (and infers defaults from it when not given).
-    # Written driver-side with pyarrow — one row of three ints does not
-    # justify a Spark job — but at the catalog path, so catalog.table()
-    # reads it like any other table.
-    import os
-    import shutil
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    meta_path = catalog.path(_lsh_meta_name(name))
-    os.makedirs(catalog.root, exist_ok=True)
-    tmp = f"{meta_path}.__tmp_{uuid.uuid4().hex}"
-    papq.write_table(
-        pa.table(
-            {
-                "shingle_size": pa.array([shingle_size], pa.int32()),
-                "num_hashes": pa.array([num_hashes], pa.int32()),
-                "band_size": pa.array([band_size], pa.int32()),
-            }
-        ),
-        tmp,
+    return catalog.write(
+        banded, name, mode="overwrite",
+        snapshot_props=_lsh_props(shingle_size, num_hashes, band_size),
     )
-    if os.path.isdir(meta_path):  # replace a directory-shaped predecessor
-        shutil.rmtree(meta_path)
-    os.replace(tmp, meta_path)
-    return path
 
 
-def _lsh_meta_name(name: str) -> str:
-    return f"{name}__lsh_meta"
+_LSH_PARAMS = ("shingle_size", "num_hashes", "band_size")
+
+
+def _lsh_props(shingle_size: int, num_hashes: int, band_size: int) -> dict:
+    return {"lsh": dict(zip(_LSH_PARAMS, (shingle_size, num_hashes, band_size)))}
 
 
 def _resolve_lsh_params(
@@ -400,53 +385,31 @@ def _resolve_lsh_params(
     band_size: int | None,
 ) -> tuple[int, int, int]:
     """Resolve (shingle_size, num_hashes, band_size) for a probe against
-    index ``name``: stored parameters win when the caller passed None;
-    explicit values that contradict the stored ones raise
-    :class:`LshIndexParamError`. Indexes written before the meta table
-    existed fall back to the signature-column count in the index schema
-    (num_hashes is recoverable there; shingle_size is not, so explicit/
-    default values are trusted for it)."""
-    stored: dict[str, int] | None = None
-    if catalog.exists(_lsh_meta_name(name)):
-        # read driver-side (pyarrow): one row of ints, no Spark job on the
-        # probe path; pyarrow's dataset reader skips _/.-prefixed files,
-        # so both file- and directory-shaped meta tables read fine
-        import pyarrow.parquet as papq
-
-        row = papq.read_table(catalog.path(_lsh_meta_name(name))).to_pylist()[0]
-        stored = {
-            "shingle_size": row["shingle_size"],
-            "num_hashes": row["num_hashes"],
-            "band_size": row["band_size"],
-        }
-    else:
-        # legacy index: recover num_hashes from the mh_* columns
-        idx_cols = catalog.table(name).columns
-        inferred = sum(1 for c in idx_cols if c.startswith("mh_"))
-        if inferred:
-            stored = {"num_hashes": inferred}
-    asked = {
-        "shingle_size": shingle_size,
-        "num_hashes": num_hashes,
-        "band_size": band_size,
-    }
-    resolved: dict[str, int] = {}
-    for key, default in (
-        ("shingle_size", 3),
-        ("num_hashes", len(MINHASH_PARAMS)),
-        ("band_size", 2),
-    ):
-        have = stored.get(key) if stored else None
-        want = asked[key]
-        if want is not None and have is not None and want != have:
+    index ``name`` from the parameters committed with its snapshot:
+    stored parameters win when the caller passed None; explicit values
+    that contradict them raise :class:`LshIndexParamError`, and so does
+    an index whose snapshot carries none."""
+    if not catalog.exists(name):
+        raise TableNotFoundError(
+            f"no LSH index {name!r} under {catalog.root} — build it with "
+            "write_lsh_index"
+        )
+    stored = catalog.snapshot_props(name).get("lsh")
+    if stored is None:
+        raise LshIndexParamError(
+            f"LSH index {name!r} carries no stored banding parameters; "
+            "rebuild the index with write_lsh_index."
+        )
+    for key, want in zip(_LSH_PARAMS, (shingle_size, num_hashes, band_size)):
+        have = stored[key]
+        if want is not None and want != have:
             raise LshIndexParamError(
                 f"LSH index {name!r} was built with {key}={have}, but the "
                 f"probe asked for {key}={want}; a mismatched probe would "
                 "silently miss near-duplicates. Re-probe with the stored "
                 "parameters (or rebuild the index)."
             )
-        resolved[key] = want if want is not None else (have if have is not None else default)
-    return resolved["shingle_size"], resolved["num_hashes"], resolved["band_size"]
+    return tuple(stored[key] for key in _LSH_PARAMS)
 
 
 def probe_lsh_index(
@@ -469,10 +432,11 @@ def probe_lsh_index(
     exist in it). Self-pairs (same id on both sides) are excluded so an
     index that already contains the batch ignores identity matches.
 
-    Banding parameters default to the ones stored alongside the index at
-    :func:`write_lsh_index` time; explicitly passing a conflicting value
-    raises :class:`~agol_pandas_spark.errors.LshIndexParamError` (a
-    mismatched probe would silently miss near-duplicates).
+    Banding parameters default to the ones committed with the index's
+    snapshot by :func:`write_lsh_index`; explicitly passing a conflicting
+    value raises :class:`~agol_pandas_spark.errors.LshIndexParamError` (a
+    mismatched probe would silently miss near-duplicates), and so does an
+    index whose snapshot carries no parameters.
     """
     shingle_size, num_hashes, band_size = _resolve_lsh_params(
         catalog, name, shingle_size, num_hashes, band_size
@@ -2012,7 +1976,9 @@ def append_lsh_index(
     different ones here), banded identically, and appended through the
     ordinary merge path: the index tracks the corpus without ever
     being rebuilt. At 100 TB this is the difference between per-batch
-    index maintenance costing O(batch) and O(corpus).
+    index maintenance costing O(batch) and O(corpus). The append
+    re-commits the parameters with its snapshot (snapshot props are
+    replaced wholesale by each commit).
     """
     from agol_pandas_spark.operators.merge import WriteMode, write_table
 
@@ -2021,4 +1987,7 @@ def append_lsh_index(
     )
     sig = minhash_signatures(batch, id_col, text_col, shingle_size, num_hashes)
     banded = banded_signatures(sig, id_col, num_hashes, band_size)
-    return write_table(catalog, banded, name, mode=WriteMode.APPEND)
+    return write_table(
+        catalog, banded, name, mode=WriteMode.APPEND,
+        snapshot_props=_lsh_props(shingle_size, num_hashes, band_size),
+    )

@@ -986,16 +986,16 @@ def _collect_codebook(
 def _codebook_matrix_from_rows(
     rows, m_subspaces: int
 ) -> tuple["np.ndarray", int]:
-    """:func:`_collect_codebook`'s validation + densification over rows
-    already on the driver (Spark ``Row``s or ``{"m","code","cent"}``
-    dicts from a pyarrow read) — shared so a probe against a PERSISTED
+    """:func:`_collect_codebook`'s validation + densification over
+    ``(m, code, cent)`` rows already on the driver (Spark ``Row``s or
+    tuples from a pyarrow read) — shared so a probe against a PERSISTED
     index can read its broadcast-sized codebook driver-side (no Spark
     job) with identical validation semantics."""
     if not rows:
         raise ValueError("pq codebook is empty")
     by_m: dict[int, dict[int, list]] = {}
-    for r in rows:
-        by_m.setdefault(r["m"], {})[r["code"]] = r["cent"]
+    for m, code, cent in rows:
+        by_m.setdefault(m, {})[code] = cent
     if sorted(by_m) != list(range(m_subspaces)):
         raise ValueError(
             f"pq codebook subspaces {sorted(by_m)} != 0..{m_subspaces - 1}"
@@ -1037,14 +1037,21 @@ def validate_codebook(
     return C
 
 
-def _read_model_rows(catalog, name: str, columns: list[str]) -> list[tuple]:
+def _read_model_rows(
+    catalog, name: str, columns: list[str], build: str
+) -> list[tuple]:
     """Read a broadcast-sized model table (pivots/codebook) DRIVER-SIDE
-    with pyarrow — no Spark job, no py4j plan round-trips. Handles both
-    the single-file layout :meth:`Catalog.write_local` produces and
-    directory-shaped tables from older builds (pyarrow's dataset reader
-    skips the "_"-prefixed manifest/commit metadata). Returns positional
-    tuples in ``columns`` order, the shape the Arrow kernels index."""
-    from agol_pandas_spark.errors import TableNotFoundError
+    with pyarrow — no Spark job, no py4j plan round-trips — from the
+    single parquet file :meth:`Catalog.write_local` committed. The
+    file's schema metadata must name ``build``, the index build whose
+    coded table the caller is about to score: a model table from any
+    other build (an interrupted or concurrent rebuild) raises
+    :class:`VectorIndexParamError`. Returns positional tuples in
+    ``columns`` order, the shape the Arrow kernels index."""
+    from agol_pandas_spark.errors import (
+        TableNotFoundError,
+        VectorIndexParamError,
+    )
 
     if not catalog.exists(name):
         raise TableNotFoundError(
@@ -1052,10 +1059,18 @@ def _read_model_rows(catalog, name: str, columns: list[str]) -> list[tuple]:
         )
     import pyarrow.dataset as ds
 
-    tbl = (
-        ds.dataset(catalog.path(name), format="parquet")
-        .to_table(columns=columns)
-    )
+    dset = ds.dataset(catalog.path(name), format="parquet")
+    found = (dset.schema.metadata or {}).get(_IVFPQ_BUILD_KEY, b"").decode()
+    if found != build:
+        raise VectorIndexParamError(
+            f"IVF-PQ model table {name!r} belongs to build {found!r}, but "
+            f"the index was committed by build {build!r} — an interrupted "
+            "or concurrent rebuild; rebuild the index."
+        )
+    return _arrow_rows(dset.to_table(columns=columns), columns)
+
+
+def _arrow_rows(tbl, columns: list[str]) -> list[tuple]:
     return list(zip(*(tbl.column(c).to_pylist() for c in columns)))
 
 
@@ -1083,31 +1098,6 @@ def _first_codes_width(catalog, name: str) -> int | None:
             "mixed-layout state; rebuild the index."
         )
     return len(row)
-
-
-def _pa_type(spark_type):
-    """pyarrow type for the Spark column types model tables carry
-    (ids: integral/string; vectors: arrays of float/double). Returns
-    ``None`` for anything else — callers fall back to a Spark write."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    simple = {
-        T.ByteType: pa.int8(),
-        T.ShortType: pa.int16(),
-        T.IntegerType: pa.int32(),
-        T.LongType: pa.int64(),
-        T.FloatType: pa.float32(),
-        T.DoubleType: pa.float64(),
-        T.StringType: pa.string(),
-    }
-    t = simple.get(type(spark_type))
-    if t is not None:
-        return t
-    if isinstance(spark_type, T.ArrayType):
-        inner = simple.get(type(spark_type.elementType))
-        return pa.list_(inner) if inner is not None else None
-    return None
 
 
 def pq_encode(
@@ -1504,15 +1494,8 @@ def ivf_pq_topk(
     return _adc_topk(joined, query_id, corpus_id, m_subspaces, k_codes, k)
 
 
-def _ivfpq_meta_name(name: str) -> str:
-    return f"{name}__ivfpq_meta"
-
-
-def _ivfpq_payload_cols(meta: dict) -> tuple:
-    """Payload columns recorded in the index meta (pre-payload indexes
-    lack the key: empty)."""
-    raw = meta.get("payload_cols") or ""
-    return tuple(p for p in raw.split(",") if p)
+#: schema-metadata key naming the build that wrote an IVF-PQ model table
+_IVFPQ_BUILD_KEY = b"ivfpq_build"
 
 
 def _ivfpq_pivots_name(name: str) -> str:
@@ -1545,17 +1528,20 @@ def write_ivfpq_index(
 
     - ``<name>``: the encoded corpus ``(corpus_id, cell, codes)`` —
       M bytes + a cell id per vector, ~dim·4/M× smaller than the raw
-      vectors; the only table a probe scans.
-    - ``<name>__ivfpq_pivots`` / ``__ivfpq_codebook``: the model state
-      (broadcast-sized by construction) a probe needs to route queries.
-    - ``<name>__ivfpq_meta``: one row of layout parameters + column
-      names, written driver-side with pyarrow (three ints and three
-      strings do not justify a Spark job). Probes/appends resolve their
-      parameters from it and REFUSE contradictions
-      (:class:`~agol_pandas_spark.errors.VectorIndexParamError`) — the
-      same stored-params-or-raise discipline as
+      vectors; the only table a probe scans. Its snapshot carries the
+      build parameters as the snapshot prop ``ivfpq``: ``m_subspaces``,
+      ``k_codes``, the ``corpus_id``/``pivot_id``/``vec`` column names,
+      ``payload_cols`` and ``build``, an id minted per call. Probes and
+      appends resolve their parameters from it and REFUSE
+      contradictions (:class:`~agol_pandas_spark.errors.VectorIndexParamError`)
+      — the same stored-params-or-raise discipline as
       ``dedup._resolve_lsh_params``, because a layout drift silently
       mis-indexes the flattened ADC LUT.
+    - ``<name>__ivfpq_pivots`` / ``__ivfpq_codebook``: the model state
+      (broadcast-sized by construction) a probe needs to route queries,
+      each one parquet file written driver-side
+      (:meth:`Catalog.write_local`) with the build id in its schema
+      metadata.
 
     Assignment + encoding fuse into one Arrow map pass over the corpus
     scan (zero corpus-side joins/shuffles), exactly as in
@@ -1565,39 +1551,35 @@ def write_ivfpq_index(
     label, a source tag) so candidate-time predicates — e.g.
     :func:`hard_negative_topk_indexed`'s other-label filter — evaluate
     on the coded scan itself, never via a corpus-sized join. Recorded
-    in the meta; appends carry them automatically.
+    in the snapshot props; appends carry them automatically.
 
-    Crash-consistency: the four tables commit independently (each
-    atomically, but not as one transaction). The meta writes LAST, and
-    :func:`probe_ivfpq_index` validates the codebook shape and the
-    codes width against the meta before scoring — an interrupted or
-    concurrent rebuild therefore surfaces as
-    :class:`VectorIndexParamError`, never as silently wrong ranks.
+    Crash-consistency: the model tables commit first and the coded
+    table last, with the parameters in the same rename as its data. A
+    probe checks that both model tables carry the build id its coded
+    table committed, so an interrupted or concurrent rebuild surfaces
+    as :class:`VectorIndexParamError` (or leaves the old index whole),
+    never as codes scored against another build's pivots or codebook.
     """
-    import os
-    import shutil
     import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    # The two model inputs are broadcast-sized by contract and BOTH get
-    # collected to the driver anyway (the codebook for validation + the
-    # LUT matrix, the pivots for the fused assign+encode kernel) — so
-    # collect each ONCE, overlapped (guide §2.6), and never re-run their
-    # derivation plans for the model-table writes.
     from concurrent.futures import ThreadPoolExecutor
 
+    # The two model inputs are broadcast-sized by contract and BOTH come
+    # to the driver anyway (the codebook for validation + the LUT matrix,
+    # the pivots for the fused assign+encode kernel) — so fetch each ONCE
+    # as Arrow, overlapped (guide §2.6), and write the model tables from
+    # the fetched tables instead of re-running their derivation plans.
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_cb = pool.submit(
-            lambda: codebook.select("m", "code", "cent").collect()
+            lambda: codebook.select("m", "code", "cent").toArrow()
         )
         f_piv = pool.submit(
-            lambda: pivots.select(F.col(pivot_id), F.col(vec)).collect()
+            lambda: pivots.select(F.col(pivot_id), F.col(vec)).toArrow()
         )
-        cb_rows = f_cb.result()
-        pivot_rows = f_piv.result()
-    C, k_found = _codebook_matrix_from_rows(cb_rows, m_subspaces)
+        cb_tbl = f_cb.result()
+        piv_tbl = f_piv.result()
+    C, k_found = _codebook_matrix_from_rows(
+        _arrow_rows(cb_tbl, ["m", "code", "cent"]), m_subspaces
+    )
     if k_found != k_codes:
         raise ValueError(
             f"pq codebook has {k_found} codes per subspace, caller assumed "
@@ -1607,105 +1589,105 @@ def write_ivfpq_index(
     coded = _assign_encode_arrow(
         corpus.select(F.col(corpus_id), F.col(vec), *payload),
         pivots, C, corpus_id, pivot_id, vec, keep_cols=payload,
-        pivot_rows=pivot_rows,
+        pivot_rows=_arrow_rows(piv_tbl, [pivot_id, vec]),
     )
-    # ONE Spark write: the corpus-sized coded table. The pivots/codebook
-    # model tables are written DRIVER-SIDE from the rows just collected
-    # (Catalog.write_local: atomic single-file commit, zero Spark jobs —
-    # previously each paid a full job + task-commit latency AND re-ran
-    # its derivation plan to write a few KB; guide §1.2, §6). The meta
-    # still writes strictly LAST (the crash-consistency contract above),
-    # after all three data/model tables have committed.
-    path = catalog.write(coded, name, "overwrite")
-    pid_t = _pa_type(pivots.schema[pivot_id].dataType)
-    vec_t = _pa_type(pivots.schema[vec].dataType)
-    if pid_t is not None and vec_t is not None:
+    # the model tables first (driver-side single-file commits, zero
+    # Spark jobs), then ONE Spark write — the corpus-sized coded table,
+    # whose snapshot props name this build
+    build = uuid.uuid4().hex
+    for tbl, model in (
+        (piv_tbl, _ivfpq_pivots_name(name)),
+        (cb_tbl, _ivfpq_codebook_name(name)),
+    ):
         catalog.write_local(
-            pa.table(
-                {
-                    pivot_id: pa.array([r[0] for r in pivot_rows], pid_t),
-                    vec: pa.array([r[1] for r in pivot_rows], vec_t),
-                }
-            ),
-            _ivfpq_pivots_name(name), mode="overwrite",
+            tbl.replace_schema_metadata({_IVFPQ_BUILD_KEY: build}),
+            model, mode="overwrite",
         )
-    else:  # exotic id/vector type: keep the Spark write path
-        catalog.write(
-            pivots.select(F.col(pivot_id), F.col(vec)),
-            _ivfpq_pivots_name(name), "overwrite",
-        )
-    cb_types = [
-        _pa_type(codebook.schema[c].dataType) for c in ("m", "code", "cent")
-    ]
-    if all(t is not None for t in cb_types):
-        catalog.write_local(
-            pa.table(
-                {
-                    c: pa.array([r[c] for r in cb_rows], t)
-                    for c, t in zip(("m", "code", "cent"), cb_types)
-                }
-            ),
-            _ivfpq_codebook_name(name), mode="overwrite",
-        )
-    else:
-        catalog.write(
-            codebook.select("m", "code", "cent"),
-            _ivfpq_codebook_name(name), "overwrite",
-        )
-    meta_path = catalog.path(_ivfpq_meta_name(name))
-    os.makedirs(catalog.root, exist_ok=True)
-    tmp = f"{meta_path}.__tmp_{uuid.uuid4().hex}"
-    papq.write_table(
-        pa.table(
-            {
-                "m_subspaces": pa.array([m_subspaces], pa.int32()),
-                "k_codes": pa.array([k_codes], pa.int32()),
-                "corpus_id": pa.array([corpus_id], pa.string()),
-                "pivot_id": pa.array([pivot_id], pa.string()),
-                "vec": pa.array([vec], pa.string()),
-                "payload_cols": pa.array([",".join(payload)], pa.string()),
-            }
-        ),
-        tmp,
+    params = {
+        "m_subspaces": m_subspaces,
+        "k_codes": k_codes,
+        "corpus_id": corpus_id,
+        "pivot_id": pivot_id,
+        "vec": vec,
+        "payload_cols": list(payload),
+        "build": build,
+    }
+    return catalog.write(
+        coded, name, "overwrite", snapshot_props={"ivfpq": params}
     )
-    if os.path.isdir(meta_path):
-        shutil.rmtree(meta_path)
-    os.replace(tmp, meta_path)
-    return path
 
 
-def _resolve_ivfpq_params(
+def _load_ivfpq_index(
     catalog,
     name: str,
-    m_subspaces: int | None,
-    k_codes: int | None,
-) -> dict:
-    """Stored index parameters win when the caller passed None; explicit
-    values that contradict the stored ones raise
-    :class:`VectorIndexParamError` (a mismatched probe mis-indexes the
-    ADC LUT — silent garbage, never an exception downstream)."""
+    m_subspaces: int | None = None,
+    k_codes: int | None = None,
+) -> tuple:
+    """Everything a probe or an append reads from a persisted IVF-PQ
+    index, validated as one: the parameters committed with the coded
+    table (explicit ``m_subspaces``/``k_codes`` must agree with them),
+    the codebook and pivots of the SAME build, a codebook dense in the
+    committed layout, and stored codes exactly ``m_subspaces`` wide. Any
+    contradiction, or an index whose snapshot carries no parameters,
+    raises :class:`VectorIndexParamError` before a scoring plan exists —
+    the flattened-LUT indexing would otherwise score mixed state into
+    silent garbage. The model reads are driver-side pyarrow (footer + a
+    few KB of pages), not Spark jobs (§1.2: the cheapest job is the one
+    that doesn't run).
+
+    Returns ``(params, C, pivots, pivot_rows)``: the params dict, the
+    dense ``(m, k, sub)`` codebook matrix, the pivots table as a
+    DataFrame and its rows."""
     from agol_pandas_spark.errors import (
         TableNotFoundError,
         VectorIndexParamError,
     )
 
-    if not catalog.exists(_ivfpq_meta_name(name)):
+    if not catalog.exists(name):
         raise TableNotFoundError(
-            f"no IVF-PQ index meta for {name!r} under {catalog.root} — "
-            "build it with write_ivfpq_index"
+            f"no IVF-PQ index {name!r} under {catalog.root} — build it "
+            "with write_ivfpq_index"
         )
-    import pyarrow.parquet as papq
-
-    row = papq.read_table(catalog.path(_ivfpq_meta_name(name))).to_pylist()[0]
+    params = catalog.snapshot_props(name).get("ivfpq")
+    if params is None:
+        raise VectorIndexParamError(
+            f"IVF-PQ index {name!r} carries no stored build parameters; "
+            "rebuild the index with write_ivfpq_index."
+        )
     for key, want in (("m_subspaces", m_subspaces), ("k_codes", k_codes)):
-        if want is not None and want != row[key]:
+        if want is not None and want != params[key]:
             raise VectorIndexParamError(
-                f"IVF-PQ index {name!r} was built with {key}={row[key]}, "
+                f"IVF-PQ index {name!r} was built with {key}={params[key]}, "
                 f"but the caller asked for {key}={want}; a mismatched "
                 "layout silently mis-indexes the ADC LUT. Use the stored "
                 "parameters (or rebuild the index)."
             )
-    return row
+    m_sub, kc, build = params["m_subspaces"], params["k_codes"], params["build"]
+    C, k_found = _codebook_matrix_from_rows(
+        _read_model_rows(
+            catalog, _ivfpq_codebook_name(name), ["m", "code", "cent"], build
+        ),
+        m_sub,
+    )
+    if k_found != kc:
+        raise VectorIndexParamError(
+            f"IVF-PQ index {name!r} codebook has {k_found} codes per "
+            f"subspace but the index declares k_codes={kc}; rebuild the "
+            "index."
+        )
+    pivot_rows = _read_model_rows(
+        catalog, _ivfpq_pivots_name(name),
+        [params["pivot_id"], params["vec"]], build,
+    )
+    codes_width = _first_codes_width(catalog, name)
+    if codes_width is not None and codes_width != m_sub:
+        raise VectorIndexParamError(
+            f"IVF-PQ index {name!r} codes have {codes_width} "
+            f"subspaces but the index declares {m_sub} — mixed-layout "
+            "state; rebuild the index."
+        )
+    pivots = catalog.table(_ivfpq_pivots_name(name))
+    return params, C, pivots, pivot_rows
 
 
 def probe_ivfpq_index(
@@ -1727,48 +1709,18 @@ def probe_ivfpq_index(
     LUT exactly as :func:`ivf_pq_topk` — identical results to the
     build-and-query path by construction, minus the build cost.
 
-    Layout parameters default from the index meta; contradictions
-    raise :class:`VectorIndexParamError`.
+    Layout parameters default from the ones committed with the index;
+    contradictions, and model tables from another build, raise
+    :class:`VectorIndexParamError` (see :func:`_load_ivfpq_index`).
     """
-    meta = _resolve_ivfpq_params(catalog, name, m_subspaces, k_codes)
-    m_sub, kc = meta["m_subspaces"], meta["k_codes"]
-    corpus_id, pivot_id, vec = meta["corpus_id"], meta["pivot_id"], meta["vec"]
+    params, C, pivots, pivot_rows = _load_ivfpq_index(
+        catalog, name, m_subspaces, k_codes
+    )
+    m_sub, kc = params["m_subspaces"], params["k_codes"]
+    corpus_id, pivot_id, vec = (
+        params["corpus_id"], params["pivot_id"], params["vec"]
+    )
     coded = catalog.table(name)
-    pivots = catalog.table(_ivfpq_pivots_name(name))
-    # cross-table layout validation: the index is four tables committed
-    # independently, so a crashed/concurrent rebuild can leave the meta
-    # describing one layout and the codebook/codes another — which the
-    # flattened-LUT indexing would score into silent garbage. Validate
-    # the codebook shape against the meta and one codes row's length
-    # before trusting either. All three reads are broadcast-sized model
-    # state: read them DRIVER-SIDE with pyarrow (footer + a few KB of
-    # pages) instead of three Spark jobs — r11 overlapped the jobs
-    # (§2.6); r12 removes them (§1.2: the cheapest shuffle/job is the
-    # one that doesn't run). Every error still surfaces before any
-    # scoring plan is built.
-    cb_rows = _read_model_rows(
-        catalog, _ivfpq_codebook_name(name), ["m", "code", "cent"]
-    )
-    C, k_found = _codebook_matrix_from_rows(
-        [{"m": m, "code": c, "cent": v} for m, c, v in cb_rows], m_sub
-    )
-    if k_found != kc:
-        raise ValueError(
-            f"pq codebook has {k_found} codes per subspace, caller "
-            f"assumed {kc} — the flattened LUT would be mis-indexed"
-        )
-    pivot_rows = _read_model_rows(
-        catalog, _ivfpq_pivots_name(name), [pivot_id, vec]
-    )
-    codes_width = _first_codes_width(catalog, name)
-    if codes_width is not None and codes_width != m_sub:
-        from agol_pandas_spark.errors import VectorIndexParamError
-
-        raise VectorIndexParamError(
-            f"IVF-PQ index {name!r} codes have {codes_width} "
-            f"subspaces but the meta declares {m_sub} — mixed-layout "
-            "state (interrupted rebuild?); rebuild the index."
-        )
     q_cells = _assign_topn_cells_arrow(
         queries.select(F.col(query_id), F.col(query_vec)),
         pivots, query_id, pivot_id, query_vec, vec, nprobe,
@@ -1798,32 +1750,25 @@ def append_ivfpq_index(
     path (keyed INSERT: only NEW ids land, already-indexed ids pass
     through untouched, so re-sending a batch cannot double-index it;
     the batch itself must be id-unique — ``DuplicateKeyError``
-    otherwise). The corpus is never re-encoded.
+    otherwise). The corpus is never re-encoded. The append re-commits
+    the index's parameters with its snapshot (snapshot props are
+    replaced wholesale by each commit).
     """
     from agol_pandas_spark.operators.merge import WriteMode, write_table
 
-    meta = _resolve_ivfpq_params(catalog, name, None, None)
-    m_sub = meta["m_subspaces"]
-    corpus_id, vec, pivot_id = meta["corpus_id"], meta["vec"], meta["pivot_id"]
-    payload = _ivfpq_payload_cols(meta)
-    pivots = catalog.table(_ivfpq_pivots_name(name))
-    # stored model state reads driver-side (pyarrow) — no Spark jobs
-    cb_rows = _read_model_rows(
-        catalog, _ivfpq_codebook_name(name), ["m", "code", "cent"]
+    params, C, pivots, pivot_rows = _load_ivfpq_index(catalog, name)
+    corpus_id, pivot_id, vec = (
+        params["corpus_id"], params["pivot_id"], params["vec"]
     )
-    C, _ = _codebook_matrix_from_rows(
-        [{"m": m, "code": c, "cent": v} for m, c, v in cb_rows], m_sub
-    )
-    pivot_rows = _read_model_rows(
-        catalog, _ivfpq_pivots_name(name), [pivot_id, vec]
-    )
+    payload = tuple(params["payload_cols"])
     coded = _assign_encode_arrow(
         batch.select(F.col(corpus_id), F.col(vec), *payload),
         pivots, C, corpus_id, pivot_id, vec, keep_cols=payload,
         pivot_rows=pivot_rows,
     )
     return write_table(
-        catalog, coded, name, mode=WriteMode.INSERT, key=corpus_id
+        catalog, coded, name, mode=WriteMode.INSERT, key=corpus_id,
+        snapshot_props={"ivfpq": params},
     )
 
 
@@ -2133,10 +2078,14 @@ def hard_negative_topk_indexed(
     """
     from agol_pandas_spark.errors import VectorIndexParamError
 
-    meta = _resolve_ivfpq_params(catalog, name, None, None)
-    m_sub, kc = meta["m_subspaces"], meta["k_codes"]
-    corpus_id, pivot_id, vec = meta["corpus_id"], meta["pivot_id"], meta["vec"]
-    if label_col not in _ivfpq_payload_cols(meta):
+    # model state (codebook, pivot matrix) read DRIVER-SIDE with pyarrow
+    # and validated exactly as for probe_ivfpq_index
+    params, C, pivots, pivot_rows = _load_ivfpq_index(catalog, name)
+    m_sub, kc = params["m_subspaces"], params["k_codes"]
+    corpus_id, pivot_id, vec = (
+        params["corpus_id"], params["pivot_id"], params["vec"]
+    )
+    if label_col not in params["payload_cols"]:
         raise VectorIndexParamError(
             f"IVF-PQ index {name!r} does not carry payload column "
             f"{label_col!r} — rebuild with write_ivfpq_index("
@@ -2144,24 +2093,6 @@ def hard_negative_topk_indexed(
             "can run on the coded scan"
         )
     coded = catalog.table(name)
-    pivots = catalog.table(_ivfpq_pivots_name(name))
-    # model state (codebook, pivot matrix) read DRIVER-SIDE with pyarrow
-    # — zero Spark jobs, same validation as probe_ivfpq_index (r11
-    # overlapped these collects per §2.6; r12 removes them, §1.2)
-    cb_rows = _read_model_rows(
-        catalog, _ivfpq_codebook_name(name), ["m", "code", "cent"]
-    )
-    C, k_found = _codebook_matrix_from_rows(
-        [{"m": m, "code": c, "cent": v} for m, c, v in cb_rows], m_sub
-    )
-    if k_found != kc:
-        raise ValueError(
-            f"pq codebook has {k_found} codes per subspace, caller "
-            f"assumed {kc} — the flattened LUT would be mis-indexed"
-        )
-    pivot_rows = _read_model_rows(
-        catalog, _ivfpq_pivots_name(name), [pivot_id, vec]
-    )
     q = probes.select(
         F.col(query_id),
         F.col(label_col).alias("__qlabel"),

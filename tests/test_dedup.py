@@ -205,38 +205,45 @@ def test_lsh_index_probe_matches_self_join(docs, spark, tmp_path):
     )
     from agol_pandas_spark.operators.merge import write_table
 
-    corpus = docs.filter(F.col("doc_id").isin(1, 4, 5))
     batch = docs.filter(F.col("doc_id").isin(2, 3))
 
-    cat = Catalog(spark, str(tmp_path / "idx"))
-    write_lsh_index(cat, "lsh", corpus, "doc_id", "text")
+    # ids above 2^53 (where a double round-trip would merge neighbours)
+    # must come back exact through the index
+    for shift in (0, 2**53 + 1):
+        sdocs = docs.withColumn("doc_id", F.col("doc_id") + F.lit(shift))
+        scat = Catalog(spark, str(tmp_path / f"idx_{shift}"))
+        write_lsh_index(
+            scat, "lsh",
+            sdocs.filter(F.col("doc_id").isin(*(i + shift for i in (1, 4, 5)))),
+            "doc_id", "text",
+        )
+        pairs = {
+            (r.batch_id - shift, r.corpus_id - shift, r.n_matching_hashes)
+            for r in probe_lsh_index(
+                scat, "lsh",
+                sdocs.filter(F.col("doc_id").isin(2 + shift, 3 + shift)),
+                "doc_id", "text",
+            ).collect()
+        }
+        # expected: the self-join over the union, restricted to
+        # batch x corpus
+        self_join = [
+            (r.id_a - shift, r.id_b - shift, r.n_matching_hashes)
+            for r in minhash_dedup_pairs(
+                sdocs, "doc_id", "text", min_agreement=0
+            ).collect()
+        ]
+        expected = {
+            (a, b, n) for a, b, n in self_join
+            if a in (2, 3) and b in (1, 4, 5)
+        } | {
+            (b, a, n) for a, b, n in self_join
+            if b in (2, 3) and a in (1, 4, 5)
+        }
+        assert pairs == expected, shift
+        assert (2, 1, 8) in pairs  # exact dup: all 8 hashes agree
 
-    pairs = {
-        (r.batch_id, r.corpus_id, r.n_matching_hashes)
-        for r in probe_lsh_index(cat, "lsh", batch, "doc_id", "text").collect()
-    }
-    # expected: the self-join over the union, restricted to batch x corpus
-    expected = {
-        (a, b, n)
-        for a, b, n in (
-            (r.id_a, r.id_b, r.n_matching_hashes)
-            for r in minhash_dedup_pairs(
-                docs, "doc_id", "text", min_agreement=0
-            ).collect()
-        )
-        if a in (2, 3) and b in (1, 4, 5)
-    } | {
-        (b, a, n)
-        for a, b, n in (
-            (r.id_a, r.id_b, r.n_matching_hashes)
-            for r in minhash_dedup_pairs(
-                docs, "doc_id", "text", min_agreement=0
-            ).collect()
-        )
-        if b in (2, 3) and a in (1, 4, 5)
-    }
-    assert pairs == expected
-    assert (2, 1, 8) in pairs  # exact dup: all 8 hashes agree
+    cat = Catalog(spark, str(tmp_path / "idx_0"))
 
     # doc 2 (exact dup of indexed 1) rejected; near-dup 3 passes at bar 8
     admitted = sorted(
@@ -253,7 +260,9 @@ def test_lsh_index_probe_matches_self_join(docs, spark, tmp_path):
         minhash_signatures(batch.filter(F.col("doc_id") == 3), "doc_id", "text"),
         "doc_id",
     )
-    write_table(cat, add, "lsh", mode="append")
+    write_table(
+        cat, add, "lsh", mode="append", snapshot_props=cat.snapshot_props("lsh")
+    )
     later = spark.createDataFrame(
         [(30, docs.filter(F.col("doc_id") == 3).collect()[0].text)],
         "doc_id long, text string",
@@ -311,16 +320,15 @@ def test_star_components_match_union_find(spark):
         assert got == ground_truth(edges_py), name
 
 def test_lsh_index_param_validation(docs, spark, tmp_path):
-    """The index persists its banding parameters; a probe with a
-    conflicting layout raises instead of silently missing near-dups, a
-    param-less probe inherits the stored layout, and a legacy index
-    (no meta table) still recovers num_hashes from its mh_* columns."""
+    """The index commits its banding parameters with its snapshot; a
+    probe with a conflicting layout raises instead of silently missing
+    near-dups, a param-less probe inherits the stored layout, and an
+    index table committed without parameters raises "rebuild"."""
     import pytest as _pytest
 
     from agol_pandas_spark.catalog import Catalog
     from agol_pandas_spark.errors import LshIndexParamError
     from agol_pandas_spark.operators.dedup import (
-        _lsh_meta_name,
         banded_signatures,
         minhash_signatures,
         probe_lsh_index,
@@ -332,8 +340,9 @@ def test_lsh_index_param_validation(docs, spark, tmp_path):
     cat = Catalog(spark, str(tmp_path / "idx"))
     write_lsh_index(cat, "lsh", corpus, "doc_id", "text", band_size=4)
 
-    meta = cat.table(_lsh_meta_name("lsh")).collect()[0]
-    assert (meta.shingle_size, meta.num_hashes, meta.band_size) == (3, 8, 4)
+    assert cat.snapshot_props("lsh") == {
+        "lsh": {"shingle_size": 3, "num_hashes": 8, "band_size": 4}
+    }
 
     # stored params applied when the caller passes none
     implicit = probe_lsh_index(cat, "lsh", batch, "doc_id", "text")
@@ -351,13 +360,13 @@ def test_lsh_index_param_validation(docs, spark, tmp_path):
     with _pytest.raises(LshIndexParamError):
         probe_lsh_index(cat, "lsh", batch, "doc_id", "text", shingle_size=5)
 
-    # legacy index without a meta table: num_hashes inferred from schema
+    # an index table committed without parameters cannot be probed
     legacy = banded_signatures(
         minhash_signatures(corpus, "doc_id", "text"), "doc_id"
     )
     cat.write(legacy, "old_lsh", mode="overwrite")
-    got = probe_lsh_index(cat, "old_lsh", batch, "doc_id", "text")
-    assert got.count() > 0
+    with _pytest.raises(LshIndexParamError, match="rebuild"):
+        probe_lsh_index(cat, "old_lsh", batch, "doc_id", "text")
 
 
 def test_star_components_raises_on_round_exhaustion(spark):

@@ -901,8 +901,9 @@ def test_ivfpq_probe_rejects_mixed_layout_state(spark, sf_dir, tmp_path):
 
 def test_ivfpq_probe_rejects_null_codes(spark, sf_dir, tmp_path):
     """A non-empty index whose stored ``codes`` are NULL has no layout
-    to check against the meta: the probe's layout guard must raise
-    instead of reading the NULL row as "nothing to contradict"."""
+    to check against the committed parameters: the probe's layout guard
+    must raise instead of reading the NULL row as "nothing to
+    contradict"."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
@@ -927,13 +928,50 @@ def test_ivfpq_probe_rejects_null_codes(spark, sf_dir, tmp_path):
         coded.withColumn(
             "codes", F.lit(None).cast(coded.schema["codes"].dataType)
         ),
-        "idx", mode="overwrite",
+        "idx", mode="overwrite", snapshot_props=cat.snapshot_props("idx"),
     )
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     with _pytest.raises(VectorIndexParamError, match="NULL codes"):
         probe_ivfpq_index(cat, "idx", queries, query_id="query_id")
+
+
+def test_hard_negative_indexed_rejects_wider_codes(spark, sf_dir, tmp_path):
+    """The indexed hard-negative miner runs the same layout checks as
+    the probe: stored codes wider than the committed m_subspaces must
+    raise, not score their first m_subspaces codes."""
+    import pytest as _pytest
+
+    from agol_pandas_spark.catalog import Catalog
+    from agol_pandas_spark.errors import VectorIndexParamError
+    from agol_pandas_spark.operators.similarity import (
+        hard_negative_topk_indexed,
+        pq_codebook_from_seeds,
+        write_ivfpq_index,
+    )
+
+    emb = Catalog(spark, sf_dir).table("embeddings")
+    pivots = emb.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("pivot_id"), "embedding"
+    )
+    cat = Catalog(spark, str(tmp_path))
+    for name, m in (("idx", 4), ("idx8", 8)):
+        write_ivfpq_index(
+            cat, name, emb, pivots,
+            pq_codebook_from_seeds(emb, "vec_id", m_subspaces=m, k_codes=8),
+            corpus_id="vec_id", pivot_id="pivot_id",
+            m_subspaces=m, k_codes=8, payload_cols=("label",),
+        )
+    cat.write(
+        cat.table("idx8"), "idx", mode="overwrite",
+        snapshot_props=cat.snapshot_props("idx"),
+    )
+    probes = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "label", "embedding"
+    )
+    with _pytest.raises(VectorIndexParamError):
+        hard_negative_topk_indexed(cat, "idx", probes, query_id="query_id")
 
 
 def test_arrow_lut_bit_identical_to_sql_lut(emb, spark):
@@ -1046,27 +1084,31 @@ def test_model_tables_driver_write_roundtrip(spark, sf_dir, tmp_path):
     )
 
     emb = Catalog(spark, sf_dir).table("embeddings")
-    pivots = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("pivot_id"), "embedding"
-    )
     cb = pq_codebook_from_seeds(emb, "vec_id")
-    cat = Catalog(spark, str(tmp_path))
-    write_ivfpq_index(cat, "idx", emb, pivots, cb,
-                      corpus_id="vec_id", pivot_id="pivot_id")
-
-    want_piv = sorted((r[0], tuple(r[1])) for r in pivots.collect())
-    got_spark = sorted(
-        (r[0], tuple(r[1]))
-        for r in cat.table("idx__ivfpq_pivots").collect()
-    )
-    got_pa = sorted(
-        (r[0], tuple(r[1]))
-        for r in _read_model_rows(
-            cat, "idx__ivfpq_pivots", ["pivot_id", "embedding"]
+    # pivot ids above 2^53 (where a double round-trip would merge
+    # neighbours) must come back exact too
+    for shift in (0, 2**53 + 1):
+        pivots = emb.filter(F.col("vec_id") % 100 == 0).select(
+            (F.col("vec_id") + F.lit(shift)).alias("pivot_id"), "embedding"
         )
-    )
-    assert got_spark == want_piv  # exact float64 bits, exact ids
-    assert got_pa == want_piv
+        cat = Catalog(spark, str(tmp_path / f"cat_{shift}"))
+        write_ivfpq_index(cat, "idx", emb, pivots, cb,
+                          corpus_id="vec_id", pivot_id="pivot_id")
+        build = cat.snapshot_props("idx")["ivfpq"]["build"]
+
+        want_piv = sorted((r[0], tuple(r[1])) for r in pivots.collect())
+        got_spark = sorted(
+            (r[0], tuple(r[1]))
+            for r in cat.table("idx__ivfpq_pivots").collect()
+        )
+        got_pa = sorted(
+            (r[0], tuple(r[1]))
+            for r in _read_model_rows(
+                cat, "idx__ivfpq_pivots", ["pivot_id", "embedding"], build
+            )
+        )
+        assert got_spark == want_piv, shift  # exact float64 bits, exact ids
+        assert got_pa == want_piv, shift
 
     want_cb = sorted(
         (r["m"], r["code"], tuple(r["cent"])) for r in cb.collect()
@@ -1074,7 +1116,7 @@ def test_model_tables_driver_write_roundtrip(spark, sf_dir, tmp_path):
     got_cb = sorted(
         (m, c, tuple(v))
         for m, c, v in _read_model_rows(
-            cat, "idx__ivfpq_codebook", ["m", "code", "cent"]
+            cat, "idx__ivfpq_codebook", ["m", "code", "cent"], build
         )
     )
     assert got_cb == want_cb
