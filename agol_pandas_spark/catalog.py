@@ -12,6 +12,9 @@ Writes go through a two-phase commit: stage to ``<name>.parquet.__tmp_*``,
 then atomically rename over the target. That reproduces the transactional
 intent of the reference's per-chunk ``rollback=True`` append (``:453``)
 without a server: a failed job never leaves a half-written table visible.
+Every copy of committed files stages through one link helper
+(``Catalog._link_files``) and every commit becomes visible through one
+rename core (``Catalog._rename_in``), which rolls back on any exception.
 
 At 100 TB a "table" is a multi-file Parquet dataset (possibly
 hive-partitioned); everything here treats the path as a dataset directory,
@@ -20,6 +23,8 @@ never a single file, so the same code addresses both.
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import json
 import os
 import shutil
@@ -303,7 +308,7 @@ class Catalog:
 
         NOT for data-sized tables: no manifest, no commit id, no
         carryover — anything that needs snapshot machinery goes through
-        :meth:`write`.
+        :meth:`write`. The swap is every commit's :meth:`_rename_in`.
         """
         import pyarrow.parquet as papq
 
@@ -313,25 +318,7 @@ class Catalog:
         os.makedirs(self.root, exist_ok=True)
         tmp = f"{target}.__tmp_{uuid.uuid4().hex}"
         papq.write_table(table, tmp)
-        # a directory-shaped predecessor cannot be os.replace'd by a file:
-        # move it aside first and restore it if the swap fails (the same
-        # rollback discipline as _swap_in)
-        backup = (
-            f"{target}.__old_{uuid.uuid4().hex}"
-            if os.path.isdir(target) else None
-        )
-        try:
-            if backup:
-                os.rename(target, backup)
-            os.replace(tmp, target)
-        except Exception:
-            if backup and os.path.exists(backup):
-                os.rename(backup, target)
-            if os.path.exists(tmp):
-                os.remove(tmp)
-            raise
-        if backup:
-            shutil.rmtree(backup, ignore_errors=True)
+        self._rename_in(tmp, target)
         self._ns_cols.pop(target, None)
         return target
 
@@ -512,21 +499,15 @@ class Catalog:
                     remaining.get(rp) != e for rp, e in chunk_entries.items()
                 ):
                     continue  # dirty/partial chunk: rewrite its survivors
-                base = os.path.basename(chunk_path)
-                dst = os.path.join(staged, base)
+                src_dir, base = os.path.split(chunk_path)
                 try:
-                    try:
-                        os.link(chunk_path, dst)
-                    except FileNotFoundError:
-                        # reuse_from swapped away mid-commit (a racing
-                        # writer): reuse is an optimization only — fall
-                        # through to writing these entries fresh; OCC
-                        # decides the commit's fate at the swap
-                        continue
-                    except OSError:
-                        shutil.copy2(chunk_path, dst)  # cross-device
+                    self._link_files(src_dir, [base], staged)
                 except FileNotFoundError:
-                    continue  # same race on the copy path
+                    # reuse_from swapped away mid-commit (a racing
+                    # writer): reuse is an optimization only — fall
+                    # through to writing these entries fresh; OCC
+                    # decides the commit's fate at the swap
+                    continue
                 manifests.append(
                     {"name": base, "count": len(chunk_entries)}
                 )
@@ -882,27 +863,92 @@ class Catalog:
             if owns_staged:
                 shutil.rmtree(staged, ignore_errors=True)
             raise
-        backup = None
-        if os.path.exists(target):
-            backup = f"{target}.__old_{uuid.uuid4().hex}"
-            os.rename(target, backup)
-        try:
-            os.rename(staged, target)
-        except OSError:
-            if backup:
-                os.rename(backup, target)  # roll back the swap
-            raise
-        else:
-            if backup and keep_versions > 0:
-                self._archive_version(name, backup, keep_versions)
-                backup = None
-        finally:
-            if backup and os.path.exists(backup):
-                shutil.rmtree(backup, ignore_errors=True)
+        archive = functools.partial(
+            self._archive_version, name, keep=keep_versions
+        ) if keep_versions > 0 else None
+        self._rename_in(staged, target, archive, owns_staged)
         # a rewrite can change the schema (e.g. drop or add a ns-timestamp
         # column); the footer cache must not outlive the file it described
         self._ns_cols.pop(target, None)
         return target
+
+    def _rename_in(
+        self, staged: str, target: str, archive=None,
+        owns_staged: bool = True,
+    ) -> None:
+        """The rename core of every commit: move ``target`` (file or
+        directory) aside to an ``__old_`` sibling, ``os.replace``
+        ``staged`` in, and on ANY exception (``KeyboardInterrupt`` too)
+        move the backup back, discard an owned ``staged`` and re-raise.
+        After the swap the backup goes to ``archive`` or is deleted."""
+        backup = (
+            f"{target}.__old_{uuid.uuid4().hex}"
+            if os.path.exists(target) else None
+        )
+        moved = False
+        try:
+            if backup:
+                os.rename(target, backup)
+                moved = True
+            os.replace(staged, target)
+        except BaseException:
+            if moved:
+                os.rename(backup, target)
+            if owns_staged:
+                _discard(staged)
+            raise
+        try:
+            if backup and archive is not None:
+                archive(backup)
+                backup = None
+        finally:
+            if backup:
+                _discard(backup)
+
+    def _link_files(
+        self, src_root: str, relpaths: list[str], staged: str
+    ) -> None:
+        """Hard-link ``src_root/<rp>`` to ``staged/<rp>`` per relpath —
+        the one way committed files enter a new snapshot. A link refused
+        for any reason but ``FileExistsError``/``FileNotFoundError``
+        (which propagate) falls back to a copy into an exclusively
+        created file, so it never writes through an existing path."""
+        for rp in relpaths:
+            src, dst = os.path.join(src_root, rp), os.path.join(staged, rp)
+            if os.path.dirname(rp):
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+            try:
+                os.link(src, dst)
+            except (FileExistsError, FileNotFoundError):
+                raise
+            except OSError:
+                os.close(os.open(dst, os.O_WRONLY | os.O_CREAT | os.O_EXCL))
+                shutil.copy2(src, dst)
+
+    def _stage_copy(self, src_path: str, target: str) -> str:
+        """Stage the snapshot at ``src_path`` as a ``__tmp_`` sibling of
+        ``target`` and return it: data files by :meth:`_link_files`, the
+        manifest identities verbatim, and :meth:`_copied_props`."""
+        staged = f"{target}.__tmp_{uuid.uuid4().hex}"
+        os.makedirs(staged)
+        try:
+            self._link_files(src_path, self._list_names(src_path), staged)
+            man, chunks = self._manifest_with_chunks(src_path)
+            self._write_manifest(staged, man, reuse_chunks=chunks)
+            self._stage_snapshot_props(staged, self._copied_props(src_path))
+        except BaseException:
+            _discard(staged)
+            raise
+        return staged
+
+    def _copied_props(self, snapshot_path: str) -> dict:
+        """``snapshot_path``'s props without ``data_change``, which
+        described that snapshot's own commit (the :meth:`restore` rule)."""
+        return {
+            k: v
+            for k, v in self._props_at(snapshot_path).items()
+            if k != DATA_CHANGE_PROP
+        }
 
     def commit_id(self, name: str) -> str | None:
         """The table's current commit id (None for tables written before
@@ -1155,46 +1201,27 @@ class Catalog:
                     f"{expected_commit!r}, found {current!r}; re-read and "
                     "retry"
                 )
-        # manifest identities carried WITH the files: a carried file keeps
-        # its file_id, so snapshot diffs can prune it without inodes —
-        # read the manifest layout ONCE (ids here, chunk reuse at the swap)
+        if not all(f.startswith(target + os.sep) for f in carry_files):
+            raise ValueError(f"carry files must lie inside table {name!r}")
+        rps = [f[len(target) + 1:] for f in carry_files]
+        # manifest identities carried WITH the files, by relpath: a carried
+        # file keeps its file_id, so snapshot diffs can prune it without
+        # inodes — read the manifest layout ONCE (ids here, chunk reuse at
+        # the swap)
         src_manifest, src_chunks = self._manifest_with_chunks(target)
-        carried: dict[str, dict] = {}
+        carried = {rp: src_manifest[rp] for rp in rps if rp in src_manifest}
         staged = f"{target}.__tmp_{uuid.uuid4().hex}"
         df.write.mode("overwrite").parquet(staged)
         try:
-            for src in carry_files:
-                rp = (
-                    os.path.relpath(src, target)
-                    if src.startswith(target + os.sep)
-                    else os.path.basename(src)
-                )
-                if rp in src_manifest:
-                    carried[os.path.basename(src)] = src_manifest[rp]
-                dst = os.path.join(staged, os.path.basename(src))
-                try:
-                    os.link(src, dst)
-                except FileNotFoundError as ex:
-                    # the carry listing predates a concurrent commit that
-                    # removed this file — a lost-update in the making
-                    raise ConcurrentWriteError(
-                        f"carry file vanished (table {name!r} moved since "
-                        f"the listing was taken): {src}; re-read and retry"
-                    ) from ex
-                except OSError:
-                    try:
-                        shutil.copy2(src, dst)  # cross-device fallback
-                    except FileNotFoundError as ex:
-                        # same vanished-file race on the copy path (e.g.
-                        # link failed with EXDEV first)
-                        raise ConcurrentWriteError(
-                            f"carry file vanished (table {name!r} moved "
-                            f"since the listing was taken): {src}; "
-                            "re-read and retry"
-                        ) from ex
-        except ConcurrentWriteError:
+            self._link_files(target, rps, staged)
+        except FileNotFoundError as ex:
+            # the carry listing predates a concurrent commit that removed
+            # this file — a lost-update in the making
             shutil.rmtree(staged, ignore_errors=True)
-            raise
+            raise ConcurrentWriteError(
+                f"carry file vanished (table {name!r} moved since the "
+                f"listing was taken): {ex.filename}; re-read and retry"
+            ) from ex
         self._stage_snapshot_props(staged, snapshot_props)
         return self._swap_in(
             staged, name, keep_versions, expected_commit=expected_commit,
@@ -1251,13 +1278,7 @@ class Catalog:
         changes rows relative to the state it displaces — carrying it
         would let a change-feed tail silently skip the restore."""
         df = self.table_at(name, version)
-        props = {
-            k: v
-            for k, v in self._props_at(
-                self._version_path(name, version)
-            ).items()
-            if k != DATA_CHANGE_PROP
-        }
+        props = self._copied_props(self._version_path(name, version))
         return self.write(
             df, name, mode="overwrite",
             keep_versions=len(self.versions(name)) + 1,
@@ -1328,23 +1349,18 @@ class Catalog:
         are proportional to the small-file set alone.
 
         No-op (returns without a commit) when fewer than two small
-        files exist — one small file can't be made fewer. Returns
+        files exist — one small file can't be made fewer — and on a
+        nested (hive-partitioned) layout. Returns
         ``{"rewritten": n, "carried": n, "path": str|None}``.
         """
-        p = self.path(name)
-        if not os.path.exists(p):
-            raise TableNotFoundError(f"no table {name!r} under {self.root}")
         # token read WITH the file listing: compaction housekeeping racing
         # a writer must lose loudly, not resurrect the files it listed
         read_commit = self.commit_id(name)
-        files = [
-            os.path.join(p, f)
-            for f in os.listdir(p)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
+        files = self.data_files(name)
         small = [f for f in files if os.path.getsize(f) < min_file_bytes]
         large = [f for f in files if os.path.getsize(f) >= min_file_bytes]
-        if len(small) < 2:
+        p = self.path(name)
+        if len(small) < 2 or any(os.path.dirname(f) != p for f in files):
             return {"rewritten": 0, "carried": len(files), "path": None}
         n_bytes = sum(os.path.getsize(f) for f in small)
         n_out = max(1, -(-n_bytes // target_file_bytes))
@@ -1510,9 +1526,7 @@ class Catalog:
         # stamp the source dataset's mtime for staleness detection
         with open(os.path.join(staged, "_built_mtime"), "w") as f:
             f.write(repr(os.path.getmtime(p)))
-        if os.path.exists(out):
-            shutil.rmtree(out)
-        os.rename(staged, out)
+        self._rename_in(staged, out)
         return out
 
     def scan_skipping(
@@ -1606,6 +1620,8 @@ class Catalog:
         primitive: experiment on the clone, mutate it freely (every
         write path commits NEW files via the two-phase swap, so the
         source is never touched through a clone), drop it when done.
+        A :meth:`_stage_copy` (props carried) committed by
+        :meth:`commit_staged`, so the clone has its own commit id.
         Metadata (versions, indexes) is NOT cloned — the clone starts
         with a clean history."""
         sp = self.path(src)
@@ -1614,19 +1630,7 @@ class Catalog:
         dp = self.path(dst)
         if os.path.exists(dp):
             raise TableExistsError(f"table {dst!r} already exists")
-        os.makedirs(self.root, exist_ok=True)
-        staged = f"{dp}.__tmp_{uuid.uuid4().hex}"
-        os.makedirs(staged)
-        for f in self.data_files(src):
-            try:
-                os.link(f, os.path.join(staged, os.path.basename(f)))
-            except OSError:
-                shutil.copy2(f, os.path.join(staged, os.path.basename(f)))
-        # clone shares every file: carry the source's identities verbatim
-        man, chunks = self._manifest_with_chunks(sp)
-        self._write_manifest(staged, man, reuse_chunks=chunks)
-        os.rename(staged, dp)
-        return dp
+        return self.commit_staged(self._stage_copy(sp, dp), dst, mode="error")
 
     def history(self, name: str) -> list[dict]:
         """Version history for ``name``: one entry per archived snapshot
@@ -2099,7 +2103,8 @@ class Catalog:
         later overwrites, merges, compactions, or version vacuums leave
         the tag untouched. The cheap, release-grade "this exact data
         trained model X" pin. Re-tagging an existing tag raises (tags
-        are immutable; drop it first)."""
+        are immutable; drop it first). A :meth:`_stage_copy` (props
+        carried) made visible by :meth:`_rename_in`."""
         src = self.path(name)
         if not os.path.exists(src):
             raise TableNotFoundError(f"no table {name!r} under {self.root}")
@@ -2109,20 +2114,8 @@ class Catalog:
                 f"tag {tag!r} already exists for table {name!r}; tags are "
                 "immutable — drop_tag first"
             )
-        staged = f"{dst}.__tmp_{uuid.uuid4().hex}"
-        os.makedirs(staged)
-        for f in os.listdir(src):
-            if f.startswith(("_", ".")) and not f.endswith(".parquet"):
-                continue
-            try:
-                os.link(os.path.join(src, f), os.path.join(staged, f))
-            except OSError:
-                shutil.copy2(os.path.join(src, f), os.path.join(staged, f))
-        # the tag pins the exact snapshot: same files, same identities
-        man, chunks = self._manifest_with_chunks(src)
-        self._write_manifest(staged, man, reuse_chunks=chunks)
         os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.replace(staged, dst)
+        self._rename_in(self._stage_copy(src, dst), dst)
         return dst
 
     def table_at_tag(self, name: str, tag: str) -> DataFrame:
@@ -2330,6 +2323,8 @@ class Catalog:
         the filesystem layer with zero bookkeeping. Experiment on the
         branch (backfills, risky reprocessing, schema trials), then
         :meth:`publish_branch` to fast-forward the parent, or drop it.
+        The fork is a :meth:`_stage_copy` (identities and props carried)
+        committed by :meth:`commit_staged`: it has its own commit id.
         """
         src = self.path(name)
         if not os.path.exists(src):
@@ -2339,20 +2334,8 @@ class Catalog:
             raise TableExistsError(
                 f"branch {branch!r} already exists for table {name!r}"
             )
-        staged = f"{self.path(bname)}.__tmp_{uuid.uuid4().hex}"
-        os.makedirs(staged)
-        for f in os.listdir(src):
-            if f.startswith(("_", ".")) and not f.endswith(".parquet"):
-                continue
-            try:
-                os.link(os.path.join(src, f), os.path.join(staged, f))
-            except OSError:
-                shutil.copy2(os.path.join(src, f), os.path.join(staged, f))
-        # the fork shares every file with the parent: same identities, so
-        # branch_changes prunes to the files the branch later rewrites
-        man, chunks = self._manifest_with_chunks(src)
-        self._write_manifest(staged, man, reuse_chunks=chunks)
-        os.replace(staged, self.path(bname))
+        staged = self._stage_copy(src, self.path(bname))
+        self.commit_staged(staged, bname, mode="error")
         return bname
 
     def publish_branch(
@@ -2360,34 +2343,33 @@ class Catalog:
         drop: bool = True,
     ) -> str:
         """Fast-forward the parent table to the branch's current
-        snapshot: hard-link the branch's files into a staging directory
-        and run the same atomic swap as every other commit — publish
-        costs O(files) links + one rename regardless of data size, and
-        the displaced parent snapshot archives under ``keep_versions``
-        like any overwrite. ``drop`` removes the branch after publish
-        (its bytes survive through the published links)."""
+        snapshot: a :meth:`_stage_copy` of the branch (props carried) and
+        the same atomic swap as every other commit — publish costs
+        O(files) links + one rename regardless of data size, and the
+        displaced parent snapshot archives under ``keep_versions`` like
+        any overwrite. ``drop`` removes the branch after publish (its
+        bytes survive through the published links)."""
         bname = self._branch_name(name, branch)
         src = self.path(bname)
         if not os.path.exists(src):
             raise TableNotFoundError(
                 f"no branch {branch!r} for table {name!r} under {self.root}"
             )
-        staged = f"{self.path(name)}.__tmp_{uuid.uuid4().hex}"
-        os.makedirs(staged)
-        for f in os.listdir(src):
-            if f.startswith(("_", ".")) and not f.endswith(".parquet"):
-                continue
-            try:
-                os.link(os.path.join(src, f), os.path.join(staged, f))
-            except OSError:
-                shutil.copy2(os.path.join(src, f), os.path.join(staged, f))
-        # publish promotes the branch's exact files: keep their identities
-        man, chunks = self._manifest_with_chunks(src)
-        self._write_manifest(staged, man, reuse_chunks=chunks)
+        staged = self._stage_copy(src, self.path(name))
         out = self._swap_in(staged, name, keep_versions)
         if drop:
             shutil.rmtree(src, ignore_errors=True)
         return out
+
+
+def _discard(path: str) -> None:
+    """Delete a staged or displaced entry — a snapshot directory or a
+    single-file table — ignoring errors: it is debris either way."""
+    if os.path.isdir(path):
+        shutil.rmtree(path, ignore_errors=True)
+    else:
+        with contextlib.suppress(OSError):
+            os.remove(path)
 
 
 def _merge_chunks(chunks: list[tuple[str, dict[str, dict]]]) -> dict[str, dict]:

@@ -589,7 +589,8 @@ def merge_pruned(
     ``_PRUNE_SAFE_TYPES``, schema-widening sources (carried files could
     not see the new columns without mergeSchema reads), or tables with
     raw TIMESTAMP(NANOS) columns (the full path normalizes those to µs;
-    carrying files by reference would mix ns and µs physical types).
+    carrying files by reference would mix ns and µs physical types),
+    and nested (hive-partitioned) or single-file layouts.
 
     Returns ``{"path", "pruned", "files_total", "files_rewritten",
     "files_carried"}``.
@@ -700,6 +701,7 @@ def _merge_pruned_body(
     # passes this token so such a race raises ConcurrentWriteError (caller
     # re-reads and retries) instead of losing an update.
     read_commit = catalog.commit_id(name)
+    target = catalog.path(name)
     target_df = catalog.table(name)
     tgt_fields = {f.name: f.dataType for f in target_df.schema.fields}
     ks = _keys(key) if key is not None else []
@@ -708,18 +710,23 @@ def _merge_pruned_body(
         and (m is WriteMode.APPEND or ks)
         and all(isinstance(tgt_fields.get(k), _PRUNE_SAFE_TYPES) for k in ks)
         and not (set(source.columns) - set(tgt_fields))
-        and not catalog._nanos_columns(catalog.path(name))
+        and not catalog._nanos_columns(target)
     )
     if not prunable:
+        return _full()
+    files = catalog.data_files(name)
+    if any(os.path.dirname(f) != target for f in files):
+        # a hive-partitioned (nested) or single-file layout: flat new
+        # files beside it could not be read back as one table
         return _full()
 
     spark = source.sparkSession
     if m is WriteMode.APPEND:
         # append matches nothing: every existing file is clean by
         # construction and the new rows land as fresh files
-        dirty, clean = [], catalog.data_files(name)
+        dirty, clean = [], files
     else:
-        spans = catalog.file_key_spans(name, ks)
+        spans = catalog._spans_for_files(files, ks)
         forced = [s["path"] for s in spans if not s["ok"]]
         stat_spans = [s for s in spans if s["ok"]]
         touched = (
@@ -999,8 +1006,6 @@ def write_audit_publish(
     repaired by truncate on failure (src/agol_pandas.py:396,453) — the
     window WAP exists to close.
     """
-    import uuid as _uuid
-
     from agol_pandas_spark.errors import AuditFailedError
 
     m = WriteMode.parse(mode) if isinstance(mode, str) else mode
@@ -1009,13 +1014,11 @@ def write_audit_publish(
         if not catalog.exists(name)
         else merge(catalog.table(name), source, m, key)
     )
-    target = catalog.path(name)
-    os.makedirs(catalog.root, exist_ok=True)
-    staged = f"{target}.__tmp_{_uuid.uuid4().hex}"
-    merged.write.mode("overwrite").parquet(staged)
     # props stage WITH the data: audited and published in one rename —
     # a failed audit discards the marker along with the snapshot
-    catalog._stage_snapshot_props(staged, snapshot_props)
+    staged = catalog.stage(
+        merged, name, mode="overwrite", snapshot_props=snapshot_props
+    )
     if audits:
         spark = source.sparkSession
         staged_df = spark.read.parquet(staged)
@@ -1034,4 +1037,6 @@ def write_audit_publish(
         if violations:
             shutil.rmtree(staged, ignore_errors=True)
             raise AuditFailedError(violations)
-    return catalog._swap_in(staged, name, keep_versions)
+    return catalog.commit_staged(
+        staged, name, mode="overwrite", keep_versions=keep_versions
+    )

@@ -31,21 +31,14 @@ def save_dataframe(
     name: str,
     mode: str | WriteMode = WriteMode.APPEND,
     key: str | None = None,
-    partition_by: list[str] | None = None,
 ) -> DataFrame:
     """Write ``df`` into catalog table ``name`` under ``mode``; create the
     table if absent. Returns the lineage/status DataFrame.
 
-    ``partition_by`` hive-partitions new tables (partition pruning on read
-    — the scale substitute for the reference's server-side indexes).
+    Every write goes through :func:`write_table`, so it is staged and
+    committed like any catalog write (manifest, commit id, atomic swap).
     """
-    if partition_by and not catalog.exists(name):
-        # first write with explicit layout: stage partitioned, then merge
-        # path below is a plain append into the created table
-        target = catalog.path(name)
-        df.write.mode("errorifexists").partitionBy(*partition_by).parquet(target)
-    else:
-        write_table(catalog, df, name, mode=mode, key=key)
+    write_table(catalog, df, name, mode=mode, key=key)
     return write_status(catalog.table(name), key)
 
 

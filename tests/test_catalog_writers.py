@@ -756,6 +756,87 @@ def test_branch_fork_publish_and_drop(spark, tmp_path):
         pass
 
 
+def test_copies_of_nested_layout_keep_source_and_partition_column(
+    spark, tmp_path
+):
+    """A table written by an external ``partitionBy`` writer has the
+    same file name under ``k=0/`` and ``k=1/``. Clone, branch, tag,
+    publish and a pruned append must leave the source's bytes alone and
+    give copies that read the source's rows with ``k`` present."""
+    import hashlib
+
+    cat = Catalog(spark, str(tmp_path))
+    df = spark.range(40).select("id", (F.col("id") % 2).alias("k"))
+    df.coalesce(2).write.partitionBy("k").parquet(cat.path("t"))
+    rps = cat._list_names(cat.path("t"))
+    assert len({os.path.basename(rp) for rp in rps}) < len(rps)
+
+    def digests(path):
+        out = {}
+        for rp in cat._list_names(path):
+            with open(os.path.join(path, rp), "rb") as f:
+                out[rp] = hashlib.sha256(f.read()).hexdigest()
+        return out
+
+    def rows(df):
+        return sorted((r["id"], r["k"]) for r in df.collect())
+
+    src = digests(cat.path("t"))
+    want = [(i, i % 2) for i in range(40)]
+    assert rows(cat.table("t")) == want
+
+    def check(copy):
+        assert digests(cat.path("t")) == src
+        assert digests(copy) == src
+        assert rows(spark.read.parquet(copy)) == want
+
+    cat.clone("t", "c")
+    check(cat.path("c"))
+    check(cat.path(cat.branch_table("t", "b")))
+    cat.tag_snapshot("t", "r")
+    check(cat._tag_path("t", "r"))
+
+    cat.publish_branch("t", "b")
+    assert digests(cat.path("t")) == src
+    assert rows(cat.table("t")) == want
+
+    extra = spark.createDataFrame([(100, 0), (101, 1)], "id long, k int")
+    write_table(cat, extra, "t", mode="append", prune=True)
+    assert digests(cat.path("c")) == src
+    assert rows(cat.table("c")) == want
+    assert rows(cat.table("t")) == want + [(100, 0), (101, 1)]
+
+
+def test_clone_and_branch_carry_commit_id_and_props(spark, tmp_path):
+    """A fresh clone or branch has its own commit id, so its first
+    read-modify-write is OCC-guarded, and carries the source's snapshot
+    props without ``data_change`` — through publish too."""
+    from agol_pandas_spark.catalog import DATA_CHANGE_PROP
+    from agol_pandas_spark.errors import ConcurrentWriteError
+
+    cat = Catalog(spark, str(tmp_path))
+    df = spark.range(30).select(F.col("id").alias("k"))
+    cat.write(df.repartition(3), "t", snapshot_props={"m": 1})
+    cat.compact("t")
+    assert cat.snapshot_props("t") == {"m": 1, DATA_CHANGE_PROP: False}
+
+    cat.clone("t", "c")
+    pub = cat.branch_table("t", "pub")
+    for name in ("c", pub):
+        assert cat.commit_id(name) is not None
+        assert cat.snapshot_props(name) == {"m": 1}
+    cat.publish_branch("t", "pub")
+    assert cat.snapshot_props("t") == {"m": 1}
+
+    occ = cat.branch_table("t", "occ")
+    stale = cat.commit_id(occ)
+    assert stale is not None
+    cat.write(df.limit(5), occ, mode="overwrite")
+    with pytest.raises(ConcurrentWriteError):
+        cat.write(df.limit(7), occ, mode="overwrite", expected_commit=stale)
+    assert cat.table(occ).count() == 5
+
+
 def test_optimistic_concurrency_conflict(spark, tmp_path):
     """write(expected_commit=...) refuses the swap when another writer
     committed in between (no lost update), discards the staged dir,
@@ -821,6 +902,36 @@ def test_write_local_failed_swap_keeps_old_table(
     cat.write_local(new, "t", mode="overwrite")
     assert os.path.isfile(cat.path("t"))
     assert [tuple(r) for r in cat.table("t").collect()] == [(9, "z")]
+    # a snapshot overwrite of the single-file table deletes its backup
+    cat.write(old, "t", mode="overwrite")
+    assert os.listdir(tmp_path) == ["t.parquet"]
+
+
+def test_interrupted_final_rename_keeps_old_table(spark, tmp_path, monkeypatch):
+    """A KeyboardInterrupt at the rename that moves the staged snapshot
+    in rolls the overwrite back: the table still exists and reads its
+    old rows (before, the displaced snapshot was deleted and the table
+    vanished)."""
+    cat = Catalog(spark, str(tmp_path))
+    schema = "k long, s string"
+    cat.write(spark.createDataFrame([(1, "a"), (2, "b")], schema), "t")
+    new = spark.createDataFrame([(9, "z")], schema)
+
+    def interrupt_staged(fn):
+        def call(src, dst, *args, **kwargs):
+            if "__tmp_" in os.path.basename(src):
+                raise KeyboardInterrupt
+            return fn(src, dst, *args, **kwargs)
+
+        return call
+
+    with monkeypatch.context() as m:
+        for attr in ("rename", "replace"):
+            m.setattr(catalog_mod.os, attr, interrupt_staged(getattr(os, attr)))
+        with pytest.raises(KeyboardInterrupt):
+            cat.write(new, "t", mode="overwrite")
+    assert cat.exists("t")
+    assert sorted(map(tuple, cat.table("t").collect())) == [(1, "a"), (2, "b")]
 
 
 @pytest.mark.parametrize("identity", ["auto", "manifest"])

@@ -9,7 +9,6 @@ import itertools
 import os
 import shutil
 
-import pyarrow.parquet as papq
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,6 +24,7 @@ from agol_pandas_spark.operators.similarity import (
     probe_ivfpq_index,
     write_ivfpq_index,
 )
+from conftest import _rebuild_failing_at
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -144,33 +144,6 @@ def test_ivfpq_index_is_three_tables_with_pinned_job_counts(
         "pivot_id": "pivot_id", "vec": "embedding", "payload_cols": ["label"],
     }
     assert _jobs(spark, lambda: _ivfpq_probe(cat, queries)) == 6
-
-
-def _rebuild_failing_at(monkeypatch, position, rebuild) -> bool:
-    """Run ``rebuild`` with the ``position``-th call (counted across
-    ``os.replace``, ``os.rename`` and ``pyarrow.parquet.write_table``)
-    raising ``OSError``. False when the rebuild finished before reaching
-    that call."""
-    calls = [0]
-
-    def failing(fn):
-        def call(*args, **kwargs):
-            calls[0] += 1
-            if calls[0] - 1 == position:
-                raise OSError(f"injected failure at call {position}")
-            return fn(*args, **kwargs)
-
-        return call
-
-    with monkeypatch.context() as m:
-        for mod, attr in ((os, "replace"), (os, "rename"), (papq, "write_table")):
-            m.setattr(mod, attr, failing(getattr(mod, attr)))
-        try:
-            rebuild()
-        except OSError:
-            if calls[0] <= position:
-                raise
-    return calls[0] > position
 
 
 def _fault_outcomes(spark, monkeypatch, tmp_path, old_root, rebuild, probe, errors):
