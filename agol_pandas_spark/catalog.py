@@ -42,6 +42,7 @@ from agol_pandas_spark.errors import (
     TableNotFoundError,
 )
 from agol_pandas_spark.functions.names import backticked, normalize_service_name
+from agol_pandas_spark.session import local_frame
 
 TEST_TABLES = (
     "region",
@@ -58,13 +59,16 @@ TEST_TABLES = (
 
 
 # Scan-DataFrame cache shared by all Catalog instances: building a parquet
-# scan costs ~100 ms of driver time per call (file listing + footer schema
-# read over py4j), and workload queries construct a fresh Catalog each
-# invocation. Keyed by (session, path, options, dataset mtime, commit id) —
-# an overwrite or drop changes the path's mtime, and the commit id tells
+# scan costs tens of ms of driver time per call (file listing, the first
+# data file's footer read for the schema and its ns columns, Catalyst
+# analysis), and workload queries construct a fresh Catalog each
+# invocation. Keyed by (session, path, options, dataset mtime, commit id)
+# — an overwrite or drop changes the path's mtime, and the commit id tells
 # two snapshots apart where a coarse-timestamp filesystem gives them the
 # same mtime, so staleness is structural rather than relying on explicit
-# invalidation hooks.
+# invalidation hooks. Nothing a cached scan depends on is cached per
+# instance: a miss works the schema and the ns columns out again, so
+# another catalog's commit cannot leave a stale column type behind.
 _DF_CACHE: dict[tuple, DataFrame] = {}
 _DF_CACHE_MAX = 256
 
@@ -94,6 +98,15 @@ DATA_CHANGE_PROP = "data_change"
 MANIFEST_CHUNK = 4096
 # File count at which per-file stats and footer reads fan out to executors.
 DIST_LIST_THRESHOLD = 100_000
+# Dirty-file count up to which a pruned merge merges the dirty files' scan
+# schemas from driver footer reads (``Catalog._footer_schema``); above it
+# Spark's parallel ``mergeSchema`` inference job runs. Measured on a local
+# disk with 4 cores: the driver loop costs about 12 ms plus 1.2-1.8 ms
+# per file (64 files: 87-115 ms), one inference job 110-160 ms for up to
+# 32 files and 475-550 ms for 64. 64 is the largest count measured at
+# which the serial loop stays within one job's floor; on storage where a
+# footer costs a network round trip the job's parallelism wins sooner.
+FOOTER_MERGE_MAX_FILES = 64
 # Sidecar row count at which a key-index probe decodes on executors.
 INDEX_SPARK_THRESHOLD = 262_144
 
@@ -111,7 +124,6 @@ class Catalog:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self._ns_cols: dict[str, list[str]] = {}
         # diagnostics of the LAST shared-file diff this catalog ran:
         # {"mode": "chunk"|"full", "chunks_total", "chunks_parsed"} —
         # how scale tests pin the O(dirty chunks) metadata-read claim
@@ -167,20 +179,95 @@ class Catalog:
 
     # -- read ---------------------------------------------------------------
 
-    def _nanos_columns(self, path: str) -> list[str]:
-        """Columns stored as parquet TIMESTAMP(NANOS), from the footer
-        (driver-side metadata read, cached per path)."""
-        if path not in self._ns_cols:
-            import pyarrow.dataset as ds
-            import pyarrow as pa
+    def _schema_file(
+        self, path: str, files: list[str] | None = None
+    ) -> tuple[str | None, bool]:
+        """The data file whose footer decides a scan's schema, and whether
+        that footer alone can decide it: True for a flat or single-file
+        layout, False for a nested (hive-style) one, whose partition
+        columns only Spark's inference derives from the paths.
 
-            schema = ds.dataset(path, format="parquet").schema
-            self._ns_cols[path] = [
-                f.name
-                for f in schema
-                if isinstance(f.type, pa.TimestampType) and f.type.unit == "ns"
-            ]
-        return self._ns_cols[path]
+        A non-empty ``files`` (a sorted subset of the snapshot) decides
+        without listing the snapshot: ``files[0]``. Otherwise it is the
+        snapshot's first data file in :meth:`_list_names` order (sorted
+        relpaths), found for a flat directory in one top-level ``scandir``
+        pass with no sort. ``(None, False)`` for an empty directory."""
+        if files:
+            return files[0], all(
+                f == path or os.path.dirname(f) == path for f in files
+            )
+        if os.path.isfile(path):
+            return path, True
+        first = None
+        with os.scandir(path) as it:
+            for e in it:
+                if e.name.startswith(("_", ".")):
+                    continue
+                if e.is_dir(follow_symlinks=False):
+                    names = self._list_names(path)
+                    return (
+                        os.path.join(path, names[0]) if names else None
+                    ), False
+                if first is None or e.name < first:
+                    first = e.name
+        return (os.path.join(path, first), True) if first else (None, False)
+
+    def _nanos_columns(self, path: str) -> list[str]:
+        """Columns stored as parquet TIMESTAMP(NANOS) in the footer of the
+        file that decides ``path``'s scan schema (:meth:`_schema_file`;
+        ``path`` may be that file itself). Read on every call, never
+        cached: a snapshot's files change under every commit, this
+        catalog's or another's."""
+        import pyarrow as pa
+        import pyarrow.parquet as papq
+
+        f, _ = self._schema_file(path)
+        if f is None:
+            return []
+        return [
+            c.name
+            for c in papq.read_schema(f)
+            if isinstance(c.type, pa.TimestampType) and c.type.unit == "ns"
+        ]
+
+    def _footer_schema(
+        self, files: list[str], merge: bool = False
+    ) -> T.StructType:
+        """The scan schema Spark would infer for ``files``, from parquet
+        footers read on the driver: no Spark job (``spark.read.parquet``
+        without a schema starts one). Each footer converts through
+        Spark's ``readSchemaFromFooter`` with the session's converter,
+        the code the inference job runs. ``merge=False`` reads
+        ``files[0]`` only and its schema wins; ``merge=True`` folds every
+        file's schema in order with ``StructType.merge``, as
+        ``mergeSchema`` does, at about 1.5 ms of py4j per file on a local
+        disk (see ``FOOTER_MERGE_MAX_FILES``).
+        """
+        jvm = self.spark._jvm
+        parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+        hconf = self.spark._jsc.hadoopConfiguration()
+        sql_conf = self.spark._jsparkSession.sessionState().conf()
+        converter = parquet.ParquetToSparkSchemaConverter(sql_conf)
+        no_filter = (
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter
+            .NO_FILTER
+        )
+        # resolved once, not per file: each step of a py4j package path
+        # is a round trip to the JVM
+        hadoop_path = jvm.org.apache.hadoop.fs.Path
+        input_file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath
+        read_footer = parquet.ParquetFooterReader.readFooter
+        footer = jvm.org.apache.parquet.hadoop.Footer
+        to_spark = parquet.ParquetFileFormat.readSchemaFromFooter
+        case_sensitive = sql_conf.caseSensitiveAnalysis() if merge else None
+        schema = None
+        for f in files if merge else files[:1]:
+            path = hadoop_path(f)
+            meta = read_footer(input_file(path, hconf), no_filter)
+            one = to_spark(footer(path, meta), converter)
+            schema = one if schema is None else schema.merge(one, case_sensitive)
+        # a file scan reads every column as nullable, whatever the footer says
+        return T._parse_datatype_json_string(schema.asNullable().json())
 
     def table(self, name: str, merge_schema: bool = False) -> DataFrame:
         """Lazy scan of a catalog table (replaces the reference's eager
@@ -189,6 +276,15 @@ class Catalog:
         Parquet TIMESTAMP(NANOS) columns (which Spark reads as long-nanos
         under ``nanosAsLong``) are converted to µs TimestampType —
         truncation, matching what DuckDB's parquet reader does natively.
+
+        The scan schema of a single-file or flat table comes from one
+        driver footer read (:meth:`_footer_schema`), so building the scan
+        starts no Spark job. With ``merge_schema`` off the FIRST data file
+        in :meth:`_list_names` order (sorted relpaths) decides it, and the
+        same file's footer names the ns columns: the files of a table are
+        assumed to agree, as in Spark's own inference. A nested
+        (hive-style) layout keeps Spark's inference, which also derives
+        its partition columns from the paths.
 
         ``merge_schema=True`` resolves an evolved multi-file dataset to the
         union schema (files written before a column existed read it as
@@ -206,17 +302,13 @@ class Catalog:
         cached = _DF_CACHE.get(key)
         if cached is not None:
             return cached
+        first, flat = self._schema_file(p)
         reader = self.spark.read
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(p)
-        for c in self._nanos_columns(p):
-            # guard on the type Spark actually produced: INT96 columns also
-            # look like ns to pyarrow but arrive as TimestampType already
-            if isinstance(df.schema[c].dataType, T.LongType):
-                df = df.withColumn(
-                    c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
-                )
+        elif flat:
+            reader = reader.schema(self._footer_schema([first]))
+        df = self._convert_nanos(reader.parquet(p), first or p)
         if len(_DF_CACHE) >= _DF_CACHE_MAX:
             _DF_CACHE.clear()
         _DF_CACHE[key] = df
@@ -319,7 +411,6 @@ class Catalog:
         tmp = f"{target}.__tmp_{uuid.uuid4().hex}"
         papq.write_table(table, tmp)
         self._rename_in(tmp, target)
-        self._ns_cols.pop(target, None)
         return target
 
     def _stage_snapshot_props(
@@ -867,9 +958,6 @@ class Catalog:
             self._archive_version, name, keep=keep_versions
         ) if keep_versions > 0 else None
         self._rename_in(staged, target, archive, owns_staged)
-        # a rewrite can change the schema (e.g. drop or add a ns-timestamp
-        # column); the footer cache must not outlive the file it described
-        self._ns_cols.pop(target, None)
         return target
 
     def _rename_in(
@@ -1151,8 +1239,8 @@ class Catalog:
                     rows, columns=[f.name for f in schema.fields]
                 )
 
-        paths = self.spark.createDataFrame(
-            [(f,) for f in files], "path string"
+        paths = local_frame(
+            self.spark, [(f,) for f in files], T.StructType.fromDDL("path string")
         ).repartition(min(len(files), 64))
         return paths.mapInPandas(read_footers, schema)
 
@@ -1557,8 +1645,8 @@ class Catalog:
         # hash the probe values with the SAME Spark kernel (tiny job,
         # |values| rows — model state, not data)
         field = next(f for f in self.table(name).schema.fields if f.name == col)
-        probe = self.spark.createDataFrame(
-            [(v,) for v in values], T.StructType([field])
+        probe = local_frame(
+            self.spark, [(v,) for v in values], T.StructType([field])
         )
         want = {
             r["h"]
@@ -1587,7 +1675,7 @@ class Catalog:
             stats = {"files_total": files_total, "files_read": len(files_read)}
             if not files_read:
                 return (
-                    self.spark.createDataFrame([], self.table(name).schema)
+                    local_frame(self.spark, [], self.table(name).schema)
                     .filter(F.col(col).isin(values)),
                     stats,
                 )
@@ -1608,7 +1696,7 @@ class Catalog:
                 files_read.add(file)
         stats = {"files_total": len(files_all), "files_read": len(files_read)}
         if not files_read:
-            out = self.spark.createDataFrame([], self.table(name).schema)
+            out = local_frame(self.spark, [], self.table(name).schema)
         else:
             out = self.spark.read.parquet(*sorted(files_read))
         return out.filter(F.col(col).isin(values)), stats
@@ -1668,15 +1756,29 @@ class Catalog:
     def _read_snapshot(self, path: str, files: list[str] | None = None) -> DataFrame:
         """Scan a snapshot (optionally a file subset) with ``table()``'s
         type semantics — TIMESTAMP(NANOS) columns convert to µs — so two
-        snapshots of one table always compare type-identically."""
+        snapshots of one table always compare type-identically.
+
+        Like :meth:`table`, a single-file or flat snapshot takes its scan
+        schema, and its TIMESTAMP(NANOS) columns, from one driver footer
+        read instead of an inference job: ``files[0]``'s for a subset
+        read, which lists nothing (the shared-file pruning's subsets stay
+        O(subset) here), or the snapshot's first file for a full or empty
+        read. A nested layout keeps Spark's inference."""
+        first, flat = self._schema_file(path, files)
+        reader = self.spark.read
+        if flat:
+            reader = reader.schema(self._footer_schema([first]))
         if files is not None and not files:
-            empty = self.spark.read.parquet(path).limit(0)
-            return self._convert_nanos(empty, path)
-        df = self.spark.read.parquet(*(files if files is not None else [path]))
-        return self._convert_nanos(df, path)
+            return self._convert_nanos(
+                reader.parquet(path).limit(0), first or path
+            )
+        df = reader.parquet(*(files if files is not None else [path]))
+        return self._convert_nanos(df, first or path)
 
     def _convert_nanos(self, df: DataFrame, path: str) -> DataFrame:
         for c in self._nanos_columns(path):
+            # guard on the type Spark actually produced: INT96 columns also
+            # look like ns to pyarrow but arrive as TimestampType already
             if isinstance(df.schema[c].dataType, T.LongType):
                 df = df.withColumn(
                     c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
@@ -2305,7 +2407,6 @@ class Catalog:
         shutil.rmtree(self._tombstone_path(name), ignore_errors=True)
         # stale pins would block vacuum on the NEXT same-named table
         shutil.rmtree(self._pin_dir(name), ignore_errors=True)
-        self._ns_cols.pop(p, None)
 
     def _branch_name(self, name: str, branch: str) -> str:
         return f"{name}__branch_{normalize_service_name(branch)}"

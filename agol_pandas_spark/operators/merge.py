@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
+from agol_pandas_spark.catalog import FOOTER_MERGE_MAX_FILES
 from agol_pandas_spark.errors import (
     DuplicateKeyError,
     EmptyInputError,
@@ -47,6 +48,7 @@ from agol_pandas_spark.errors import (
     UnknownModeError,
     SchemaMismatchError,
 )
+from agol_pandas_spark.session import local_frame
 
 
 class WriteMode(str, Enum):
@@ -474,6 +476,10 @@ def _touched_paths(
       files. (Strings don't grid-bin without a collation-faithful
       keyspace map; dates could but the win is marginal at file counts
       where this path is chosen.)
+
+    Either span table is built on the driver as an Arrow local relation
+    (``session.local_frame``), so the touch test is one SQL job over the
+    source and starts no Python worker.
     """
     spark = source.sparkSession
     fields = [T.StructField("__path", T.StringType())]
@@ -510,7 +516,7 @@ def _touched_paths(
             rows.extend((cell, *base) for cell in range(lo_c, hi_c + 1))
         touched = set(forced)
         if rows:
-            cells_df = spark.createDataFrame(rows, cell_fields)
+            cells_df = local_frame(spark, rows, cell_fields)
             probe = source.select(
                 *ks, (F.col(k0).cast("long") - F.pmod(F.col(k0).cast("long"), F.lit(g)))
                 .cast("long").alias("__kc")
@@ -541,7 +547,7 @@ def _touched_paths(
         tuple([s["path"]] + [v for k in ks for v in (s["min"][k], s["max"][k])])
         for s in stat_spans
     ]
-    span_df = spark.createDataFrame(rows, T.StructType(fields))
+    span_df = local_frame(spark, rows, T.StructType(fields))
     return {
         r["__path"]
         for r in source.select(*ks)
@@ -579,7 +585,12 @@ def merge_pruned(
     3. run the ordinary :func:`merge` against the dirty slice only —
        sound because a file whose span excludes every source key cannot
        contain a matching row, so its rows pass through any keyed mode
-       unchanged;
+       unchanged. The dirty files are read with the union of their
+       footer schemas, merged on the driver
+       (``Catalog._footer_schema(..., merge=True)``, Spark's
+       ``mergeSchema`` without its inference job; above
+       ``FOOTER_MERGE_MAX_FILES`` dirty files, the measured cut-over
+       named in its comment, Spark's parallel inference runs instead); an empty dirty set is an empty local relation;
     4. commit via ``Catalog.write_with_carryover``: dirty files replaced
        by the merge output, clean files hard-linked into the new snapshot
        (carried by reference, zero copy), one atomic swap.
@@ -748,10 +759,16 @@ def _merge_pruned_body(
             "files_carried": len(clean),
         }
 
-    if dirty:
+    if len(dirty) > FOOTER_MERGE_MAX_FILES:
         dirty_df = spark.read.option("mergeSchema", "true").parquet(*dirty)
+    elif dirty:
+        # each footer is opened a second time here (the spans above read
+        # it through pyarrow); the cap bounds that to about 0.1 s
+        dirty_df = spark.read.schema(
+            catalog._footer_schema(dirty, merge=True)
+        ).parquet(*dirty)
     else:
-        dirty_df = spark.createDataFrame([], target_df.schema)
+        dirty_df = local_frame(spark, [], target_df.schema)
     result_dirty = merge(
         dirty_df, source, m, ks or None, _source_checked=True
     )

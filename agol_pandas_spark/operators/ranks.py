@@ -40,7 +40,10 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
+
+from agol_pandas_spark.session import local_frame
 
 __all__ = [
     "add_global_ranks",
@@ -189,10 +192,13 @@ def add_global_ranks(
         kacc += stats[pid][1]
 
     offs = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(pid, rows_before[pid], keys_before[pid]) for pid in sorted(stats)]
             or [(0, 0, 0)],
-            "__pid int, __rows_before long, __keys_before long",
+            T.StructType.fromDDL(
+                "__pid int, __rows_before long, __keys_before long"
+            ),
         )
     )
 

@@ -20,6 +20,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from agol_pandas_spark.functions.text import (
     count_tokens_in,
@@ -27,6 +28,7 @@ from agol_pandas_spark.functions.text import (
     tokens,
     word_shingles,
 )
+from agol_pandas_spark.session import local_frame
 
 # tiny built-in stopword profiles for the language-ID heuristic
 LANG_PROFILES: dict[str, tuple[str, ...]] = {
@@ -431,9 +433,10 @@ def domain_mix_sample(
     catalog statistics instead to make it one pass.
     """
     spark = df.sparkSession
-    wdf = spark.createDataFrame(
+    wdf = local_frame(
+        spark,
         [(d, float(w)) for d, w in weights.items()],
-        f"{domain_col} string, __w double",
+        T.StructType.fromDDL(f"{domain_col} string, __w double"),
     )
     counts = (
         df.join(F.broadcast(wdf), domain_col)

@@ -25,6 +25,7 @@ import os
 from pyspark.sql import DataFrame
 
 from agol_pandas_spark.errors import EmptyInputError, TableNotFoundError
+from agol_pandas_spark.session import local_frame
 
 
 def refresh_join_view(
@@ -251,7 +252,7 @@ def _td_pruned_scan(
     dirty = sorted(set(forced) | touched)
     spark = fact.sparkSession
     if not dirty:
-        return spark.createDataFrame([], fact.schema)
+        return local_frame(spark, [], fact.schema)
     return spark.read.schema(fact.schema).parquet(*dirty)
 
 
@@ -594,7 +595,7 @@ def commit_join_view_delta(
     if dirty:
         dirty_df = spark.read.schema(view.schema).parquet(*sorted(dirty))
     else:
-        dirty_df = spark.createDataFrame([], view.schema)
+        dirty_df = local_frame(spark, [], view.schema)
     kept_dirty = _drop_touched(dirty_df, tf, tds, fkeys)
     result = kept_dirty.select(*cols).unionByName(added.select(*cols))
     path = view_catalog.write_with_carryover(

@@ -65,6 +65,37 @@ def get_spark(
     return spark
 
 
+def local_frame(spark, rows, schema):
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema``'s field
+    order) as an Arrow-backed local relation.
+
+    ``spark.createDataFrame(rows, schema)`` turns a Python list into a
+    pickled Python RDD, so every task over it needs a Python worker (a
+    cold worker daemon costs about a second). Here the rows become one
+    ``pa.Table`` that the JVM decodes into a ``LocalRelation``: no job, no
+    worker. Values convert through each Spark type's own ``toInternal``
+    first, so a naive ``datetime`` means what it means on the list path
+    (process-local time) and the frame collects the same rows. An empty
+    ``rows`` gives an empty frame.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = [
+        pa.array(
+            [f.dataType.toInternal(v) for v in col]
+            if f.dataType.needConversion() else list(col),
+            type=af.type,
+        )
+        for f, af, col in zip(schema.fields, arrow_schema, cols)
+    ]
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow_schema), schema
+    )
+
+
 def release_session_blocks(spark) -> None:
     """Release every cached block the engine may have left in the
     session: the SQL cache, the rank operators' bounded FIFO of

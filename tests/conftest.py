@@ -31,6 +31,16 @@ def catalog(spark, sf_dir):
     return Catalog(spark, sf_dir)
 
 
+def _jobs(spark, fn):
+    """Spark jobs ``fn`` started, from any thread: the scheduler's job-id
+    counter, not a job group (jobs submitted from pool threads do not
+    inherit the caller's group)."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    fn()
+    return sched.nextJobId() - before
+
+
 def _rebuild_failing_at(
     monkeypatch, position, rebuild,
     targets=((os, "replace"), (os, "rename"), (papq, "write_table")),

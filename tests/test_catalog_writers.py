@@ -7,6 +7,7 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from agol_pandas_spark import catalog as catalog_mod
 from agol_pandas_spark.catalog import MANIFEST_NAME, Catalog
@@ -150,6 +151,104 @@ def test_ns_cols_cache_invalidated_on_rewrite(spark, tmp_path):
     # and the reverse: rewrite without the ns column must not KeyError
     cat.write(plain, "t", mode="overwrite")
     assert [f.name for f in cat.table("t").schema] == ["k"]
+
+
+def test_ns_columns_follow_another_catalogs_commit(spark, tmp_path):
+    """Catalog A has read a table whose ``t`` is TIMESTAMP(NANOS); catalog
+    B overwrites it with ``t`` as int64. A's next read, and a fresh
+    catalog's, must see the bigint — a ns-column list remembered from
+    before B's commit converted 42 to 1970-01-01 and left that frame in
+    the shared scan cache."""
+    import pyarrow as pa
+
+    a, b = Catalog(spark, str(tmp_path)), Catalog(spark, str(tmp_path))
+    a.write_local(
+        pa.table({"k": [1], "t": pa.array([10**9], pa.timestamp("ns"))}), "x"
+    )
+    assert a.table("x").schema["t"].dataType.typeName() == "timestamp"
+    b.write_local(pa.table({"k": [1], "t": [42]}), "x", mode="overwrite")
+    for cat in (a, Catalog(spark, str(tmp_path))):
+        df = cat.table("x")
+        assert df.schema["t"].dataType.typeName() == "long"
+        assert [tuple(r) for r in df.collect()] == [(1, 42)]
+
+
+def _inferred(spark, path):
+    return spark.read.parquet(path).schema
+
+
+def test_footer_schema_equals_inferred_schema(spark, sf_dir, tmp_path):
+    """The driver footer read gives exactly the schema Spark's inference
+    job gives: every sf0.001 and sf0.01 corpus table, a flat
+    Spark-written table, a single-file ``write_local`` table, and
+    ns-timestamp, list<float> and decimal columns (which ``table()``
+    converts only in the ns case)."""
+    import decimal
+
+    import pyarrow as pa
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    for root in sorted({sf_dir, sf01}):
+        corpus = Catalog(spark, root)
+        for n in corpus.list_tables():
+            inferred = _inferred(spark, corpus.path(n))
+            assert corpus.table(n).schema == inferred, (root, n)
+
+    cat = Catalog(spark, str(tmp_path))
+    cat.write(
+        spark.range(50).selectExpr(
+            "id", "cast(id as string) s", "array(cast(id as float)) v",
+            "cast(id as decimal(12, 3)) dec", "timestamp_micros(id) ts",
+        ).repartition(4),
+        "flat",
+    )
+    cat.write_local(
+        pa.table({
+            "id": pa.array([1, None], pa.int64()),
+            "ns": pa.array([1, 2], pa.timestamp("ns")),
+            "us": pa.array([1, 2], pa.timestamp("us", tz="UTC")),
+            "v": pa.array([[1.0, 2.0], None], pa.list_(pa.float32())),
+            "dec": pa.array([decimal.Decimal("1.50"), None],
+                            pa.decimal128(9, 2)),
+        }),
+        "single",
+    )
+    for n in ("flat", "single"):
+        inferred = _inferred(spark, cat.path(n))
+        assert cat._footer_schema(cat.data_files(n)) == inferred, n
+    assert cat.table("flat").schema == _inferred(spark, cat.path("flat"))
+    single = cat.table("single").schema
+    assert single["ns"].dataType == T.TimestampType()
+    assert [f for f in single if f.name != "ns"] == [
+        f for f in _inferred(spark, cat.path("single")) if f.name != "ns"
+    ]
+
+
+def test_nested_and_merge_schema_reads_keep_their_columns(spark, tmp_path):
+    """Scans the footer cannot describe keep Spark's inference: a
+    ``partitionBy`` table keeps its path-derived column, and
+    ``merge_schema=True`` (like the pruned merge's dirty read) keeps the
+    union of the files' columns."""
+    cat = Catalog(spark, str(tmp_path))
+    spark.range(6).select("id", (F.col("id") % 2).alias("k")).write \
+        .partitionBy("k").parquet(cat.path("nested"))
+    assert cat.table("nested").columns == ["id", "k"]
+    assert sorted((r.id, r.k) for r in cat.table("nested").collect()) == [
+        (i, i % 2) for i in range(6)
+    ]
+
+    cat.write(spark.createDataFrame([(1, "x")], "id long, a string"), "t")
+    staged = str(tmp_path / "staged")
+    spark.createDataFrame([(2, 9.5)], "id long, b double") \
+        .coalesce(1).write.parquet(staged)
+    part = next(f for f in os.listdir(staged) if f.endswith(".parquet"))
+    os.rename(os.path.join(staged, part), os.path.join(cat.path("t"), "z.parquet"))
+    files = cat.data_files("t")
+    assert cat.table("t", merge_schema=True).columns == ["id", "a", "b"]
+    union = spark.read.option("mergeSchema", "true").parquet(*files).schema
+    assert cat._footer_schema(files, merge=True) == union
+    # merge off: the first file in listing order decides
+    assert cat.table("t").columns == ["id", "a"]
 
 
 def test_table_cache_keys_on_commit_not_mtime(spark, out_cat):

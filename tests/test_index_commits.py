@@ -24,7 +24,7 @@ from agol_pandas_spark.operators.similarity import (
     probe_ivfpq_index,
     write_ivfpq_index,
 )
-from conftest import _rebuild_failing_at
+from conftest import _jobs, _rebuild_failing_at
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -100,16 +100,6 @@ def _ivfpq_build(cat, emb, pivots, cb):
     )
 
 
-def _jobs(spark, fn):
-    """Spark jobs ``fn`` started, from any thread: the scheduler's job-id
-    counter, not a job group (jobs submitted from pool threads do not
-    inherit the caller's group)."""
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-    before = sched.nextJobId()
-    fn()
-    return sched.nextJobId() - before
-
-
 def test_lsh_index_is_one_table_with_pinned_job_counts(spark, sf_dir, tmp_path):
     docs = Catalog(spark, sf_dir).table("documents")
     corpus = docs.filter(F.col("source") != "src0")
@@ -122,7 +112,7 @@ def test_lsh_index_is_one_table_with_pinned_job_counts(spark, sf_dir, tmp_path):
     assert cat.snapshot_props("idx") == {
         "lsh": {"shingle_size": 3, "num_hashes": 8, "band_size": 4}
     }
-    assert _jobs(spark, lambda: _lsh_probe(cat, batch)) == 4
+    assert _jobs(spark, lambda: _lsh_probe(cat, batch)) == 3
     assert _jobs(spark, lambda: append_lsh_index(
         cat, "idx", batch, "doc_id", "text"
     )) == 2
@@ -143,7 +133,7 @@ def test_ivfpq_index_is_three_tables_with_pinned_job_counts(
         "m_subspaces": 4, "k_codes": 8, "corpus_id": "vec_id",
         "pivot_id": "pivot_id", "vec": "embedding", "payload_cols": ["label"],
     }
-    assert _jobs(spark, lambda: _ivfpq_probe(cat, queries)) == 6
+    assert _jobs(spark, lambda: _ivfpq_probe(cat, queries)) == 4
 
 
 def _fault_outcomes(spark, monkeypatch, tmp_path, old_root, rebuild, probe, errors):

@@ -20,6 +20,8 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as papq
 import pytest
 
 from pyspark.sql import functions as F
@@ -119,7 +121,8 @@ def test_chunk_diff_equals_full_parse_across_engine_history(
 def test_chunk_diff_parses_o_dirty_chunks(spark, tmp_path, monkeypatch):
     """The scale claim, pinned by parse counts on a synthetic 20k-file
     snapshot (chunk=256 → ~79 chunks/side): a 10-file delta must parse
-    O(1) chunks, not all of them."""
+    O(1) chunks, not all of them, and reading the new side's unshared
+    files must not list the snapshot."""
     monkeypatch.setattr(catalog_mod, "MANIFEST_CHUNK", 256)
     cat = Catalog(spark, str(tmp_path))
     a = str(tmp_path / "a")
@@ -138,8 +141,10 @@ def test_chunk_diff_parses_o_dirty_chunks(spark, tmp_path, monkeypatch):
         if n in dropped:
             continue
         if n in rewritten:
-            with open(os.path.join(b, n), "wb") as f:
-                f.write(b"yy")
+            # real parquet: the pruned read below opens these files
+            papq.write_table(
+                pa.table({"k": [int(n[5:10])]}), os.path.join(b, n)
+            )
         else:
             os.link(os.path.join(a, n), os.path.join(b, n))
     man_a = cat.snapshot_manifest(a)
@@ -159,6 +164,15 @@ def test_chunk_diff_parses_o_dirty_chunks(spark, tmp_path, monkeypatch):
     assert sorted(os.path.basename(f) for f in new_files) == sorted(
         rewritten
     )
+
+    # the pruned read opens only the unshared files: its scan schema
+    # comes from new_files[0]'s footer, and nothing lists the snapshot
+    def _no_walk(path):
+        raise AssertionError(f"a pruned read listed {path}")
+
+    monkeypatch.setattr(Catalog, "_list_names", staticmethod(_no_walk))
+    df = cat._read_snapshot(b, new_files)
+    assert sorted(r.k for r in df.collect()) == list(range(10_000, 10_005))
 
 
 def test_disk_truth_still_wins_over_shared_chunks(

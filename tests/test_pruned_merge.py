@@ -14,9 +14,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from agol_pandas_spark.catalog import Catalog
+from agol_pandas_spark.catalog import FOOTER_MERGE_MAX_FILES, Catalog
 from agol_pandas_spark.errors import EmptyInputError
 from agol_pandas_spark.operators.merge import merge, merge_pruned, write_table
+from conftest import _jobs
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -363,3 +364,140 @@ def test_grid_probe_exact_for_keys_beyond_double_precision(spark, tmp_path):
     if stats["pruned"]:
         assert stats["files_rewritten"] >= 1
         assert stats["files_carried"] == 1
+
+
+def _keyed_tables(spark, tmp_path):
+    """A catalog holding an integral-key (``c``), a string-key (``s``)
+    and a composite-key (``l``) table — the grid-binned and the range
+    touch test — as ``(name, key, numeric column, integral anchor)``."""
+    cat, cust = _fresh_table(spark, tmp_path)
+    cat.write(
+        cust.withColumn("c_skey", F.format_string("k%09d", "c_custkey"))
+        .repartitionByRange(8, "c_skey").sortWithinPartitions("c_skey"),
+        "s",
+    )
+    cat.write(
+        Catalog(spark, SF_DIR).table("lineitem")
+        .select("l_orderkey", "l_linenumber", "l_quantity")
+        .dropDuplicates(["l_orderkey", "l_linenumber"])
+        .repartitionByRange(8, "l_orderkey")
+        .sortWithinPartitions("l_orderkey", "l_linenumber"),
+        "l",
+    )
+    return cat, [
+        ("c", "c_custkey", "c_acctbal", "c_custkey"),
+        ("s", "c_skey", "c_acctbal", "c_custkey"),
+        ("l", ["l_orderkey", "l_linenumber"], "l_quantity", "l_orderkey"),
+    ]
+
+
+def _mode_delta(table, num, anchor, mode):
+    """Low-key updates for the matching modes; rows with keys beyond
+    every file's span for insert and append."""
+    if mode in ("upsert", "update", "delete"):
+        return table.filter(F.col(anchor) < 20).withColumn(num, F.col(num) + 1.0)
+    fresh = table.filter(F.col(anchor) < 5).withColumn(
+        anchor, F.col(anchor) + 10_000_000
+    )
+    if "c_skey" in table.columns:
+        fresh = fresh.withColumn("c_skey", F.format_string("n%09d", anchor))
+    return fresh
+
+
+def _rows_by_name(df):
+    cols = sorted(df.columns)
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def test_keyed_write_path_builds_no_python_rdd(spark, tmp_path, monkeypatch):
+    """Every frame the keyed-write path builds from driver rows (the span
+    tables of both touch tests, the empty dirty frame of a pruned
+    append or a matchless insert) is an Arrow local relation: with
+    ``SparkContext.parallelize`` — where every pickled Python RDD starts
+    — raising, all five modes of ``merge_pruned`` on integral, string
+    and composite keys, and ``write_table(..., prune=True)``, complete
+    with the rows of the full rewrite."""
+    from pyspark import SparkContext
+
+    cat, tables = _keyed_tables(spark, tmp_path)
+    other, cust = _fresh_table(spark, tmp_path / "other")
+    delta = _narrow_delta(cust).localCheckpoint()
+    want_upsert = sorted(map(tuple, merge(
+        other.table("c"), delta, "upsert", "c_custkey"
+    ).collect()))
+
+    def refuse(*a, **kw):
+        raise AssertionError("the keyed-write path built a Python RDD")
+
+    monkeypatch.setattr(SparkContext, "parallelize", refuse)
+    for name, key, num, anchor in tables:
+        for mode in ("append", "upsert", "update", "insert", "delete"):
+            src = _mode_delta(cat.table(name), num, anchor, mode)
+            src = src.localCheckpoint()
+            k = None if mode == "append" else key
+            want = _rows_by_name(merge(cat.table(name), src, mode, k))
+            stats = merge_pruned(cat, src, name, mode, k)
+            assert stats["pruned"] is True, (name, mode)
+            assert stats["files_carried"] > 0, (name, mode)
+            assert _rows_by_name(cat.table(name)) == want, (name, mode)
+    write_table(other, delta, "c", "upsert", "c_custkey", prune=True)
+    assert sorted(map(tuple, other.table("c").collect())) == want_upsert
+
+
+def test_pruned_update_job_count(spark, tmp_path):
+    """Pinned Spark job count of one pruned ``update`` on a 16-file
+    table: the span table and the touch-test plan start no job of their
+    own and the table scans no schema-inference job (11 jobs before
+    both moved to the driver)."""
+    cat, cust = _fresh_table(spark, tmp_path, n_files=16)
+    delta = (
+        cat.table("c").filter(F.col("c_custkey") < 20)
+        .withColumn("c_acctbal", F.col("c_acctbal") + 1.0)
+        .localCheckpoint()
+    )
+    merge_pruned(cat, delta, "c", "update", "c_custkey")  # warm
+    assert _jobs(
+        spark, lambda: merge_pruned(cat, delta, "c", "update", "c_custkey")
+    ) == 9
+
+
+def test_dirty_read_either_side_of_footer_merge_cap(
+    spark, tmp_path, monkeypatch
+):
+    """A pruned merge with ``FOOTER_MERGE_MAX_FILES`` dirty files merges
+    their footer schemas on the driver; one more dirty file takes Spark's
+    ``mergeSchema`` inference. Both rewrite exactly the touched files and
+    leave the rows a full merge gives."""
+    n_files = FOOTER_MERGE_MAX_FILES + 1
+    cat = Catalog(spark, str(tmp_path))
+    base = (
+        spark.range(n_files * 4).select("id", (F.col("id") * 10).alias("v"))
+        .repartitionByRange(n_files, "id").sortWithinPartitions("id")
+        .localCheckpoint()
+    )
+    merged = []
+    real = Catalog._footer_schema
+
+    def spy(self, files, merge=False):
+        if merge:
+            merged.append(len(files))
+        return real(self, files, merge)
+
+    monkeypatch.setattr(Catalog, "_footer_schema", spy)
+    for n_dirty in (FOOTER_MERGE_MAX_FILES, n_files):
+        cat.write(base, "t", mode="overwrite")
+        spans = sorted(
+            cat.file_key_spans("t", ["id"]), key=lambda s: s["min"]["id"]
+        )
+        assert len(spans) == n_files
+        keys = [s["min"]["id"] for s in spans[:n_dirty]]
+        src = (
+            cat.table("t").filter(F.col("id").isin(keys))
+            .withColumn("v", F.col("v") + 1).localCheckpoint()
+        )
+        want = _rows_by_name(merge(cat.table("t"), src, "update", "id"))
+        merged.clear()
+        stats = merge_pruned(cat, src, "t", "update", "id")
+        assert stats["files_rewritten"] == n_dirty
+        assert merged == ([n_dirty] if n_dirty <= FOOTER_MERGE_MAX_FILES else [])
+        assert _rows_by_name(cat.table("t")) == want
