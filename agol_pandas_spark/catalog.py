@@ -24,6 +24,7 @@ never a single file, so the same code addresses both.
 from __future__ import annotations
 
 import contextlib
+import datetime
 import functools
 import json
 import os
@@ -96,8 +97,8 @@ DATA_CHANGE_PROP = "data_change"
 # Entries per chunk manifest (tests shrink it to exercise multi-chunk
 # layouts at small file counts).
 MANIFEST_CHUNK = 4096
-# File count at which per-file stats and footer reads fan out to executors.
-DIST_LIST_THRESHOLD = 100_000
+# Longest string bound, in UTF-8 bytes, a manifest entry records.
+MAX_STRING_BOUND = 64
 # Dirty-file count up to which a pruned merge merges the dirty files' scan
 # schemas from driver footer reads (``Catalog._footer_schema``); above it
 # Spark's parallel ``mergeSchema`` inference job runs. Measured on a local
@@ -122,16 +123,18 @@ class Catalog:
     """
 
     def __init__(self, spark: SparkSession, root: str):
+        if "://" in str(root):  # commits are os.* renames on a local path
+            scheme = str(root).split("://")[0]
+            raise ValueError(
+                f"catalog root {root!r} uses the {scheme!r} scheme; "
+                "only local paths are supported"
+            )
         self.spark = spark
         self.root = root
         # diagnostics of the LAST shared-file diff this catalog ran:
         # {"mode": "chunk"|"full", "chunks_total", "chunks_parsed"} —
         # how scale tests pin the O(dirty chunks) metadata-read claim
         self.last_diff_stats: dict = {}
-        # last executor-fan-out failure that fell back to the serial
-        # driver loop (ADVICE r10): {"op", "path", "error"} — None on a
-        # healthy catalog; also surfaced as a warnings.warn at the event
-        self.last_fanout_error: dict | None = None
         # engine invariants, enforced even on externally-built sessions
         # (the driver hands us its own SparkSession): UTC timestamps
         # (reference semantics, src/agol_pandas.py:86-119) and ns-parquet
@@ -157,16 +160,20 @@ class Catalog:
         return os.path.exists(self.path(name))
 
     def row_count(self, name: str) -> int:
-        """Exact row count from parquet footer metadata — a driver-side
-        O(files) read, no corpus scan. The cheap source for pipeline
-        scalars like TF-IDF's N at 100 TB (a ``df.count()`` there is a
-        full extra pass)."""
-        p = self.path(name)
-        if not os.path.exists(p):
-            raise TableNotFoundError(f"no table {name!r} under {self.root}")
-        import pyarrow.dataset as ds
+        """Exact row count from the manifest entries' ``rows`` (the
+        footer of a file without one) — no corpus scan. The cheap source
+        for pipeline scalars like TF-IDF's N at 100 TB (a ``df.count()``
+        there is a full extra pass)."""
+        import pyarrow.parquet as pq
 
-        return ds.dataset(p, format="parquet").count_rows()
+        entries = self._disk_entries(self.path(name)) or [
+            (f, None) for f in self.data_files(name)
+        ]
+        return sum(
+            e["rows"] if e and "rows" in e
+            else pq.ParquetFile(f).metadata.num_rows
+            for f, e in entries
+        )
 
     def list_tables(self) -> list[str]:
         if not os.path.isdir(self.root):
@@ -212,23 +219,26 @@ class Catalog:
                     first = e.name
         return (os.path.join(path, first), True) if first else (None, False)
 
-    def _nanos_columns(self, path: str) -> list[str]:
-        """Columns stored as parquet TIMESTAMP(NANOS) in the footer of the
+    def _schema_columns(self, path: str, is_type) -> list[str]:
+        """Columns whose Arrow type passes ``is_type`` in the footer of the
         file that decides ``path``'s scan schema (:meth:`_schema_file`;
         ``path`` may be that file itself). Read on every call, never
         cached: a snapshot's files change under every commit, this
         catalog's or another's."""
-        import pyarrow as pa
         import pyarrow.parquet as papq
 
         f, _ = self._schema_file(path)
-        if f is None:
-            return []
-        return [
-            c.name
-            for c in papq.read_schema(f)
-            if isinstance(c.type, pa.TimestampType) and c.type.unit == "ns"
+        return [] if f is None else [
+            c.name for c in papq.read_schema(f) if is_type(c.type)
         ]
+
+    def _nanos_columns(self, path: str) -> list[str]:
+        """Columns stored as parquet TIMESTAMP(NANOS)."""
+        import pyarrow as pa
+
+        return self._schema_columns(
+            path, lambda t: isinstance(t, pa.TimestampType) and t.unit == "ns"
+        )
 
     def _footer_schema(
         self, files: list[str], merge: bool = False
@@ -462,7 +472,8 @@ class Catalog:
     # ``_manifest.json`` is a MANIFEST LIST
     # {"format": 2, "manifests": [{"name", "count"}, ...]} pointing at
     # CHUNK manifests ``_manifest-<id>.json`` ({"files": {...}},
-    # <= MANIFEST_CHUNK entries each, relpath-sorted). Chunks are
+    # <= MANIFEST_CHUNK entries each, relpath-sorted; the entry format is
+    # in ``_write_manifest``). Chunks are
     # immutable once written; a commit that carries a chunk's whole entry
     # set forward unchanged REUSES the chunk by hard link (O(1)) and
     # writes fresh chunks only for new/changed entries — the Iceberg
@@ -496,44 +507,11 @@ class Catalog:
         return names
 
     def _list_with_sizes(self, path: str) -> list[tuple[str, int]]:
-        """``(relpath, size)`` per data file of a snapshot directory.
-
-        Listing (name discovery) is a driver-side ``scandir`` stream —
-        one getdents pass, no per-file stat (``is_dir`` rides d_type).
-        The per-file ``stat`` fan-outs to EXECUTORS above
-        ``DIST_LIST_THRESHOLD`` files (100k): on
-        object storage each stat is a round-trip, and 10^6 serial
-        driver-side round-trips per commit is exactly the bottleneck the
-        manifest list exists to remove. Below the threshold the driver
-        loop wins (task overhead > syscall cost on a local FS)."""
-        names = self._list_names(path)
-        if len(names) >= DIST_LIST_THRESHOLD and self.spark is not None:
-            sc = self.spark.sparkContext
-            chunks = [
-                names[i : i + 4096] for i in range(0, len(names), 4096)
-            ]
-
-            def _stat_chunk(batch):
-                return [
-                    (rp, os.path.getsize(os.path.join(path, rp)))
-                    for rp in batch
-                ]
-
-            try:
-                out = sc.parallelize(
-                    chunks, max(1, len(chunks))
-                ).flatMap(_stat_chunk).collect()
-                return sorted(out)
-            except Exception as ex:
-                # executors could not stat the driver-local path — a real
-                # cluster whose workers don't mount the catalog root at
-                # the same path (ADVICE r9). Fall back to the driver
-                # loop: slower (serial round-trips), never wrong. A file
-                # genuinely vanishing mid-stat re-raises from the driver
-                # loop below, which is the honest error either way.
-                self._warn_fanout_fallback("_list_with_sizes", path, ex)
+        """``(relpath, size)`` per data file of a snapshot directory, in
+        :meth:`_list_names` order: one driver-side ``stat`` per file."""
         return [
-            (rp, os.path.getsize(os.path.join(path, rp))) for rp in names
+            (rp, os.path.getsize(os.path.join(path, rp)))
+            for rp in self._list_names(path)
         ]
 
     def _manifest_with_chunks(
@@ -556,13 +534,19 @@ class Catalog:
         reuse_chunks: list[tuple[str, dict]] | None = None,
     ) -> None:
         """Write the snapshot manifest (format 2) for a staged directory:
-        one entry per data file, ``{relpath: {"file_id", "size"}}``,
-        split across chunk manifests behind a manifest list. Files named
-        in ``carried`` (relpath → prior manifest entry) KEEP their prior
-        ``file_id`` when the on-disk size matches — that is what lets a
-        carried file stay provably identical across commits without ever
-        re-reading or hashing its bytes; every other file gets a fresh
-        id.
+        one entry per data file, ``{relpath: {"file_id", "size", "rows",
+        "min", "max"}}``, split across chunk manifests behind a manifest
+        list. ``min``/``max`` hold the file's bounds of each top-level
+        signed-integer, string or date column (the Parquet encodings of
+        ``merge._PRUNE_SAFE_TYPES``) whose every row group has min/max
+        statistics, as exact JSON: integers as numbers, dates as ISO
+        text, strings only up to ``MAX_STRING_BOUND`` UTF-8 bytes.
+        Files named in ``carried`` (relpath → prior manifest entry) KEEP
+        their prior entry when the on-disk size matches — that is what
+        lets a carried file stay provably identical across commits
+        without ever re-reading or hashing its bytes; every other file
+        gets a fresh id and its footer's stats (``file_id`` and ``size``
+        only when the footer cannot be read).
 
         ``reuse_from``: a prior snapshot directory whose chunk manifests
         may be carried forward BY REFERENCE — a chunk whose every entry
@@ -576,9 +560,12 @@ class Catalog:
         for rp, size in self._list_with_sizes(staged):
             prev = carried.get(rp)
             if prev is not None and prev.get("size") == size:
-                entries[rp] = {"file_id": prev["file_id"], "size": size}
+                entries[rp] = prev
             else:
-                entries[rp] = {"file_id": uuid.uuid4().hex, "size": size}
+                entries[rp] = {
+                    "file_id": uuid.uuid4().hex, "size": size,
+                    **_footer_stats(os.path.join(staged, rp)),
+                }
         manifests: list[dict] = []
         remaining = dict(entries)
         if reuse_chunks is None and reuse_from is not None \
@@ -647,32 +634,30 @@ class Catalog:
         return out
 
     def snapshot_manifest(self, path: str) -> dict[str, dict] | None:
-        """The snapshot's manifest (relpath → {file_id, size}, chunks
-        merged), or None for single-file tables and snapshots without a
+        """The snapshot's manifest (relpath → entry, chunks merged), or
+        None for single-file tables and snapshots without a
         format-2 manifest list. A torn layout (list without a chunk)
         reads as None too — callers fall back to unpruned reads, which
         costs performance but never rows."""
         chunks = self._manifest_chunks(path)
         return None if chunks is None else _merge_chunks(chunks)
 
-    def _manifest_identities(
+    def _disk_entries(
         self, path: str
-    ) -> list[tuple[tuple | None, str]] | None:
-        """(identity, file) per on-disk data file, identity from the
-        manifest — or None when the snapshot has no manifest. Disk is the
-        source of truth: a file absent from the manifest or whose size
-        disagrees gets identity None (never pruned), so external appends
+    ) -> list[tuple[str, dict | None]] | None:
+        """(file, manifest entry) per on-disk data file — or None when
+        the snapshot has no manifest. Disk is the source of truth: a file
+        absent from the manifest or whose size disagrees gets entry None
+        (never pruned, its footer read for stats), so external appends
         can cost performance but never rows."""
         man = self.snapshot_manifest(path)
         if man is None:
             return None
-        out: list[tuple[tuple | None, str]] = []
+        out: list[tuple[str, dict | None]] = []
         for rp, size in self._list_with_sizes(path):
             e = man.get(rp)
-            if e is not None and e.get("size") == size:
-                out.append(((e["file_id"], e["size"]), os.path.join(path, rp)))
-            else:
-                out.append((None, os.path.join(path, rp)))
+            ok = e is not None and e.get("size") == size
+            out.append((os.path.join(path, rp), e if ok else None))
         return out
 
     def _chunk_manifest_list(self, path: str) -> list[dict] | None:
@@ -861,17 +846,17 @@ class Catalog:
         fast = self._chunk_pruned_diff(old_path, new_path)
         if fast is not None:
             return fast
-        ofs = self._manifest_identities(old_path)
-        nfs = self._manifest_identities(new_path)
-        if ofs is None or nfs is None:
+        old = self._disk_entries(old_path)
+        new = self._disk_entries(new_path)
+        if old is None or new is None:
             return None, None
         self.last_diff_stats = {"mode": "full"}
-        shared = {i for i, _ in ofs if i is not None} & {
-            i for i, _ in nfs if i is not None
-        }
+        ident = {f: (e["file_id"], e["size"]) for f, e in old + new if e}
+        old_ids = {ident[f] for f, e in old if e}
+        shared = old_ids & {ident[f] for f, e in new if e}
         return (
-            [f for i, f in ofs if i not in shared],
-            [f for i, f in nfs if i not in shared],
+            [f for f, _ in old if ident.get(f) not in shared],
+            [f for f, _ in new if ident.get(f) not in shared],
         )
 
     def _swap_in(
@@ -1076,113 +1061,73 @@ class Catalog:
 
     @staticmethod
     def _file_span(f: str, cols: list[str]) -> dict:
-        """One file's key span from its parquet footer (the per-file unit
-        of :meth:`file_key_spans`, shared by the driver loop and the
-        executor fan-out — two copies of the stats-missing logic would
-        drift, and a drifted 'ok' bit silently mis-prunes)."""
+        """One file's key span from its parquet footer: the per-file unit
+        of :meth:`path_key_spans` for files whose manifest entry records
+        no bounds for some requested column."""
         import pyarrow.parquet as pq
 
         meta = pq.ParquetFile(f).metadata
-        idx = {
-            meta.schema.column(i).name: i for i in range(meta.num_columns)
-        }
+        idx = _leaf_index(meta)
         entry: dict = {"path": f, "ok": True, "min": {}, "max": {}}
         for c in cols:
-            if c not in idx or meta.num_row_groups == 0:
+            bounds = _column_bounds(meta, idx[c]) if c in idx else None
+            if bounds is None:
                 entry["ok"] = False
                 break
-            mins, maxs = [], []
-            for rg in range(meta.num_row_groups):
-                st = meta.row_group(rg).column(idx[c]).statistics
-                if st is None or not st.has_min_max:
-                    entry["ok"] = False
-                    break
-                mins.append(st.min)
-                maxs.append(st.max)
-            if not entry["ok"]:
-                break
-            entry["min"][c] = min(mins)
-            entry["max"][c] = max(maxs)
+            entry["min"][c], entry["max"][c] = bounds
         return entry
 
     def file_key_spans(
         self, name: str, cols: list[str]
     ) -> list[dict]:
-        """Per-data-file min/max spans of ``cols`` from parquet footers —
-        no data scan. Each entry is ``{"path": file, "ok": bool,
-        "min": {col: v}, "max": {col: v}}``; ``ok=False`` means at least
-        one row group lacks statistics for one of the columns, so the
-        file cannot be pruned and a key-pruned rewrite must treat it as
-        dirty (conservative). This is the same footer machinery
-        :meth:`optimize_zorder` exists to sharpen: a z-ordered or
-        range-partitioned layout gives each file a compact span, which
-        is what makes key pruning bite at 100 TB.
-
-        Above ``DIST_LIST_THRESHOLD`` files the footer reads
-        fan out to EXECUTORS (same threshold and fallback discipline as
-        ``_list_with_sizes``): on object storage each footer is a
-        round-trip, and a pruned merge paying 10^6 serial driver
-        round-trips per commit would hand back the bottleneck the
-        manifest layer removed. Values round-trip through pickle (plain
-        Python scalars from pyarrow stats), and the executor failure
-        mode (no shared filesystem) falls back to the driver loop —
-        slower, never wrong.
-        """
-        return self._spans_for_files(self.data_files(name), cols)
+        """Per-data-file min/max spans of ``cols`` — no data scan. Each
+        entry is ``{"path": file, "ok": bool, "min": {col: v}, "max":
+        {col: v}}``, in :meth:`data_files` order; ``ok=False`` means the
+        file lacks a column or a row group lacks statistics for it, so
+        the file cannot be pruned and a key-pruned rewrite must treat it
+        as dirty (conservative). A z-ordered or range-partitioned layout
+        (:meth:`optimize_zorder`) gives each file a compact span, which
+        is what makes key pruning bite at 100 TB."""
+        p = self.path(name)
+        if not os.path.exists(p):
+            raise TableNotFoundError(f"no table {name!r} under {self.root}")
+        return self.path_key_spans(p, cols)
 
     def path_key_spans(self, snapshot_path: str, cols: list[str]) -> list[dict]:
         """:meth:`file_key_spans` addressed by snapshot DIRECTORY — the
         form archived versions, tags, and other-catalog snapshots need
         (e.g. the join-view maintainer pruning a feed-aligned fact
-        snapshot's TD-rescan by footer spans, VERDICT r10 item 2). Same
-        entry shape, same executor fan-out + driver-loop fallback."""
+        snapshot's TD-rescan by key spans, VERDICT r10 item 2).
+
+        The spans come from the manifest entries' bounds: one JSON parse,
+        no footer. A file without a recorded bound for some column (no
+        manifest, an older entry, no statistics, another type, a long
+        string) reads its footer instead (:meth:`_file_span`). Text
+        bounds of the scan schema's DATE columns decode to dates."""
+        import pyarrow as pa
+
         if os.path.isfile(snapshot_path):
-            files = [snapshot_path]
-        else:
-            files = [
-                os.path.join(snapshot_path, rp)
-                for rp in self._list_names(snapshot_path)
-            ]
-        return self._spans_for_files(files, cols)
-
-    def _spans_for_files(self, files: list[str], cols: list[str]) -> list[dict]:
-        if len(files) >= DIST_LIST_THRESHOLD and self.spark is not None:
-            sc = self.spark.sparkContext
-            chunks = [files[i : i + 1024] for i in range(0, len(files), 1024)]
-            span = self._file_span
-
-            def _spans_chunk(batch):
-                return [span(f, cols) for f in batch]
-
-            try:
-                out = sc.parallelize(
-                    chunks, max(1, len(chunks))
-                ).flatMap(_spans_chunk).collect()
-                return sorted(out, key=lambda e: e["path"])
-            except Exception as ex:
-                # executors can't see the path: driver loop below
-                self._warn_fanout_fallback("file_key_spans", files[0], ex)
-        return [self._file_span(f, cols) for f in files]
-
-    def _warn_fanout_fallback(self, op: str, path: str, ex: Exception) -> None:
-        """Make the executor-fan-out → serial-driver-loop fallback LOUD
-        (ADVICE r10): the distributed path only engages at >=100k files,
-        so a silent fallback at exactly that scale means 10^5-10^7
-        serial stat/footer round-trips that look like a hang on object
-        storage, with the triggering error (workers can't see the
-        path, executor import failure) discarded. One warning per event
-        plus ``last_fanout_error`` so operators can distinguish
-        "workers cannot see the catalog root" from a healthy run."""
-        import warnings
-
-        self.last_fanout_error = {"op": op, "path": path, "error": repr(ex)}
-        warnings.warn(
-            f"{op}: executor fan-out failed ({ex!r}); falling back to a "
-            f"SERIAL driver loop over {path!r} — at >=100k files this is "
-            "orders of magnitude slower (often a cluster whose workers "
-            "do not mount the catalog root at the driver's path)",
-            stacklevel=3,
-        )
+            return [self._file_span(snapshot_path, cols)]
+        entries = self._disk_entries(snapshot_path) or [
+            (os.path.join(snapshot_path, rp), None)
+            for rp in self._list_names(snapshot_path)
+        ]
+        out: list[dict] = []
+        dates = None
+        for f, e in entries:
+            lo, hi = (e or {}).get("min", {}), (e or {}).get("max", {})
+            if not all(c in lo for c in cols):
+                out.append(self._file_span(f, cols))
+                continue
+            if dates is None and any(isinstance(lo[c], str) for c in cols):
+                dates = self._schema_columns(snapshot_path, pa.types.is_date32)
+            span = {"path": f, "ok": True, "min": {}, "max": {}}
+            for c in cols:
+                date = c in (dates or ())
+                for side, v in (("min", lo[c]), ("max", hi[c])):
+                    span[side][c] = datetime.date.fromisoformat(v) if date else v
+            out.append(span)
+        return out
 
     def storage_stats(self, name: str) -> "DataFrame":
         """Distributed per-column storage profile from parquet footers:
@@ -1192,12 +1137,11 @@ class Catalog:
         files fragment) WITHOUT scanning any data.
 
         The file list fans out over executors and each partition reads
-        only footers via pyarrow (``mapInPandas`` — at 100 TB the
-        catalog holds ~10⁵ files and a driver-side loop like
-        :meth:`file_key_spans` would serialize ~minutes of metadata
-        I/O; spans stay driver-side only because the pruned-merge path
-        needs them in a plain dict). Aggregate per column with
-        ``groupBy("column")`` downstream.
+        only footers via pyarrow (``mapInPandas`` — per-column byte
+        totals are not in the manifest, and at 100 TB the catalog holds
+        ~10⁵ files whose footers a driver-side loop would read one by
+        one). Aggregate per column with ``groupBy("column")``
+        downstream.
         """
         import pandas as _pd
 
@@ -1345,14 +1289,15 @@ class Catalog:
         return sorted(out)
 
     def table_at(self, name: str, version: int) -> DataFrame:
-        """Time travel: lazy scan of an archived snapshot of ``name``."""
+        """Time travel: lazy scan of an archived snapshot of ``name``,
+        typed as :meth:`table` types it (:meth:`_read_snapshot`)."""
         p = self._version_path(name, version)
         if not os.path.exists(p):
             raise TableNotFoundError(
                 f"table {name!r} has no archived version {version} "
                 f"(available: {self.versions(name)})"
             )
-        return self.spark.read.parquet(p)
+        return self._read_snapshot(p)
 
     def restore(self, name: str, version: int) -> str:
         """Rollback: make archived ``version`` the current table through
@@ -2221,13 +2166,13 @@ class Catalog:
         return dst
 
     def table_at_tag(self, name: str, tag: str) -> DataFrame:
-        """Read the immutable snapshot pinned by ``tag``."""
+        """Read the immutable snapshot pinned by ``tag`` (:meth:`table_at`)."""
         p = self._tag_path(name, tag)
         if not os.path.exists(p):
             raise TableNotFoundError(
                 f"no tag {tag!r} for table {name!r} under {self.root}"
             )
-        return self.spark.read.parquet(p)
+        return self._read_snapshot(p)
 
     def tags(self, name: str) -> list[str]:
         """Tags pinned for ``name`` (sorted)."""
@@ -2479,3 +2424,56 @@ def _merge_chunks(chunks: list[tuple[str, dict[str, dict]]]) -> dict[str, dict]:
     for _, part in chunks:
         merged.update(part)
     return merged
+
+
+def _leaf_index(meta) -> dict[str, int]:
+    """Dotted path → leaf column index of a parquet footer; a top-level
+    column's path is its name."""
+    return {meta.schema.column(i).path: i for i in range(meta.num_columns)}
+
+
+def _column_bounds(meta, i: int) -> tuple | None:
+    """(min, max) of leaf column ``i`` over every row group of a parquet
+    footer, or None when there is no row group or one lacks min/max
+    statistics for it."""
+    if meta.num_row_groups == 0:
+        return None
+    mins, maxs = [], []
+    for rg in range(meta.num_row_groups):
+        st = meta.row_group(rg).column(i).statistics
+        if st is None or not st.has_min_max:
+            return None
+        mins.append(st.min)
+        maxs.append(st.max)
+    return min(mins), max(maxs)
+
+
+def _footer_stats(f: str) -> dict:
+    """``rows``, ``min`` and ``max`` of data file ``f``'s manifest entry
+    (format in ``Catalog._write_manifest``); ``{}`` when its footer
+    cannot be read, which leaves every question about ``f`` to it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        meta = pq.ParquetFile(f).metadata
+        idx = _leaf_index(meta)
+        lo, hi = {}, {}
+        for field in meta.schema.to_arrow_schema():
+            t = field.type
+            text = pa.types.is_string(t) or pa.types.is_large_string(t)
+            if field.name not in idx or not (
+                text or pa.types.is_date32(t) or pa.types.is_signed_integer(t)
+            ):
+                continue
+            bounds = _column_bounds(meta, idx[field.name])
+            if bounds is None or text and any(
+                len(v.encode()) > MAX_STRING_BOUND for v in bounds
+            ):
+                continue
+            if pa.types.is_date32(t):
+                bounds = [v.isoformat() for v in bounds]
+            lo[field.name], hi[field.name] = bounds
+    except (OSError, ValueError, OverflowError):
+        return {}
+    return {"rows": meta.num_rows, "min": lo, "max": hi}

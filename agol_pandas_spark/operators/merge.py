@@ -268,7 +268,8 @@ def merge(
         ks = _keys(key)
         # uniqueness already checked in the fused top guard (or by the
         # caller when _source_checked)
-        return target.join(source.select(*ks), on=ks, how="left_anti")
+        kept = target.join(source.select(*ks), on=ks, how="left_anti")
+        return kept.select(*target.columns)  # the join put the keys first
 
     # columns the source actually carries: only these may overwrite target
     # values on a match (missing source columns keep the target value —
@@ -558,6 +559,20 @@ def _touched_paths(
     }
 
 
+def _dirty_files(
+    catalog, path: str, source: DataFrame, ks: list[str], fields: dict
+) -> tuple[list[str], list[str]]:
+    """``(dirty, clean)`` data files of the snapshot at ``path``: dirty
+    when some source key can fall inside the file's key span, or when
+    the file has no span (conservative)."""
+    spans = catalog.path_key_spans(path, ks)
+    stat_spans = [s for s in spans if s["ok"]]
+    dirty = {s["path"] for s in spans if not s["ok"]}
+    if stat_spans:
+        dirty |= _touched_paths(source, stat_spans, ks, fields)
+    return sorted(dirty), [s["path"] for s in spans if s["path"] not in dirty]
+
+
 def merge_pruned(
     catalog,
     source: DataFrame,
@@ -574,14 +589,15 @@ def merge_pruned(
     This path prunes at the file level using the same parquet-footer
     min/max machinery ``Catalog.optimize_zorder`` sharpens:
 
-    1. read each target file's key span from its footer (driver-side
-       O(files) metadata, no data scan);
+    1. read each target file's key span from the snapshot manifest
+       (``Catalog.path_key_spans``: one driver-side JSON parse, the
+       footer only for a file without recorded bounds; no data scan);
     2. mark a file DIRTY iff some single source row's key components all
        fall inside the file's per-column spans — computed distributedly:
        the span table (O(files) small rows) is broadcast and the source's
        key columns stream through one join; only the distinct dirty PATH
        list (bounded by the file count) ever reaches the driver, never
-       the keys. Files lacking footer stats are dirty by fiat;
+       the keys. Files lacking stats are dirty by fiat;
     3. run the ordinary :func:`merge` against the dirty slice only —
        sound because a file whose span excludes every source key cannot
        contain a matching row, so its rows pass through any keyed mode
@@ -598,7 +614,9 @@ def merge_pruned(
     Falls back to the full rewrite (returning ``pruned=False``) whenever
     pruning cannot be proven sound: non-keyed modes, key types outside
     ``_PRUNE_SAFE_TYPES``, schema-widening sources (carried files could
-    not see the new columns without mergeSchema reads), or tables with
+    not see the new columns without mergeSchema reads), a dirty rewrite
+    whose columns or types differ from the scan schema's (a widening
+    source type), or tables with
     raw TIMESTAMP(NANOS) columns (the full path normalizes those to µs;
     carrying files by reference would mix ns and µs physical types),
     and nested (hive-partitioned) or single-file layouts.
@@ -705,7 +723,7 @@ def _merge_pruned_body(
             "files_carried": 0,
         }
 
-    # OCC token captured BEFORE the footer spans / file listing are read:
+    # OCC token captured BEFORE the key spans / file listing are read:
     # the clean-file carryover is only sound against the exact snapshot it
     # was computed from — if another writer commits in between, linking
     # those paths forward would silently undo its commit. The commit below
@@ -737,16 +755,7 @@ def _merge_pruned_body(
         # construction and the new rows land as fresh files
         dirty, clean = [], files
     else:
-        spans = catalog._spans_for_files(files, ks)
-        forced = [s["path"] for s in spans if not s["ok"]]
-        stat_spans = [s for s in spans if s["ok"]]
-        touched = (
-            _touched_paths(source, stat_spans, ks, tgt_fields)
-            if stat_spans
-            else set()
-        )
-        dirty = sorted(set(forced) | touched)
-        clean = [s["path"] for s in spans if s["path"] not in set(dirty)]
+        dirty, clean = _dirty_files(catalog, target, source, ks, tgt_fields)
 
     _join_guard()  # before the no-op return and before any commit
     if m in (WriteMode.UPDATE, WriteMode.DELETE) and not dirty:
@@ -762,8 +771,6 @@ def _merge_pruned_body(
     if len(dirty) > FOOTER_MERGE_MAX_FILES:
         dirty_df = spark.read.option("mergeSchema", "true").parquet(*dirty)
     elif dirty:
-        # each footer is opened a second time here (the spans above read
-        # it through pyarrow); the cap bounds that to about 0.1 s
         dirty_df = spark.read.schema(
             catalog._footer_schema(dirty, merge=True)
         ).parquet(*dirty)
@@ -772,6 +779,10 @@ def _merge_pruned_body(
     result_dirty = merge(
         dirty_df, source, m, ks or None, _source_checked=True
     )
+    if result_dirty.schema.simpleString() != target_df.schema.simpleString():
+        # names, order or types moved: beside carried files of the old
+        # layout, the file that decides the scan schema would pick them
+        return _full()
     path = catalog.write_with_carryover(
         result_dirty, name, clean, keep_versions=keep_versions,
         expected_commit=read_commit, snapshot_props=snapshot_props,

@@ -218,7 +218,7 @@ def _td_pruned_scan(
     jkeys: list[str],
     catalog,
 ) -> DataFrame | None:
-    """A scan of ONLY the fact-snapshot files whose footer spans on
+    """A scan of ONLY the fact-snapshot files whose key spans on
     ``jkeys`` can contain a touched dim key — or ``None`` when pruning
     cannot be proven sound (caller falls back to the full ``fact``
     scan, correct but O(fact) I/O). This is ``merge_pruned``'s
@@ -229,10 +229,7 @@ def _td_pruned_scan(
     types only, footer-complete files only (stat-less files stay in
     the scan, conservative), no raw-ns timestamp columns (the catalog
     read normalizes those — a direct file read would not)."""
-    from agol_pandas_spark.operators.merge import (
-        _PRUNE_SAFE_TYPES,
-        _touched_paths,
-    )
+    from agol_pandas_spark.operators.merge import _PRUNE_SAFE_TYPES, _dirty_files
 
     if fact_path is None or catalog is None:
         return None
@@ -243,13 +240,7 @@ def _td_pruned_scan(
         return None
     if catalog._nanos_columns(fact_path):
         return None
-    spans = catalog.path_key_spans(fact_path, jkeys)
-    forced = [s["path"] for s in spans if not s["ok"]]
-    stat_spans = [s for s in spans if s["ok"]]
-    touched = (
-        _touched_paths(td, stat_spans, jkeys, fields) if stat_spans else set()
-    )
-    dirty = sorted(set(forced) | touched)
+    dirty, _ = _dirty_files(catalog, fact_path, td, jkeys, fields)
     spark = fact.sparkSession
     if not dirty:
         return local_frame(spark, [], fact.schema)
@@ -577,12 +568,11 @@ def commit_join_view_delta(
 
     spark = added.sparkSession
     all_files = view_catalog.data_files(view_name)
-    # ONE footer pass over the union of every keyset's columns (r11: the
-    # per-keyset loop re-read every view file's footer once per feed —
-    # N+1 metadata passes over the same files; on object storage each
-    # footer is a round-trip). A file missing stats for ANY key column
-    # was forced dirty by its keyset's pass before and still is now, so
-    # the dirty set is identical.
+    # ONE span lookup over the union of every keyset's columns (r11: the
+    # per-keyset loop read every view file's spans once per feed — N+1
+    # metadata passes over the same files). A file missing stats for ANY
+    # key column was forced dirty by its keyset's pass before and still
+    # is now, so the dirty set is identical.
     union_cols = sorted({k for ks, _ in keysets for k in ks})
     spans = view_catalog.path_key_spans(view_path, union_cols)
     dirty: set[str] = {s["path"] for s in spans if not s["ok"]}

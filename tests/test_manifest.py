@@ -206,11 +206,10 @@ def test_external_file_never_pruned(spark, tmp_path):
     import shutil
 
     shutil.copy2(rogue_src, rogue)
-    idents = dict(
-        (os.path.basename(f), i)
-        for i, f in cat._manifest_identities(cat.path("t"))
-    )
-    assert idents["zz_rogue.parquet"] is None  # unidentified: always read
+    entries = {
+        os.path.basename(f): e for f, e in cat._disk_entries(cat.path("t"))
+    }
+    assert entries["zz_rogue.parquet"] is None  # unidentified: always read
 
 
 def test_cleanup_staging_reclaims_only_old_orphans(spark, tmp_path):

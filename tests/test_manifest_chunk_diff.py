@@ -2,7 +2,7 @@
 
 Round 9 made manifest WRITES O(delta) (manifest list + immutable chunk
 reuse) but every READ still merged all chunk JSONs on the driver —
-``snapshot_manifest`` + ``_manifest_identities`` were the last O(table)
+``snapshot_manifest`` + ``_disk_entries`` were the last O(table)
 driver step, paid per CDF diff / pruned merge. The chunk-aware diff
 (``Catalog._chunk_pruned_diff``) parses ONLY the chunks NOT shared (by
 immutable uuid name, i.e. by hard-link reuse) between the two snapshots:
@@ -40,9 +40,10 @@ def _mk(spark, lo, hi, bump=0):
 def _full_path_diff(cat, old_path, new_path):
     """The pre-r10 full-parse diff, reconstructed from the identity
     reader that still backs it — the equivalence oracle."""
-    ofs = cat._manifest_identities(old_path)
-    nfs = cat._manifest_identities(new_path)
-    assert ofs is not None and nfs is not None
+    old, new = cat._disk_entries(old_path), cat._disk_entries(new_path)
+    assert old is not None and new is not None
+    ofs = [(e and (e["file_id"], e["size"]), f) for f, e in old]
+    nfs = [(e and (e["file_id"], e["size"]), f) for f, e in new]
     shared = {i for i, _ in ofs if i is not None} & {
         i for i, _ in nfs if i is not None
     }

@@ -135,101 +135,17 @@ def test_delta_commit_writes_o_delta_manifest_bytes(big_snapshot, tmp_path):
     assert delta_secs < max(full_secs, 1.0) * 2
 
 
-def test_distributed_stat_path_matches_driver_path(
-    spark, tmp_path, monkeypatch
-):
-    """Above DIST_LIST_THRESHOLD the per-file stat fans out
-    over executors; the listing must be bit-identical either way."""
+def test_list_with_sizes_walks_nested_data_files(spark, tmp_path):
+    """``(relpath, size)`` per data file, sorted, nested directories
+    walked, "_"- and "."-prefixed files and directories skipped."""
     cat = Catalog(spark, str(tmp_path))
     d = str(tmp_path / "snap")
-    _mk_files(d, [f"f-{i:04d}.parquet" for i in range(300)])
-    os.makedirs(os.path.join(d, "sub"))
+    _mk_files(d, ["f-1.parquet", "f-0.parquet", "_meta.json", ".crc"])
     _mk_files(os.path.join(d, "sub"), ["g-0.parquet"])
-    driver = cat._list_with_sizes(d)
-    monkeypatch.setattr(catalog_mod, "DIST_LIST_THRESHOLD", 100)
-    dist = cat._list_with_sizes(d)
-    assert dist == driver
-    assert ("sub/g-0.parquet", 1) in dict(driver).items()
-
-
-def test_distributed_key_spans_match_driver_path(
-    spark, tmp_path, monkeypatch
-):
-    """file_key_spans above the threshold reads footers on executors
-    (a pruned merge at 10^6 files must not pay serial driver
-    round-trips); spans must be identical either way, including the
-    conservative ok=False rows, and the executor-failure fallback must
-    land on the driver loop."""
-    from pyspark.sql import functions as F
-
-    cat = Catalog(spark, str(tmp_path))
-    df = spark.range(600).select(
-        F.col("id").alias("k"), (F.col("id") % 7).alias("v"),
-        F.format_string("s%04d", F.col("id")).alias("s"),
-    )
-    cat.write(
-        df.repartitionByRange(6, "k").sortWithinPartitions("k"), "t"
-    )
-    driver = cat.file_key_spans("t", ["k", "s"])
-    assert len(driver) == 6 and all(e["ok"] for e in driver)
-    default_threshold = catalog_mod.DIST_LIST_THRESHOLD
-    monkeypatch.setattr(catalog_mod, "DIST_LIST_THRESHOLD", 2)
-    dist = cat.file_key_spans("t", ["k", "s"])
-    assert dist == driver
-    # missing column: conservative ok=False on both paths
-    assert all(
-        not e["ok"] for e in cat.file_key_spans("t", ["nope"])
-    )
-    monkeypatch.setattr(
-        catalog_mod, "DIST_LIST_THRESHOLD", default_threshold
-    )
-    assert all(
-        not e["ok"] for e in cat.file_key_spans("t", ["nope"])
-    )
-
-    class _Boom:
-        def parallelize(self, *a, **k):
-            raise RuntimeError("no shared filesystem on executors")
-
-    class _SparkShim:
-        sparkContext = _Boom()
-
-    monkeypatch.setattr(catalog_mod, "DIST_LIST_THRESHOLD", 2)
-    shim = Catalog(spark, str(tmp_path))
-    shim.spark = _SparkShim()
-    # ADVICE r10: the silent fallback is now LOUD — a serial loop at
-    # >=100k files looks like a hang, and the triggering error matters
-    with pytest.warns(UserWarning, match="executor fan-out failed"):
-        assert shim.file_key_spans("t", ["k", "s"]) == driver
-    assert shim.last_fanout_error["op"] == "file_key_spans"
-    assert "no shared filesystem" in shim.last_fanout_error["error"]
-
-
-def test_distributed_stat_falls_back_to_driver_on_executor_failure(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r9: on a real cluster without the catalog root mounted at
-    the same path, the executor-side stat job fails inside Spark — the
-    listing must fall back to the driver loop (slower, never wrong)
-    instead of surfacing FileNotFoundError from a metadata read."""
-    cat = Catalog(spark, str(tmp_path))
-    d = str(tmp_path / "snap")
-    _mk_files(d, [f"f-{i:04d}.parquet" for i in range(150)])
-    driver = cat._list_with_sizes(d)
-    monkeypatch.setattr(catalog_mod, "DIST_LIST_THRESHOLD", 100)
-
-    class _Boom:
-        def parallelize(self, *a, **k):
-            raise RuntimeError("no shared filesystem on executors")
-
-    class _SparkShim:
-        sparkContext = _Boom()
-
-    shim = Catalog(spark, str(tmp_path))
-    shim.spark = _SparkShim()  # plain attribute: swap in the failing SC
-    with pytest.warns(UserWarning, match="executor fan-out failed"):
-        assert shim._list_with_sizes(d) == driver
-    assert shim.last_fanout_error["op"] == "_list_with_sizes"
+    _mk_files(os.path.join(d, "_hidden"), ["h.parquet"])
+    assert cat._list_with_sizes(d) == [
+        ("f-0.parquet", 1), ("f-1.parquet", 1), ("sub/g-0.parquet", 1),
+    ]
 
 
 def test_legacy_monolithic_manifest_reads_as_unmanifested(
